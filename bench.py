@@ -8,21 +8,12 @@ driver's 2000-char tail capture and parsed as null):
 
 1. the full per-query timing map is printed on its OWN line first
    (``{"metric": "headline_query_sec", "queries": {...}}``) for humans
-   and round-over-round diffing;
+   and round-over-round diffing, and written, with ``cores`` and
+   ``sf``, to ``BENCH_QUERIES.json`` next to this file;
 2. the LAST line is a SHORT summary the driver's tail capture always
    fits: ``{"metric": "headline_queries_total_sec", "value": ...,
    "unit": "sec", "n_queries": ..., "core_total_sec": ...,
    "new_total_sec": ..., "sf": ...}`` — no embedded map.
-
-Timing methodology: one warm-up of the flagship primes the JVM and the
-parquet footer cache; each query is then timed end-to-end (plan →
-execute → noop sink that materializes every row without shipping them
-to the driver).  After EVERY query the harness releases operator-owned
-persisted relations (``cacheutil.release_caches()``) and clears the
-session cache — the caller-owned cache contract
-(``operators/clustering.py``) — so per-query numbers are independent
-of session position (the r4 judge measured a uniform 1.30x
-accumulation drift without this).
 
 Headline-set hygiene: ``CORE`` is the frozen round-3 comparison set —
 one composite per operator family — and is never edited, so
@@ -36,13 +27,11 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
-from axolotls_spark import cacheutil
-from axolotls_spark.queries import REGISTRY
-from axolotls_spark.session import get_spark
+from tools import measure  # noqa: E402
 
 # FROZEN core (the round-3 headline set): one per operator family,
 # weighted toward the shuffle-heavy plans that dominate at scale.
@@ -303,40 +292,10 @@ HEADLINE = CORE + ROUND4 + ROUND5 + ROUND6 + ROUND7 + ROUND8
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    spark = get_spark("axolotls-spark-bench", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-
-    names = [n for n in HEADLINE if n in REGISTRY]
-    # Warm-up: JVM + parquet footers.
-    REGISTRY[names[0]].fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    # min-of-N: this VM throttles under sustained load (identical
-    # runs vary 0.5s → 7s); the minimum is the least-noisy estimate
-    # of the plan's true cost.
+    spark = measure.session("bench")
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3"))
-    timings: dict[str, float] = {name: float("inf") for name in names}
-    # Cache discipline (round-5): a query's OWN repeats run back to
-    # back with caches retained — repeat 2+ measure the steady-state
-    # warm cost, matching how min-of-N has been reported since r3 —
-    # but ALL caches are released between QUERIES, so no query's
-    # number depends on what ran before it (the r4 judge measured a
-    # uniform 1.30x cross-query accumulation drift when 108 queries
-    # shared one never-cleared session).
-    for name in names:
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            df = REGISTRY[name].fn(spark, sf_dir)
-            # noop sink materializes every row distributed-side; no
-            # driver collect, mirroring cluster behavior.
-            df.write.format("noop").mode("overwrite").save()
-            timings[name] = min(timings[name], time.perf_counter() - t0)
-        # Caller-owned cache contract: free operator persists +
-        # session cache so query N+1 never pays for query N.
-        cacheutil.release_caches()
-        spark.catalog.clearCache()
-    timings = {n: round(t, 4) for n, t in timings.items()}
+    timings = measure.time_queries(spark, HEADLINE, sf_dir, repeats)
     total = sum(timings.values())
     core_total = sum(t for n, t in timings.items() if n in set(CORE))
     new_total = sum(
@@ -353,13 +312,16 @@ def main() -> None:
                 "metric": "headline_queries_total_sec",
                 "value": round(total, 4),
                 "unit": "sec",
-                "n_queries": len(names),
+                "n_queries": len(timings),
                 "core_total_sec": round(core_total, 4),
                 "new_total_sec": round(new_total, 4),
                 "sf": float(sf),
             }
         )
     )
+    with open(os.path.join(ROOT, "BENCH_QUERIES.json"), "w") as f:
+        json.dump({"metric": "headline_query_sec", "cores": measure.cores(),
+                   "sf": float(sf), "queries": timings}, f, indent=1)
 
 
 if __name__ == "__main__":

@@ -37,13 +37,15 @@ _N_WORKERS = 8
 @pytest.fixture(scope="session")
 def parity_results(spark, duck, sf_dir):
     def one(name: str):
-        cur = duck.cursor()
+        cur = None
         try:
+            cur = duck.cursor()
             return name, compare(name, spark, cur, sf_dir)
         except Exception as e:  # noqa: BLE001 — surfaced per-query below
             return name, (False, f"EXCEPTION: {type(e).__name__}: {e}")
         finally:
-            cur.close()
+            if cur is not None:
+                cur.close()
 
     try:
         with ThreadPoolExecutor(max_workers=_N_WORKERS) as pool:

@@ -22,8 +22,7 @@ current plan digests next to the PLANS.md pins, because a perf
 regression on identical hardware means the PLAN changed (or the box
 was not idle — rerun after `pgrep java` shows 0).
 
-Timing discipline mirrors bench.py exactly: noop sink, min-of-N warm
-repeats per query, all caches released between queries.
+Timing runs through tools/measure.py, the loop bench.py uses.
 """
 
 from __future__ import annotations
@@ -31,19 +30,13 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from axolotls_spark import cacheutil  # noqa: E402
-from axolotls_spark.queries import REGISTRY  # noqa: E402
-from axolotls_spark.session import get_spark  # noqa: E402
-from bench import CORE  # noqa: E402 — the frozen round-3 headline set
+from bench import CORE, ROOT  # noqa: E402 — CORE: the frozen round-3 set
+from tools import measure  # noqa: E402
 
-BUDGET_FILE = os.path.join(
-    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "BENCH_BUDGET.json",
-)
+BUDGET_FILE = os.path.join(ROOT, "BENCH_BUDGET.json")
 #: A single query may be up to 2x its idle budget (sub-second queries
 #: sit inside the measured +/-0.15-0.2 ambient band; 2x only trips on
 #: real plan changes).  The TOTAL is the tight bound: 1.25x.
@@ -59,37 +52,15 @@ AMBIENT_CEILING = 1.5
 
 def _env() -> dict[str, object]:
     return {
-        "sf_dir": os.environ.get("SPARK_GRAFT_SF_DIR",
-                                 "/root/testdata/sf0.1"),
-        "cpus": os.environ.get("SPARK_GRAFT_CPUS", "32"),
+        "sf_dir": measure.DEFAULT_SF_DIR,
+        "cpus": str(measure.cores()),
         "repeats": int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "3")),
     }
 
 
-def measure() -> dict[str, float]:
-    env = _env()
-    sf_dir = env["sf_dir"]
-    cpus = env["cpus"]
-    repeats = env["repeats"]
-    spark = get_spark("axolotls-spark-perfgate", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
-    names = [n for n in CORE if n in REGISTRY]
-    REGISTRY[names[0]].fn(spark, sf_dir).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    timings: dict[str, float] = {}
-    for name in names:
-        best = float("inf")
-        for _ in range(repeats):
-            t0 = time.perf_counter()
-            REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            best = min(best, time.perf_counter() - t0)
-        cacheutil.release_caches()
-        spark.catalog.clearCache()
-        timings[name] = round(best, 4)
-    return timings
+def core_timings(env: dict) -> dict[str, float]:
+    spark = measure.session("perfgate")
+    return measure.time_queries(spark, CORE, env["sf_dir"], env["repeats"])
 
 
 def evaluate(
@@ -145,14 +116,15 @@ def evaluate(
 
 
 def main() -> int:
+    env = _env()
     if "--record" in sys.argv:
-        t = measure()
+        t = core_timings(env)
         with open(BUDGET_FILE, "w") as f:
             json.dump(
                 {
                     "note": "idle-box frozen-core budgets; re-record "
                             "deliberately with tools/perfgate.py --record",
-                    "env": _env(),
+                    "env": env,
                     "core_total_sec": round(sum(t.values()), 4),
                     "queries": t,
                 },
@@ -170,13 +142,13 @@ def main() -> int:
     # recorded in (ADVICE r7): a gate run at a different SF or core
     # count would silently compare incomparable timings.
     rec_env = budget.get("env")
-    if rec_env is not None and rec_env != _env():
+    if rec_env is not None and rec_env != env:
         print(f"ENV MISMATCH: budget recorded under {rec_env}, "
-              f"gate running under {_env()} — re-record or align "
+              f"gate running under {env} — re-record or align "
               "SPARK_GRAFT_SF_DIR/SPARK_GRAFT_CPUS/"
               "SPARK_GRAFT_BENCH_REPEATS.")
         return 1
-    t = measure()
+    t = core_timings(env)
     ok, r = evaluate(budget, t, allow_hot_box="--allow-hot-box" in sys.argv)
     ambient = r["ambient"]
     print(json.dumps({"core_total_sec": round(r["total"], 4),

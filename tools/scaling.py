@@ -11,8 +11,7 @@ path) — they are measured over sf0.01 -> sf0.1 only and marked
 ``quadratic-by-design`` instead of burning minutes at sf1 confirming
 arithmetic.
 
-Timing discipline mirrors bench.py: noop sink, min-of-N back-to-back
-warm repeats per query, ALL caches released between queries.
+Timing runs through tools/measure.py, the loop bench.py uses.
 
 Usage: python tools/scaling.py [out_json]   (default SCALING.json)
 """
@@ -22,13 +21,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from axolotls_spark import cacheutil  # noqa: E402
-from axolotls_spark.queries import REGISTRY  # noqa: E402
-from axolotls_spark.session import get_spark  # noqa: E402
+from tools import measure  # noqa: E402
 
 SFS = [
     ("0.01", "/root/testdata/sf0.01"),
@@ -82,47 +78,31 @@ def main() -> None:
     out = sys.argv[1] if len(sys.argv) > 1 else "SCALING.json"
     only_sf = os.environ.get("AXS_SCALE_ONLY_SF")  # e.g. "10": run one
     # leg and merge into an existing out file (incremental decades)
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     repeats = int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "2"))
-    spark = get_spark("axolotls-spark-scaling", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("scaling")
 
     results: dict[str, dict[str, float]] = {}
     if only_sf and os.path.exists(out):
         with open(out) as f:
             results = json.load(f).get("results", {})
+    skip_present = os.environ.get("AXS_SCALE_SKIP_PRESENT")
     for sf, sf_dir in SFS:
         if only_sf and sf != only_sf:
             continue
         if not os.path.exists(f"{sf_dir}/lineitem.parquet"):
             print(f"skip sf{sf}: {sf_dir} missing", file=sys.stderr)
             continue
-        # Warm-up per SF: JVM + parquet footers.
-        REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format(
-            "noop"
-        ).mode("overwrite").save()
-        skip_present = os.environ.get("AXS_SCALE_SKIP_PRESENT")
-        for name, max_sf in SCALE_SET:
-            if name not in REGISTRY:
-                continue
-            if float(sf) > float(max_sf):
-                continue
-            if skip_present and sf in results.get(name, {}):
-                continue
-            best = float("inf")
-            for _ in range(repeats):
-                t0 = time.perf_counter()
-                REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                best = min(best, time.perf_counter() - t0)
-            cacheutil.release_caches()
-            spark.catalog.clearCache()
-            results.setdefault(name, {})[sf] = round(best, 3)
-            print(f"sf{sf} {name}: {best:.3f}s", file=sys.stderr)
+        names = [
+            name for name, max_sf in SCALE_SET
+            if float(sf) <= float(max_sf)
+            and not (skip_present and sf in results.get(name, {}))
+        ]
+        timed = measure.time_queries(spark, names, sf_dir, repeats)
+        for name, t in timed.items():
+            results.setdefault(name, {})[sf] = round(t, 3)
 
     with open(out, "w") as f:
-        json.dump({"cpus": int(cpus), "repeats": repeats,
+        json.dump({"cpus": measure.cores(), "repeats": repeats,
                    "results": results}, f, indent=1, sort_keys=True)
 
     # Markdown table on stdout for SCALE.md.

@@ -31,21 +31,17 @@ Env:    AXS_STRESS_DRIVER_MEM (default 2g)
 
 from __future__ import annotations
 
-import json
 import os
 import sys
 import time
-import urllib.request
 
-sys.path.insert(0, "/root/repo")
-sys.path.insert(0, "/root/repo/tools")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-import duckdb
+import duckdb  # noqa: E402
 
-from axolotls_spark import cacheutil
-from axolotls_spark.io.sources import TABLES, table_path
-from axolotls_spark.session import get_spark
-from parity import compare
+from axolotls_spark.io.sources import TABLES, table_path  # noqa: E402
+from tools import measure  # noqa: E402
+from tools.parity import compare  # noqa: E402
 
 # The verdict's six named heavies + the other top-tail headliners —
 # every query here drives at least one wide exchange over a
@@ -94,32 +90,6 @@ HEAVY = [
 ]
 
 
-def _spill_totals(spark) -> tuple[int, int]:
-    """Sum (memoryBytesSpilled, diskBytesSpilled) over all completed
-    stages via the UI REST API — the only stable Python-side surface
-    for executor task metrics in local mode."""
-    ui = spark.sparkContext.uiWebUrl
-    if not ui:
-        return (0, 0)
-    try:
-        apps = json.load(
-            urllib.request.urlopen(f"{ui}/api/v1/applications", timeout=10)
-        )
-        app_id = apps[0]["id"]
-        stages = json.load(
-            urllib.request.urlopen(
-                f"{ui}/api/v1/applications/{app_id}/stages?status=complete",
-                timeout=30,
-            )
-        )
-    except Exception as e:  # pragma: no cover - UI off / port race
-        print(f"  [warn] spill metrics unavailable: {e}", file=sys.stderr)
-        return (0, 0)
-    mem = sum(s.get("memoryBytesSpilled", 0) for s in stages)
-    disk = sum(s.get("diskBytesSpilled", 0) for s in stages)
-    return (mem, disk)
-
-
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
     driver_mem = os.environ.get("AXS_STRESS_DRIVER_MEM", "2g")
@@ -133,9 +103,9 @@ def main() -> int:
     # slots keeps the per-task floor above the page size while the
     # force-spill threshold still drives every big sort/agg to disk.
     cores = os.environ.get("AXS_STRESS_CPUS", "16")
-    spark = get_spark(
-        "axolotls-stress",
-        master=f"local[{cores}]",
+    spark = measure.session(
+        "stress",
+        cores,
         extra_conf={
             "spark.driver.memory": driver_mem,
             "spark.memory.fraction": mem_fraction,
@@ -147,11 +117,10 @@ def main() -> int:
             "spark.ui.retainedStages": "2000",
         },
     )
-    spark.sparkContext.setLogLevel("ERROR")
     heap = spark.sparkContext._jvm.java.lang.Runtime.getRuntime().maxMemory()
     print(
-        f"stress session: driver_mem={driver_mem} (heap {heap >> 20} MiB), "
-        f"memory.fraction={mem_fraction}, sf_dir={sf_dir}"
+        f"stress session: cores={cores}, driver_mem={driver_mem} "
+        f"(heap {heap >> 20} MiB), memory.fraction={mem_fraction}, sf_dir={sf_dir}"
     )
 
     con = duckdb.connect()
@@ -173,14 +142,19 @@ def main() -> int:
               f"({timings[name]}s)")
         if not ok:
             failures.append(name)
-        cacheutil.release_caches()
-        spark.catalog.clearCache()
+        measure.release(spark)
 
-    mem_spill, disk_spill = _spill_totals(spark)
+    try:
+        stages = measure.scrape(spark)
+    except (OSError, ValueError) as e:  # pragma: no cover - UI off / port race
+        print(f"  [warn] spill metrics unavailable: {e}", file=sys.stderr)
+        stages = []
+    mem_spill = sum(s.get("memoryBytesSpilled", 0) for s in stages)
+    disk_spill = sum(s.get("diskBytesSpilled", 0) for s in stages)
     print(
         f"\nspill: memoryBytesSpilled={mem_spill >> 20} MiB, "
         f"diskBytesSpilled={disk_spill >> 20} MiB "
-        f"across completed stages"
+        f"across all stages"
     )
     print(f"total wall: {round(sum(timings.values()), 1)}s")
 
