@@ -10,10 +10,9 @@ Scale design (the 100 TB story):
   map-side partial aggregation.
 - MinHash+LSH: per-doc work is linear in token count; the only
   joins are (a) shingle→signature aggregation (shuffle on doc_id)
-  and (b) the banding self-join, which is an *equi*-join on
-  (band, bucket_key) — candidate generation never compares all
-  pairs. Bucket skew (a giant bucket) is handled by AQE skew-join
-  splitting; pathological buckets can additionally be capped.
+  and (b) banding, a group-by on (band, bucket_key) that expands
+  pairs only within each bucket — candidate generation never
+  compares all pairs. Pathological (giant) buckets can be capped.
 - Token hashes use md5-prefix arithmetic (not Spark's xxhash64) so
   signatures are engine-independent — the DuckDB oracle reproduces
   them bit-for-bit, making even the LSH pipeline hash-checkable.
@@ -167,41 +166,6 @@ def minhash_signatures(
     ).alias("p")
     return wide.select("doc_id", pairs).select(
         "doc_id", F.col("p.i").alias("i"), F.col("p.minh").alias("minh")
-    )
-
-
-def lsh_candidate_pairs(
-    signatures: DataFrame, bands: int, rows_per_band: int
-) -> DataFrame:
-    """(doc_a, doc_b) candidate near-duplicate pairs via LSH banding.
-
-    Bucket key is the ordered concat of the band's signature rows;
-    the self-join is an equi-join on (band, bucket_key) so work is
-    proportional to bucket sizes, never |docs|^2.
-    """
-    banded = signatures.withColumn("band", (F.col("i") / rows_per_band).cast("int"))
-    buckets = banded.groupBy("doc_id", "band").agg(
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("i", "minh"))),
-                lambda s: s.getField("minh").cast("string"),
-            ),
-            ",",
-        ).alias("bucket_key")
-    )
-    a = buckets.alias("a")
-    b = buckets.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.bucket_key") == F.col("b.bucket_key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
-        )
-        .distinct()
     )
 
 

@@ -20,20 +20,28 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from axolotls_spark.cacheutil import track
+
 DAMPING = 0.85
 ITERS = 5
 
 
-def pagerank(edges: DataFrame, damping: float = DAMPING,
-             iters: int = ITERS) -> DataFrame:
+def pagerank(edges: DataFrame, seed: str | None = None,
+             damping: float = DAMPING, iters: int = ITERS) -> DataFrame:
     """Power-iterate PageRank on a weighted edge list (src, dst, w).
 
     Nodes = union of endpoints; transition weight = w / out-weight
-    of src; rank_0 = 1/N; rank_{t+1}(v) = (1-d)/N + d * sum over
-    in-edges of rank_t(u) * wn(u,v). Nodes with no out-edges leak
-    mass (standard simplification — no dangling redistribution),
-    which keeps every step a pure join+aggregate both engines can
-    replay. Returns (node, rank) as one unrolled lazy plan.
+    of src; rank_{t+1}(v) = (1-d)·restart(v) + d * sum over in-edges
+    of rank_t(u) * wn(u,v). Without ``seed`` the restart vector (and
+    rank_0) is uniform 1/N — global PageRank. With ``seed`` it is the
+    indicator of that node — personalized PageRank, i.e. random walk
+    with restart: all restart mass returns to the seed, the standard
+    graph-proximity score ("how related is every node to the seed")
+    behind graph-based recommendation and seed expansion. Nodes with
+    no out-edges leak mass (standard simplification — no dangling
+    redistribution), which keeps every step a pure join+aggregate
+    both engines can replay. Returns (node, rank) as one unrolled
+    lazy plan.
     """
     # The aggregated graph is tiny (|nodes|^2 rows max) but its
     # lineage is the full fact-table aggregation; every unrolled
@@ -45,7 +53,7 @@ def pagerank(edges: DataFrame, damping: float = DAMPING,
     # spawning shuffle.partitions near-empty tasks; for a graph with
     # a huge rank vector (billions of nodes) drop the repartition and
     # the same plan degrades gracefully to shuffled joins.
-    edges = edges.repartition(1).persist()
+    edges = track(edges.repartition(1).persist())
     # Eager materialization: the persisted graph fans out to nodes /
     # ow / t, whose lazy cache builds RACE at the first action and
     # each re-runs the full corpus-aggregation lineage (r8 §16). One
@@ -59,17 +67,29 @@ def pagerank(edges: DataFrame, damping: float = DAMPING,
     # 1-row count relation — broadcast, never a driver .count().
     ncnt = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    t = edges.join(ow, "src").select(
-        "src", "dst", (F.col("w") / F.col("ow")).alias("wn")
-    ).persist()
-    # (node, n) base relation every iteration rebuilds ranks from.
+    t = track(
+        edges.join(ow, "src")
+        .select("src", "dst", (F.col("w") / F.col("ow")).alias("wn"))
+        .persist()
+    )
+    # (node, n) base relation every iteration rebuilds ranks from; a
+    # seeded walk never reads n, so it skips that broadcast job.
     # repartition(1): nodes descends from a DISTINCT whose exchange
     # leaves it hash-partitioned at shuffle.partitions — paired with
     # the SinglePartition t, every loop join would re-shuffle one
     # side per iteration.  Collapsing base to SinglePartition (25
     # rows) makes all loop inputs co-partitioned.
-    base = nodes.crossJoin(F.broadcast(ncnt)).repartition(1).persist()
-    ranks = base.select("node", (F.lit(1.0) / F.col("n")).alias("rank"))
+    base = nodes if seed is not None else nodes.crossJoin(F.broadcast(ncnt))
+    base = track(base.repartition(1).persist())
+    if seed is None:
+        start = F.lit(1.0) / F.col("n")
+        restart = F.lit(1.0 - damping) / F.col("n")
+    else:
+        start = F.when(F.col("node") == seed, F.lit(1.0)).otherwise(
+            F.lit(0.0)
+        )
+        restart = F.lit(1.0 - damping) * start
+    ranks = base.select("node", start.alias("rank"))
     # Merge-hinted (not broadcast) iteration joins: every relation in
     # the loop is SinglePartition (edges/t/base descend from the
     # repartition(1)), and SinglePartition satisfies any clustered
@@ -92,70 +112,9 @@ def pagerank(edges: DataFrame, damping: float = DAMPING,
             .select(
                 "node",
                 (
-                    F.lit(1.0 - damping) / F.col("n")
+                    restart
                     + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
                 ).alias("rank"),
             )
-        )
-    return ranks
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seed: str,
-    damping: float = DAMPING,
-    iters: int = ITERS,
-) -> DataFrame:
-    """Random walk with restart: PageRank whose restart mass all
-    returns to ``seed`` instead of spreading uniformly — the
-    standard graph-proximity score ("how related is every node to
-    the seed"), used for graph-based recommendation and seed
-    expansion. Same aggregate-then-iterate shape as ``pagerank``:
-    the rank vector stays node-domain-sized and broadcast; only the
-    restart vector differs (an indicator on the seed).
-
-    SMALL-GRAPH ASSUMPTION (same contract as ``pagerank`` above): the
-    ``repartition(1)`` below deliberately collapses the *aggregated*
-    edge relation — tiny here (≤ |nodes|² rows; the 25-nation trade
-    graph) — so each unrolled iteration doesn't spawn
-    shuffle.partitions near-empty tasks. For a real edge set
-    (billions of edges / a huge rank vector) DROP the repartition:
-    the identical plan degrades gracefully to shuffled joins with the
-    broadcast-ranks build it already uses."""
-    edges = edges.repartition(1).persist()
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        # SinglePartition so every loop join below is co-partitioned
-        # with the SinglePartition t — same exchange-free iteration
-        # as pagerank() (the DISTINCT otherwise leaves nodes hash-
-        # partitioned and each step re-shuffles one side).
-        .repartition(1)
-        .persist()
-    )
-    ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    t = edges.join(ow, "src").select(
-        "src", "dst", (F.col("w") / F.col("ow")).alias("wn")
-    ).persist()
-    restart = F.when(F.col("node") == seed, F.lit(1.0)).otherwise(
-        F.lit(0.0)
-    )
-    ranks = nodes.select("node", restart.alias("rank"))
-    # Merge-hinted exchange-free iteration — see pagerank() above.
-    for _ in range(iters):
-        contrib = (
-            t.join(ranks.hint("merge"), t.src == ranks.node)
-            .groupBy("dst")
-            .agg(F.sum(F.col("rank") * F.col("wn")).alias("s"))
-        )
-        ranks = nodes.join(
-            contrib.hint("merge"), nodes.node == contrib.dst, "left"
-        ).select(
-            "node",
-            (
-                F.lit(1.0 - damping) * restart
-                + F.lit(damping) * F.coalesce(F.col("s"), F.lit(0.0))
-            ).alias("rank"),
         )
     return ranks

@@ -54,11 +54,6 @@ def stopword_ratio(text: Column, lang: str = "en") -> Column:
     return hits / F.nullif(F.size(toks), F.lit(0))
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Per-language stopword-hit ratio; argmax = predicted language."""
-    return {lang: stopword_ratio(text, lang) for lang in STOPWORDS}
-
-
 def quality_features(text: Column) -> dict[str, Column]:
     """Heuristic quality signals (Gopher/C4-style cheap filters):
     length, token stats, punctuation/digit/space ratios, mean token

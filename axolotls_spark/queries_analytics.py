@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark import cacheutil
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import tokens_col
 from axolotls_spark.registry import register, stable_f32
@@ -294,8 +295,6 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     before pairing so the final aggregate is a plain SUM — no
     norm join after the (largest) pair relation.
     """
-    from axolotls_spark import cacheutil
-
     docs = spread_for_cpu(
         load_table(spark, sf_dir, "documents"), "doc_id"
     )
@@ -362,10 +361,64 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --------------------------------------------------------------------------
+# The nation trade graph, shared by the whole graph family
+
+
+def trade_facts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(s_nationkey, c_nationkey, revenue) per lineitem: the one trade
+    join every trade-graph query starts from — lineitem ⋈ orders (the
+    only fact-to-fact join, one shuffle), then customer and supplier
+    broadcast. Queries project, filter and aggregate it into their own
+    edge relation (key or name level, weighted or distinct, self-trade
+    kept or dropped); at any fact-table scale what comes out is
+    ≤ |nations|² edges."""
+    l = load_table(spark, sf_dir, "lineitem").select(
+        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
+    )
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
+    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    return (
+        l.join(o, l.l_orderkey == o.o_orderkey)
+        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        .select(
+            "s_nationkey",
+            "c_nationkey",
+            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
+                "revenue"
+            ),
+        )
+    )
+
+
+def trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(src, dst, w): supplier-nation name → customer-nation name,
+    weighted by total revenue — :func:`trade_facts` with both nation
+    names broadcast in, then ONE group-by shuffle over the facts."""
+    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    return (
+        trade_facts(spark, sf_dir)
+        .join(
+            F.broadcast(n.select(F.col("n_nationkey").alias("ck"),
+                                 F.col("n_name").alias("dst"))),
+            F.col("c_nationkey") == F.col("ck"),
+        )
+        .join(
+            F.broadcast(n.select(F.col("n_nationkey").alias("sk"),
+                                 F.col("n_name").alias("src"))),
+            F.col("s_nationkey") == F.col("sk"),
+        )
+        .groupBy("src", "dst")
+        .agg(F.sum("revenue").alias("w"))
+    )
+
+
+# --------------------------------------------------------------------------
 # PageRank over the nation trade graph (aggregate-then-iterate)
 
-_PR_EDGES_SQL = """
-    edges AS (
+# The oracle twin of trade_edges().
+_TRADE_EDGES_SQL = """
         SELECT ns.n_name AS src, nc.n_name AS dst,
                SUM(l.l_extendedprice * (1 - l.l_discount)) AS w
         FROM lineitem l
@@ -375,7 +428,10 @@ _PR_EDGES_SQL = """
         JOIN supplier s ON l.l_suppkey = s.s_suppkey
         JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
         GROUP BY 1, 2
-    ),
+"""
+
+_PR_EDGES_SQL = f"""
+    edges AS ({_TRADE_EDGES_SQL}),
     nodes AS (
         SELECT src AS node FROM edges UNION SELECT dst FROM edges
     ),
@@ -428,35 +484,7 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from axolotls_spark.operators.graph import pagerank
 
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("ck"),
-                                 F.col("n_name").alias("dst"))),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("sk"),
-                                 F.col("n_name").alias("src"))),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .groupBy("src", "dst")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias(
-                "w"
-            )
-        )
-    )
-    return pagerank(edges).select(
+    return pagerank(trade_edges(spark, sf_dir)).select(
         F.col("node").alias("nation"),
         F.col("rank").cast("float").alias("pagerank"),
     )
@@ -513,8 +541,6 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     division is bit-identical across engines, LN's last ulp is not —
     with the PMI itself emitted for the value compare (9 sig digits).
     """
-    from axolotls_spark import cacheutil
-
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
     # Persisted: the distinct (doc, term) relation feeds BOTH the
     # document-frequency aggregate (via the vocab cut) and the pair
@@ -1561,35 +1587,15 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly once via the ordered two-hop + closing-edge join; the
     joins run on the tiny edge relation, never the facts.
     """
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    e0 = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("ck"),
-                                 F.col("n_name").alias("v"))),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("sk"),
-                                 F.col("n_name").alias("u"))),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .filter(F.col("u") != F.col("v"))
-        .select("u", "v")
-        .distinct()
-    )
     # The canonical edge relation feeds all three legs of the
     # triangle join — persist it, or the whole fact-table lineage
     # (6 scans) executes once PER LEG (18 scans total).
-    und = (
-        e0.select(
-            F.least("u", "v").alias("a"), F.greatest("u", "v").alias("b")
+    und = cacheutil.track(
+        trade_edges(spark, sf_dir)
+        .filter(F.col("src") != F.col("dst"))
+        .select(
+            F.least("src", "dst").alias("a"),
+            F.greatest("src", "dst").alias("b"),
         )
         .distinct()
         .persist()
@@ -2513,26 +2519,14 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from pyspark.sql import Window
 
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     e0 = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        trade_facts(spark, sf_dir)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .groupBy(
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 2
-            ).alias("w")
-        )
+        .agg(F.round(F.sum("revenue"), 2).alias("w"))
     )
     # Undirect via a single-pass explode of both orientations — a
     # union of e0 with its swap executes the corpus aggregation
@@ -2549,7 +2543,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         ).alias("e")
     ).select("e.src", "e.dst", "e.w")
-    ed = (
+    ed = cacheutil.track(
         und.groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
         .repartition(1)
@@ -3159,17 +3153,9 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     on small cores; production k-core on huge graphs runs the same
     rounds with shuffled joins.
     """
-    from pyspark.sql import Window  # noqa: F401  (module convention)
-
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     e0 = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        trade_facts(spark, sf_dir)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .select(
             F.col("s_nationkey").alias("u"), F.col("c_nationkey").alias("v")
@@ -3178,7 +3164,7 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Single-pass undirection (explode of both orientations) — a
     # union with the swap would run the corpus lineage twice.
-    und = (
+    und = cacheutil.track(
         e0.select(
             F.explode(
                 F.array(
@@ -3198,7 +3184,7 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # alive feeds BOTH endpoint joins of the next degree count —
         # persist it per round, or the lineage doubles every peel
         # (same cut-the-lineage move as graph.py / kmeans).
-        alive = alive.persist()
+        alive = cacheutil.track(alive.persist())
         a = alive.select(F.col("node").alias("au"))
         b = alive.select(F.col("node").alias("av"))
         deg = (
@@ -3568,50 +3554,10 @@ def ppr_trade_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape identical to pagerank_trade_graph: corpus-sized work
     is the one edge aggregation; all 5 iterations are broadcast
     joins over the 25-row rank vector
-    (operators/graph.personalized_pagerank)."""
-    from axolotls_spark.operators.graph import personalized_pagerank
+    (operators/graph.pagerank with a seed)."""
+    from axolotls_spark.operators.graph import pagerank
 
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("ck"),
-                    F.col("n_name").alias("dst"),
-                )
-            ),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("sk"),
-                    F.col("n_name").alias("src"),
-                )
-            ),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .groupBy("src", "dst")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("w")
-        )
-    )
-    return personalized_pagerank(edges, _PPR_SEED).select(
+    return pagerank(trade_edges(spark, sf_dir), _PPR_SEED).select(
         F.col("node").alias("nation"),
         F.col("rank").cast("float").alias("ppr"),
     )
@@ -3747,49 +3693,10 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one edge aggregation; each half-iteration joins the
     broadcast 25-row score vector with the persisted edge list, and
     the normalizer is a 1-row broadcast sum — no driver state."""
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
+    edges = cacheutil.track(
+        trade_edges(spark, sf_dir).repartition(1).persist()
     )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("ck"),
-                    F.col("n_name").alias("dst"),
-                )
-            ),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("sk"),
-                    F.col("n_name").alias("src"),
-                )
-            ),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .groupBy("src", "dst")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("w")
-        )
-        .repartition(1)
-        .persist()
-    )
-    nodes = (
+    nodes = cacheutil.track(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
@@ -4499,23 +4406,10 @@ def fdr_bh_nation_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --------------------------------------------------------------------------
 # All-pairs shortest paths via min-plus matrix squaring
 
-_APSP_EDGE_SQL = """
-        SELECT sn.n_name AS src, cn.n_name AS dst,
-               SUM(l.l_extendedprice * (1 - l.l_discount)) AS w
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation cn  ON c.c_nationkey = cn.n_nationkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation sn  ON s.s_nationkey = sn.n_nationkey
-        GROUP BY 1, 2
-"""
-
-
 @register(
     "apsp_trade_costs",
     oracle=f"""
-    WITH edges AS ({_APSP_EDGE_SQL}),
+    WITH edges AS ({_TRADE_EDGES_SQL}),
     tw AS (SELECT SUM(w) AS t FROM edges),
     nodes AS (
         SELECT src AS v FROM edges UNION SELECT dst FROM edges
@@ -4561,47 +4455,8 @@ def apsp_trade_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     squaring is a ≤|V|²-row self-join, persisted per round so the
     doubled references resolve to one cached relation.
     """
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("ck"),
-                    F.col("n_name").alias("dst"),
-                )
-            ),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(
-            F.broadcast(
-                n.select(
-                    F.col("n_nationkey").alias("sk"),
-                    F.col("n_name").alias("src"),
-                )
-            ),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .groupBy("src", "dst")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("w")
-        )
-        .repartition(1)
-        .persist()
+    edges = cacheutil.track(
+        trade_edges(spark, sf_dir).repartition(1).persist()
     )
     tw = edges.agg(F.sum("w").alias("t"))
     nodes = (
@@ -4609,7 +4464,7 @@ def apsp_trade_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .union(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    d = (
+    d = cacheutil.track(
         edges.crossJoin(F.broadcast(tw))
         .select("src", "dst", F.log(F.col("t") / F.col("w")).alias("c"))
         .union(nodes.select(F.col("v").alias("src"),
@@ -4625,7 +4480,7 @@ def apsp_trade_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("c").alias("ca"))
         b = d.select(F.col("src").alias("k"), F.col("dst").alias("j"),
                      F.col("c").alias("cb"))
-        d = (
+        d = cacheutil.track(
             a.join(F.broadcast(b), "k")
             .groupBy(F.col("i").alias("src"), F.col("j").alias("dst"))
             .agg(F.min(F.col("ca") + F.col("cb")).alias("c"))
@@ -5833,8 +5688,6 @@ def tree_depth2_cart(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle: the full two-level greedy recursion in SQL CTEs — both
     engines must pick the same root split, partition identically,
     and pick the same two child splits."""
-    from axolotls_spark import cacheutil
-
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select(
         *[F.col(x).cast("double").alias(x) for x in _CART_FEATS],
@@ -6704,23 +6557,12 @@ def graph_modularity_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
     Community assignment is a relation, not a constant: swap the
     region map for any (node → community) table and the plan shape
     is unchanged."""
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
     n = load_table(spark, sf_dir, "nation").select(
         "n_nationkey", "n_regionkey"
     )
     r = load_table(spark, sf_dir, "region").select("r_regionkey", "r_name")
     edges = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
+        trade_facts(spark, sf_dir)
         .join(
             F.broadcast(
                 n.select(
@@ -6730,7 +6572,6 @@ def graph_modularity_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
             ),
             F.col("c_nationkey") == F.col("ck"),
         )
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
         .join(
             F.broadcast(
                 n.select(
@@ -6741,11 +6582,7 @@ def graph_modularity_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("s_nationkey") == F.col("sk"),
         )
         .groupBy("src_r", "dst_r")
-        .agg(
-            F.sum(
-                F.col("l_extendedprice") * (1 - F.col("l_discount"))
-            ).alias("w")
-        )
+        .agg(F.sum("revenue").alias("w"))
     )
     m = edges.agg(F.sum("w").alias("m"))
     internal = (
@@ -7405,18 +7242,8 @@ def theil_index_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register(
     "graph_assortativity",
-    oracle="""
-    WITH edges AS (
-        SELECT ns.n_name AS src, nc.n_name AS dst,
-               SUM(l.l_extendedprice * (1 - l.l_discount)) AS w
-        FROM lineitem l
-        JOIN orders o   ON l.l_orderkey = o.o_orderkey
-        JOIN customer c ON o.o_custkey = c.c_custkey
-        JOIN nation nc  ON c.c_nationkey = nc.n_nationkey
-        JOIN supplier s ON l.l_suppkey = s.s_suppkey
-        JOIN nation ns  ON s.s_nationkey = ns.n_nationkey
-        GROUP BY 1, 2
-    ),
+    oracle=f"""
+    WITH edges AS ({_TRADE_EDGES_SQL}),
     outs AS (SELECT src, SUM(w) AS os FROM edges GROUP BY src),
     ins AS (SELECT dst, SUM(w) AS isv FROM edges GROUP BY dst),
     j AS (
@@ -7452,37 +7279,7 @@ def graph_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole graph family, then strengths and the weighted-moment
     correlation all on the ≤ 25² edge relation — two tiny grouped
     sums, one 6-cell weighted moment aggregate."""
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select(
-        "c_custkey", "c_nationkey"
-    )
-    s = load_table(spark, sf_dir, "supplier").select(
-        "s_suppkey", "s_nationkey"
-    )
-    n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    edges = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("ck"),
-                                 F.col("n_name").alias("dst"))),
-            F.col("c_nationkey") == F.col("ck"),
-        )
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
-        .join(
-            F.broadcast(n.select(F.col("n_nationkey").alias("sk"),
-                                 F.col("n_name").alias("src"))),
-            F.col("s_nationkey") == F.col("sk"),
-        )
-        .groupBy("src", "dst")
-        .agg(
-            F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount")))
-            .alias("w")
-        )
-    )
+    edges = trade_edges(spark, sf_dir)
     outs = edges.groupBy("src").agg(F.sum("w").alias("os"))
     ins = edges.groupBy("dst").agg(F.sum("w").alias("isv"))
     j = (
@@ -8716,8 +8513,6 @@ def gbdt_boost_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     orderBy().limit(1) — TakeOrderedAndProject, never a global rank
     window.  The corpus relation is persisted once and reused by
     both rounds and both RMSE folds (caller-owned cache contract)."""
-    from axolotls_spark import cacheutil
-
     li = load_table(spark, sf_dir, "lineitem")
     base = cacheutil.track(
         li.select(
@@ -8893,15 +8688,9 @@ def ktruss_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the kcore discipline).  At 100 TB the edge relation is still
     dimension-sized; production k-truss on billion-edge graphs runs
     the identical rounds with shuffled joins."""
-    l = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     e = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        trade_facts(spark, sf_dir)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .select(
             F.least("s_nationkey", "c_nationkey").alias("a"),
@@ -9483,8 +9272,6 @@ def tail_dependence_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
     on the unique line key; λ is one fold per tail level over the
     broadcast 3-row quantile spine."""
     from axolotls_spark.operators.prefix import ranked_cumsum
-
-    from axolotls_spark import cacheutil
 
     o = load_table(spark, sf_dir, "orders")
     # base feeds BOTH rank passes; ranked feeds the count and the
@@ -10626,8 +10413,6 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
         .distinct()
     )
-    from axolotls_spark import cacheutil
-
     edges = cacheutil.track(edges.persist())
     edges.count()
     return edges
@@ -10699,8 +10484,6 @@ def link_prediction_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     und = edges.unionAll(
         edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
     )
-    from axolotls_spark import cacheutil
-
     # ONE adjacency-list aggregate serves both the degree relation
     # (list size — referenced 3x: z-weight join, da join, db join)
     # and the two-hop candidates (per-node combination expansion over

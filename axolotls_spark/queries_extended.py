@@ -467,7 +467,6 @@ def rollup_time_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuous aggregates in ONE pass over the events stream table
     (GROUPING SETS share the scan + partial aggregation). The grand
     total row is excluded so every row belongs to a day."""
-    load_table(spark, sf_dir, "events").createOrReplaceTempView("events")
     # GROUPING() must live in the aggregate's own select list (Spark
     # resolves HAVING against output aliases); filter in an outer
     # query instead.
@@ -482,10 +481,11 @@ def rollup_time_hierarchy(spark: SparkSession, sf_dir: str) -> DataFrame:
                 COUNT(*)   AS n_events,
                 SUM(value) AS total_value,
                 GROUPING(date_trunc('day', ts)) AS gd
-            FROM events
+            FROM {events}
             GROUP BY ROLLUP (date_trunc('day', ts), date_trunc('hour', ts))
         ) WHERE gd = 0
-        """
+        """,
+        events=load_table(spark, sf_dir, "events"),
     )
 
 

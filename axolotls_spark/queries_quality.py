@@ -215,18 +215,18 @@ def lateral_topk_per_nation(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle's ROW_NUMBER form), so there is no nested-loop
     re-execution per outer row — one shuffle by nationkey. Ties
     broken by c_name so both engines pick identical rows."""
-    load_table(spark, sf_dir, "nation").createOrReplaceTempView("nation")
-    load_table(spark, sf_dir, "customer").createOrReplaceTempView("customer")
     return spark.sql(
         """
         SELECT n.n_name, c.c_name, c.c_acctbal
-        FROM nation n,
+        FROM {nation} n,
         LATERAL (
-            SELECT c_name, c_acctbal FROM customer
+            SELECT c_name, c_acctbal FROM {customer}
             WHERE c_nationkey = n.n_nationkey
             ORDER BY c_acctbal DESC, c_name LIMIT 3
         ) c
-        """
+        """,
+        nation=load_table(spark, sf_dir, "nation"),
+        customer=load_table(spark, sf_dir, "customer"),
     )
 
 

@@ -636,14 +636,14 @@ def setop_union_parties(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def grouping_sets_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SQL surface: the engine accepts ANSI SQL via spark.sql over
-    registered views — GROUPING SETS is the exemplar."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    DataFrames bound as parameters — GROUPING SETS is the exemplar."""
     return spark.sql(
         """
         SELECT l_returnflag, l_linestatus, SUM(l_quantity) AS sum_qty
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), ())
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -711,8 +711,6 @@ def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     both margins and the grand total in ONE Expand-based aggregate
     (one scan, one shuffle — never a job per set); exact integer-cent
     sums keep the hash comparable."""
-    o = load_table(spark, sf_dir, "orders")
-    o.createOrReplaceTempView("_gs_orders")
     return spark.sql(
         """
         SELECT COALESCE(o_orderstatus, 'ALL') AS status,
@@ -721,8 +719,9 @@ def grouping_sets_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
                     AS INT) AS gid,
                COUNT(*) AS n_orders,
                SUM(CAST(ROUND(o_totalprice * 100) AS BIGINT)) AS rev_cents
-        FROM _gs_orders
+        FROM {orders}
         GROUP BY GROUPING SETS ((o_orderstatus, o_orderpriority),
                                 (o_orderstatus), (o_orderpriority), ())
-        """
+        """,
+        orders=load_table(spark, sf_dir, "orders"),
     )

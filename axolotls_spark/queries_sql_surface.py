@@ -78,16 +78,16 @@ def agg_listagg_group_all(spark: SparkSession, sf_dir: str) -> DataFrame:
     its ANSI name). DISTINCT + explicit ORDER BY makes the
     concatenation order-deterministic, so the value-hash comparison
     is exact despite Spark's unordered partial aggregation."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
         SELECT l_returnflag,
                listagg(DISTINCT l_linestatus, '|')
                    WITHIN GROUP (ORDER BY l_linestatus) AS statuses,
                SUM(l_quantity) AS sum_qty
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY ALL
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -152,16 +152,16 @@ def sql_pipe_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     surface. Catalyst compiles pipes to the identical logical plan
     as the nested-SELECT oracle, so pushdown/pruning are unchanged.
     """
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     return spark.sql(
         """
-        FROM lineitem
+        FROM {lineitem}
         |> WHERE l_quantity > :min_qty
         |> AGGREGATE SUM(l_extendedprice * (1 - l_discount)) AS revenue,
                      COUNT(*) AS n_items
            GROUP BY l_returnflag
         """,
         args={"min_qty": 10},
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 

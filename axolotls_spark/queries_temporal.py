@@ -447,7 +447,7 @@ _RECURSIVE_SPINE_SQL = """
         SELECT CAST(DATE_TRUNC('month', o_orderdate) AS DATE) AS m,
                COUNT(*) AS n_orders,
                SUM(o_totalprice) AS revenue
-        FROM orders GROUP BY 1
+        FROM {orders} GROUP BY 1
     )
     SELECT months.m AS month_start,
            COALESCE(rev.n_orders, 0) AS n_orders,
@@ -458,7 +458,7 @@ _RECURSIVE_SPINE_SQL = """
 
 @register(
     "recursive_month_spine",
-    oracle=_RECURSIVE_SPINE_SQL,
+    oracle=_RECURSIVE_SPINE_SQL.format(orders="orders"),
     tags=("recursive-cte", "sql-surface", "calendar-spine", "gap-fill"),
 )
 def recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -473,8 +473,9 @@ def recursive_month_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     explode (timeseries_gap_fill); graph closure over cyclic data
     needs the iterative AQE loop (dedup_groups) since recursive
     UNION-dedup is not yet in Spark."""
-    load_table(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    return spark.sql(_RECURSIVE_SPINE_SQL)
+    return spark.sql(
+        _RECURSIVE_SPINE_SQL, orders=load_table(spark, sf_dir, "orders")
+    )
 
 
 @register(

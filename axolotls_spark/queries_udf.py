@@ -134,13 +134,13 @@ def udtf_bigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
                 yield i, f"{toks[i]} {toks[i + 1]}"
 
     spark.udtf.register("bigrams", Bigrams)
-    load_table(spark, sf_dir, "documents").createOrReplaceTempView("documents")
     return spark.sql(
         """
         SELECT d.doc_id, b.pos, b.ngram
-        FROM documents d, LATERAL bigrams(d.text) b
+        FROM {documents} d, LATERAL bigrams(d.text) b
         WHERE d.doc_id < 30
-        """
+        """,
+        documents=load_table(spark, sf_dir, "documents"),
     )
 
 
@@ -201,7 +201,6 @@ def sql_udf_revenue_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     Contrast with udaf_weighted_avg (Python, Arrow hop): SQL UDFs
     are what a shared analytics platform hands analysts at 100 TB.
     The oracle inlines the same expressions."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
     spark.sql(
         "CREATE OR REPLACE TEMPORARY FUNCTION net_rev(p DOUBLE, d DOUBLE) "
         "RETURNS DOUBLE RETURN p * (1 - d)"
@@ -217,9 +216,10 @@ def sql_udf_revenue_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
                SUM(net_rev(l_extendedprice, l_discount)) AS revenue,
                CAST(SUM(is_high(net_rev(l_extendedprice, l_discount)))
                     AS BIGINT) AS n_high
-        FROM lineitem
+        FROM {lineitem}
         GROUP BY l_returnflag
-        """
+        """,
+        lineitem=load_table(spark, sf_dir, "lineitem"),
     )
 
 
@@ -269,10 +269,10 @@ def udtf_polymorphic_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % 25 == 0
     )
-    docs.createOrReplaceTempView("docs_sample")
     return spark.sql(
         "SELECT d.doc_id, g.pos, g.gram "
-        "FROM docs_sample d, LATERAL poly_ngrams(d.text, 3) g"
+        "FROM {docs} d, LATERAL poly_ngrams(d.text, 3) g",
+        docs=docs,
     )
 
 

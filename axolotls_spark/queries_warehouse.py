@@ -33,7 +33,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark import cacheutil
 from axolotls_spark.io.sources import load_table
+from axolotls_spark.queries_analytics import trade_facts
 from axolotls_spark.registry import register, stable_f32
 
 
@@ -416,24 +418,16 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     billion-node graphs the identical plan degrades to shuffled joins
     and the unroll bound becomes the usual BSP iteration cap.
     """
-    l = load_table(spark, sf_dir, "lineitem").select(
-        "l_orderkey", "l_suppkey", "l_extendedprice", "l_discount"
-    )
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    c = load_table(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
-    s = load_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = (
-        l.join(o, l.l_orderkey == o.o_orderkey)
-        .join(F.broadcast(c), o.o_custkey == c.c_custkey)
-        .join(F.broadcast(s), l.l_suppkey == s.s_suppkey)
+        trade_facts(spark, sf_dir)
         .filter(F.col("s_nationkey") != F.col("c_nationkey"))
         .groupBy(
             F.col("s_nationkey").alias("src"), F.col("c_nationkey").alias("dst")
         )
-        .agg(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))).alias("w"))
+        .agg(F.sum("revenue").alias("w"))
     )
-    edges = (
+    edges = cacheutil.track(
         rev.withColumn(
             "rk",
             F.row_number().over(
@@ -448,8 +442,6 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     dist = spark.range(1).select(
         F.lit(_BFS_SEED).alias("node"), F.lit(0).alias("hops")
     )
-    from axolotls_spark import cacheutil
-
     for _ in range(_BFS_DEPTH):
         # Persist each round's <=25-row distance vector (caller-owned):
         # every round references it twice (frontier join + min-merge
@@ -895,8 +887,6 @@ def merkle_tree_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Each level is consumed twice (the output union and the next
     # level's aggregate); persist the <=64-row relations (tracked) so
     # the orders scan and the per-level digest chain run once.
-    from axolotls_spark import cacheutil
-
     lvl = cacheutil.track(lvl.persist())
     out = lvl
     n = _MERKLE_LEAVES

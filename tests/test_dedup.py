@@ -39,8 +39,10 @@ def test_identical_docs_are_lsh_candidates(spark):
         [(1, text), (2, text), (3, "totally different words here now ok yes")],
         "doc_id: long, text: string",
     )
-    sig = D.minhash_signatures(df, k=8)
-    pairs = {(r.doc_a, r.doc_b) for r in D.lsh_candidate_pairs(sig, 2, 4).collect()}
+    pairs = {
+        (r.doc_a, r.doc_b)
+        for r in D.near_dup_candidate_pairs(df, k=8, bands=2).collect()
+    }
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
 

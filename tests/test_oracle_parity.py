@@ -74,3 +74,36 @@ def test_entry_smoke(spark):
     rows = df.collect()
     assert len(rows) > 0
     assert set(e.oracle_sql()) <= set(e.queries())
+
+
+#: Queries that bind their input tables into ``spark.sql`` text.  They
+#: pass each DataFrame as a parameter (``{t}``), which gets a unique
+#: view name per call; a fixed session-wide temp-view name would let
+#: one query resolve another's table while the parity pool runs 8-way.
+_SQL_BOUND = (
+    "agg_listagg_group_all",
+    "grouping_sets_sales",
+    "grouping_sets_sql",
+    "lateral_topk_per_nation",
+    "recursive_month_spine",
+    "rollup_time_hierarchy",
+    "sql_pipe_revenue",
+    "sql_udf_revenue_bands",
+    "udtf_bigrams",
+    "udtf_polymorphic_ngrams",
+)
+
+
+def test_sql_bound_queries_concurrent_matches_serial(spark, duck, sf_dir):
+    def one(name: str):
+        cur = duck.cursor()
+        try:
+            return compare(name, spark, cur, sf_dir)
+        finally:
+            cur.close()
+
+    serial = [one(n) for n in _SQL_BOUND]
+    with ThreadPoolExecutor(max_workers=_N_WORKERS) as pool:
+        concurrent = list(pool.map(one, _SQL_BOUND))
+    assert concurrent == serial
+    assert all(ok for ok, _ in serial), dict(zip(_SQL_BOUND, serial))

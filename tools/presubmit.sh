@@ -1,18 +1,19 @@
 #!/usr/bin/env bash
 # Pre-submit certification — the exact driver configuration, locally.
 #
-# Run from /root/repo with NOTHING else on the machine (each leg is
+# Run from the repo root with NOTHING else on the machine (each leg is
 # CPU-saturating; two concurrent Spark workloads time each other
 # out).  Legs, in order:
 #
-#   1. Full pytest (sf0.001 parametrized parity + unit/plan gates).
-#   2. The sf0.01 leg for the four families the driver's sampler has
-#      historically never drawn (string fns, array/map, similarity
-#      search, UDF surface) — the driver gates at sf0.01, so the
-#      exact driver configuration is what gets certified here
-#      (VERDICT r5 item #7).
-#   3. Full-registry oracle parity at sf0.01 (the driver's SF).
-#   4. Full-registry oracle parity at sf0.1 (the bench SF).
+#   1. Frozen-core perf budgets (tools/perfgate.py) — first, while
+#      the box is idle (see the note above leg 1 below).
+#   2. Full pytest (sf0.001 parametrized parity + unit/plan gates).
+#   3. The sf0.01 leg for the four families that sampled parity
+#      runs have historically never drawn (string fns, array/map,
+#      similarity search, UDF surface) — parity is gated at sf0.01,
+#      so that configuration is what gets certified here.
+#   4. Full-registry oracle parity at sf0.01 (the gating SF).
+#   5. Full-registry oracle parity at sf0.1 (the bench SF).
 #
 # ~50 min total on an idle 32-core box.  Any leg failing aborts.
 set -euo pipefail

@@ -37,8 +37,8 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 
-from axolotls_spark.session import get_spark  # noqa: E402
 from axolotls_spark.streaming import jobs as S  # noqa: E402
+from tools.measure import cores, session  # noqa: E402
 
 N_CHUNKS = 60  # 30 days of events -> 12h per micro-batch
 DELAYS = ["6 hours", "24 hours", "72 hours"]
@@ -130,9 +130,7 @@ def measure(
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/repo/.scale/sf1"
     out = sys.argv[2] if len(sys.argv) > 2 else "STREAMSTATE.json"
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark("axolotls-spark-streamscale", master=f"local[{cpus}]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = session("streamscale")
     work = tempfile.mkdtemp(prefix="streamscale-")
     try:
         n = prepare_chunks(spark, sf_dir, work)
@@ -144,6 +142,7 @@ def main() -> None:
             for d in DELAYS
         ]
         result = {
+            "cpus": cores(),
             "sf_dir": sf_dir,
             "total_events": n,
             "rate_per_hour": round(rate_per_hour, 1),
