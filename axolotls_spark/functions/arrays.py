@@ -42,3 +42,19 @@ def cosine(a: Column, b: Column) -> Column:
     """Cosine similarity; NULL when either vector has zero norm
     (SQL-domain semantics, see functions.scalar)."""
     return dot(a, b) / F.nullif(norm(a) * norm(b), F.lit(0.0))
+
+
+def ordered_pairs(arr: str, a: str, b: str) -> Column:
+    """Every pair ``(arr[i], arr[j])`` with ``i < j`` of array column
+    ``arr``, as an array of ``struct<a, b>`` — the per-row combination
+    expansion behind bucket/posting-list pair generation. On a sorted,
+    distinct array each unordered pair appears once with ``a < b``."""
+    return F.flatten(
+        F.transform(
+            arr,
+            lambda x, i: F.transform(
+                F.slice(arr, i + 2, F.size(arr)),
+                lambda y: F.struct(x.alias(a), y.alias(b)),
+            ),
+        )
+    )

@@ -4,6 +4,16 @@ Exact, hash, MinHash+LSH, SimHash, and n-gram-Jaccard dedup over a
 document table — all expressed as distributed DataFrame ops (no
 driver materialization, no cartesian products).
 
+Input contract: the MinHash/Jaccard family (``minhash_wide``,
+``minhash_signatures``, ``near_dup_candidate_pairs``,
+``jaccard_pairs``, ``jaccard_prefix_pairs``, ``verify_pairs``) takes
+a ``(doc_id, sh)`` shingle-hash relation, one row per distinct
+shingle per document — ``doc_shingle_hashes(docs)`` over a
+``(doc_id, text)`` corpus, or any other digest of
+``doc_shingles(docs)``. The operators never re-derive it, so a caller
+with several consumers builds and persists it once and passes it to
+each.
+
 Scale design (the 100 TB story):
 
 - Exact dedup is a hash aggregate on the dedup key — one shuffle,
@@ -28,6 +38,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark import cacheutil
+from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import spread_for_cpu
 from axolotls_spark.plans.audit import record_loop_plan
 
@@ -98,61 +110,49 @@ def exact_dedup(df: DataFrame, keys: list[str]) -> DataFrame:
     return df.groupBy(*keys).agg(*aggs) if aggs else df.distinct()
 
 
-def doc_shingle_hashes(docs: DataFrame, id_col: str = "doc_id",
-                       text_col: str = "text", n: int = 3) -> DataFrame:
-    """(doc_id, sh) — one row per distinct shingle hash per doc."""
-    docs = spread_for_cpu(docs, id_col)
-    return docs.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(shingles_col(F.col(text_col), n)).alias("shingle"),
-    ).select("doc_id", token_hash(F.col("shingle")).alias("sh"))
+def doc_shingles(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, shingle) — one row per distinct word n-gram per doc of a
+    (doc_id, text) corpus: the one place a corpus becomes shingles."""
+    return spread_for_cpu(docs, "doc_id").select(
+        "doc_id", F.explode(shingles_col(F.col("text"), n)).alias("shingle")
+    )
 
 
-def minhash_wide(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    n: int = 3,
-    sh: DataFrame | None = None,
-) -> DataFrame:
-    """(doc_id, minh_0 … minh_{k-1}): whole MinHash signature in ONE
-    row per doc, ONE shuffle.
+def doc_shingle_hashes(docs: DataFrame, n: int = 3) -> DataFrame:
+    """(doc_id, sh) — ``doc_shingles`` with ``token_hash`` applied: the
+    shingle-hash relation every MinHash/Jaccard operator below takes."""
+    return doc_shingles(docs, n).select(
+        "doc_id", token_hash(F.col("shingle")).alias("sh")
+    )
+
+
+def minhash_wide(sh: DataFrame, k: int = 8) -> DataFrame:
+    """(doc_id, minh_0 … minh_{k-1}, n_sh): whole MinHash signature in
+    ONE row per doc, ONE shuffle, plus the doc's shingle-set size.
 
     Plan shape: the k hash functions are k parallel ``min()``
     aggregates over the same shingle rows — shuffle volume is the
     shingle stream itself (with map-side partial mins collapsing it
     to ≤ k values per doc per partition), not the k× exploded stream
-    a (doc, i) long-format aggregation would move.
-
-    ``sh`` optionally supplies a precomputed (doc_id, sh) shingle-hash
-    relation (caller-persisted) so composites that also need the exact
-    shingle sets — lsh_quality_report, minhash_jaccard_estimate — scan
-    and md5-hash the corpus ONCE instead of once per consumer.
+    a (doc, i) long-format aggregation would move. ``n_sh`` rides the
+    same aggregate for free (the SSJoin length filter's input).
     """
     params = minhash_params(k)
-    if sh is None:
-        sh = doc_shingle_hashes(docs, id_col, text_col, n)
     shp = F.col("sh") % MERSENNE_P
     return sh.groupBy("doc_id").agg(
         *[
             F.min((F.lit(a) * shp + F.lit(b)) % MERSENNE_P).alias(f"minh_{i}")
             for i, (a, b) in enumerate(params)
-        ]
+        ],
+        F.count(F.lit(1)).alias("n_sh"),
     )
 
 
-def minhash_signatures(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    n: int = 3,
-) -> DataFrame:
+def minhash_signatures(sh: DataFrame, k: int = 8) -> DataFrame:
     """(doc_id, i, minh): long-format MinHash signature — the wide
     single-shuffle aggregate unpivoted by a post-shuffle projection
     (inline explode of k (i, minh) structs; adds zero exchanges)."""
-    wide = minhash_wide(docs, id_col, text_col, k, n)
+    wide = minhash_wide(sh, k)
     pairs = F.explode(
         F.array(
             *[
@@ -201,26 +201,20 @@ def lsh_banded_keys(wide: DataFrame, k: int, bands: int) -> DataFrame:
 
 
 def near_dup_candidate_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 8,
-    n: int = 3,
-    bands: int = 2,
-    sh: DataFrame | None = None,
+    sh: DataFrame, k: int = 8, bands: int = 2
 ) -> DataFrame:
-    """Fused MinHash→LSH candidate pairs: shingle scan → ONE wide
-    signature aggregate → band keys as pure projection → equi-join.
+    """Fused MinHash→LSH candidate pairs: shingle hashes → ONE wide
+    signature aggregate → band keys as pure projection → bucket-group
+    pair expansion.
 
-    Two shuffles end-to-end (signature agg + band self-join) vs four
+    Two shuffles end-to-end (signature agg + bucket group) vs four
     for the long-format composition (signature agg on (doc,i), band
     re-agg, join) — the difference between 2 and 4 full passes over
-    the signature stream at 100 TB.  ``sh`` as in ``minhash_wide``.
+    the signature stream at 100 TB.
     """
     if k % bands:
         raise ValueError("k must divide evenly into bands")
-    wide = minhash_wide(docs, id_col, text_col, k, n, sh=sh)
-    banded = lsh_banded_keys(wide, k, bands)
+    banded = lsh_banded_keys(minhash_wide(sh, k), k, bands)
     return bucket_group_pairs(banded)
 
 
@@ -241,19 +235,46 @@ def bucket_group_pairs(banded: DataFrame) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
+    pairs = F.explode(ordered_pairs("ids", "doc_a", "doc_b")).alias("p")
     return (
-        buckets.select(F.explode(pairs).alias("p"))
+        buckets.select(pairs)
         .select(F.col("p.doc_a").alias("doc_a"), F.col("p.doc_b").alias("doc_b"))
         .distinct()
+    )
+
+
+def verify_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_inter, n_union): exact shingle-set overlap of
+    each candidate pair, from the per-doc hash sets of ``sh``.
+
+    The verify join is candidate-sized; each caller applies its own
+    threshold to the integer counts. The sets are persisted because
+    they feed two join SIDES, and Spark builds the collect_set
+    aggregate once per side without the pin. Merge hints pin both
+    corpus-scaled sides: the post-aggregation size estimator
+    undervalues the set arrays, so the planner broadcasts them once
+    the raised 64 MB threshold lets it — fine at sf0.1, driver-fatal
+    at sf10, and the wrong shape at 100 TB.
+    """
+    sets = cacheutil.track(
+        sh.groupBy("doc_id")
+        .agg(
+            F.collect_set("sh").alias("shs"),
+            F.count(F.lit(1)).alias("n_sh"),
+        )
+        .persist()
+    )
+    sa, sb = sets.alias("sa"), sets.alias("sb")
+    inter = F.size(F.array_intersect(F.col("sa.shs"), F.col("sb.shs")))
+    return (
+        cand.join(sa.hint("merge"), F.col("doc_a") == F.col("sa.doc_id"))
+        .join(sb.hint("merge"), F.col("doc_b") == F.col("sb.doc_id"))
+        .select(
+            "doc_a",
+            "doc_b",
+            inter.cast("long").alias("n_inter"),
+            (F.col("sa.n_sh") + F.col("sb.n_sh") - inter).alias("n_union"),
+        )
     )
 
 
@@ -370,13 +391,7 @@ def connected_dedup_groups(
     )
 
 
-def jaccard_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    threshold: float = 0.5,
-) -> DataFrame:
+def jaccard_pairs(sh: DataFrame, threshold: float = 0.5) -> DataFrame:
     """Exact n-gram Jaccard similarity for pairs sharing ≥1 shingle.
 
     The shingle equi-join generates only co-occurring pairs; set
@@ -384,7 +399,6 @@ def jaccard_pairs(
     relative to the pair stream). This is the verify stage after LSH
     at scale; standalone it is still shuffle-bound, never cartesian.
     """
-    sh = doc_shingle_hashes(docs, id_col, text_col, n)
     sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a, b = sh.alias("a"), sh.alias("b")
     shared = (
@@ -410,13 +424,7 @@ def jaccard_pairs(
 
 
 def jaccard_prefix_pairs(
-    docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    n: int = 3,
-    tau_num: int = 1,
-    tau_den: int = 5,
-    sh: DataFrame | None = None,
+    sh: DataFrame, tau_num: int = 1, tau_den: int = 5
 ) -> DataFrame:
     """Exact n-gram Jaccard join with PREFIX FILTERING (SSJoin /
     PPJoin family — Chaudhuri et al. ICDE'06, Xiao et al. WWW'08):
@@ -440,24 +448,13 @@ def jaccard_prefix_pairs(
     Scale shape: one shingle shuffle for document frequencies, one
     per-doc window (partitioned — never global) for prefix ranks,
     one prefix-to-prefix equi-join (the candidate stream), and a
-    candidate-sized verify join against the per-doc set arrays.
-
-    ``sh`` optionally supplies a precomputed, caller-persisted
-    (doc_id, sh) shingle-hash relation (r8 §2.3: composites that pair
-    this exact join with a MinHash candidate path — lsh_quality_report,
-    minhash_xxhash_recall_cert — otherwise scan and md5-hash the
-    corpus once per side).
+    candidate-sized ``verify_pairs`` join against the per-doc set
+    arrays. ``sh`` has two consumers here (the ranked-window chain
+    and the verify sets) and is deliberately not persisted: the
+    InMemoryRelation build of the exploded shingle stream costs ~3x
+    one recompute (measured r8), so callers persist it only when they
+    read it a third time.
     """
-    from axolotls_spark import cacheutil
-
-    if sh is None:
-        # Deliberately NOT persisted: sh has exactly two consumers here
-        # (the ranked-window chain feeding pref, and the sets build) and
-        # the InMemoryRelation build of the exploded shingle stream
-        # costs ~3x one recompute in columnar-cache serialization
-        # (measured r8, §5 "caching is only worth it when reused" —
-        # two cheap recomputes beat one expensive cache build).
-        sh = doc_shingle_hashes(docs, id_col, text_col, n)
     wdoc = Window.partitionBy("doc_id")
     # Document frequency as a count window over the SAME exchange the
     # prefix ranking needs anyway (r8 optimization): the old shape
@@ -488,13 +485,12 @@ def jaccard_prefix_pairs(
         .select("doc_id", "sh", "rn", "n_sh")
         .persist()
     )
-    # merge hints on every corpus-scaled join side below: the
-    # post-aggregation size estimator undervalues the prefix
-    # relation / the collect_set arrays, so the planner broadcasts
-    # them once the raised 64 MB threshold lets it — fine at sf0.1,
-    # driver-fatal at sf10 (caught by the r7 measured-decade sweep),
-    # and the wrong shape at 100 TB where a build side proportional
-    # to the corpus must never be a broadcast.
+    # merge hint on the corpus-scaled prefix join side below: the
+    # post-aggregation size estimator undervalues the prefix relation,
+    # so the planner broadcasts it once the raised 64 MB threshold
+    # lets it — fine at sf0.1, driver-fatal at sf10 (caught by the r7
+    # measured-decade sweep), and the wrong shape at 100 TB where a
+    # build side proportional to the corpus must never be a broadcast.
     #
     # Candidate dedup is a groupBy (same exchange the old DISTINCT
     # paid) that additionally aggregates the PPJoin positional bound
@@ -541,39 +537,23 @@ def jaccard_prefix_pairs(
         )
         .select("doc_a", "doc_b")
     )
-    # Persisted for the same both-join-sides reason (sa and sb).
-    sets = cacheutil.track(
-        sh.groupBy("doc_id")
-        .agg(
-            F.collect_set("sh").alias("shs"),
-            F.count(F.lit(1)).alias("n_sh"),
-        )
-        .persist()
-    )
-    sa, sb = sets.alias("sa"), sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.shs"), F.col("sb.shs")))
-    jac = inter / (F.col("sa.n_sh") + F.col("sb.n_sh") - inter)
+    jaccard = F.col("n_inter") / F.col("n_union")
     return (
-        cand.join(sa.hint("merge"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb.hint("merge"), F.col("doc_b") == F.col("sb.doc_id"))
-        .select("doc_a", "doc_b", jac.alias("jaccard"))
-        .filter(
-            F.col("jaccard") >= F.lit(tau_num) / F.lit(float(tau_den))
-        )
+        verify_pairs(cand, sh)
+        .select("doc_a", "doc_b", jaccard.alias("jaccard"))
+        .filter(F.col("jaccard") >= F.lit(tau_num) / F.lit(float(tau_den)))
     )
 
 
-def simhash(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text",
-            bits: int = 16) -> DataFrame:
+def simhash(docs: DataFrame, bits: int = 16) -> DataFrame:
     """(doc_id, simhash): bitwise-majority fingerprint over token
     hashes. Near-dup docs land within small Hamming distance.
 
     Expressed as explode(token × bit) → conditional sum → bit
     reassembly; all integer arithmetic, oracle-reproducible.
     """
-    toks = spread_for_cpu(docs, id_col).select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens_col(F.col(text_col))).alias("tok"),
+    toks = spread_for_cpu(docs, "doc_id").select(
+        "doc_id", F.explode(tokens_col(F.col("text"))).alias("tok")
     ).select("doc_id", token_hash(F.col("tok")).alias("th"))
     bit = F.explode(F.sequence(F.lit(0), F.lit(bits - 1))).alias("bit")
     # SQL-function form: the python shiftright/shiftleft wrappers

@@ -25,6 +25,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from axolotls_spark import cacheutil
+from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import tokens_col
 from axolotls_spark.registry import register, stable_f32
@@ -568,17 +569,7 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     plists = tv.groupBy("doc_id").agg(
         F.array_sort(F.collect_list("term")).alias("ts")
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("ts"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ts"), i + 2, F.size(F.col("ts"))),
-                lambda y: F.struct(
-                    x.alias("term_a"), y.alias("term_b")
-                ),
-            ),
-        )
-    )
+    combos = ordered_pairs("ts", "term_a", "term_b")
     pairs = (
         plists.select(F.explode(combos).alias("p"))
         .groupBy(
@@ -2455,7 +2446,7 @@ def audience_overlap_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 _LP_ROUNDS = 3
 
 _LP_EDGES_SQL = """
-    e0 AS (
+    e0 AS MATERIALIZED (
         SELECT s.s_nationkey AS src, c.c_nationkey AS dst,
                ROUND(SUM(l_extendedprice * (1 - l_discount)), 2) AS w
         FROM lineitem
@@ -2470,14 +2461,14 @@ _LP_EDGES_SQL = """
         UNION ALL
         SELECT dst AS src, src AS dst, w FROM e0
     ),
-    ed AS (SELECT src, dst, SUM(w) AS w FROM und GROUP BY 1, 2),
+    ed AS MATERIALIZED (SELECT src, dst, SUM(w) AS w FROM und GROUP BY 1, 2),
     l0 AS (SELECT DISTINCT src AS node, src AS label FROM ed)
 """
 
 
 def _lp_round_sql(r: int) -> str:
     return f"""
-    l{r} AS (
+    l{r} AS MATERIALIZED (
         SELECT node, label FROM (
             SELECT e.dst AS node, l.label, SUM(e.w) AS s,
                    ROW_NUMBER() OVER (PARTITION BY e.dst
@@ -2932,15 +2923,7 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     plists = dts.crossJoin(F.broadcast(vocab_arr)).select(
         F.array_sort(F.array_intersect("ts0", "vs")).alias("ts")
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("ts"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ts"), i + 2, F.size(F.col("ts"))),
-                lambda y: F.struct(x.alias("ta"), y.alias("tb")),
-            ),
-        )
-    )
+    combos = ordered_pairs("ts", "ta", "tb")
     co = (
         plists.select(F.explode(combos).alias("p"))
         .groupBy(F.col("p.ta").alias("ta"), F.col("p.tb").alias("tb"))
@@ -10399,15 +10382,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     baskets = li.groupBy("l_orderkey").agg(
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )
-    combos = F.flatten(
-        F.transform(
-            F.col("ps"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ps"), i + 2, F.size(F.col("ps"))),
-                lambda y: F.struct(x.alias("u"), y.alias("v")),
-            ),
-        )
-    )
+    combos = ordered_pairs("ps", "u", "v")
     edges = (
         baskets.select(F.explode(combos).alias("p"))
         .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
@@ -10497,15 +10472,7 @@ def link_prediction_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     nbrs.count()
     deg = nbrs.select("u", F.size("ns").cast("long").alias("d"))
-    ccombos = F.flatten(
-        F.transform(
-            F.col("ns"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ns"), i + 2, F.size(F.col("ns"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    ccombos = ordered_pairs("ns", "a", "b")
     cand = nbrs.select(
         F.col("u").alias("z"), F.explode(ccombos).alias("p")
     ).select(F.col("p.a").alias("a"), F.col("p.b").alias("b"), "z")
@@ -10805,15 +10772,7 @@ def clustering_coefficient_nodes(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_list("v")).alias("ns")
     )
     deg = nbrs.select("u", F.size("ns").cast("long").alias("d"))
-    wcombos = F.flatten(
-        F.transform(
-            F.col("ns"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ns"), i + 2, F.size(F.col("ns"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
+    wcombos = ordered_pairs("ns", "a", "b")
     wedges = nbrs.select(
         F.col("u").alias("z"), F.explode(wcombos).alias("p")
     ).select("z", F.col("p.a").alias("a"), F.col("p.b").alias("b"))

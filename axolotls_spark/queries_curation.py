@@ -47,16 +47,20 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from axolotls_spark import cacheutil
+from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import (
     doc_shingle_hashes,
     token_hash,
     tokens_col,
 )
+from axolotls_spark.queries_text import (
+    _SQL_SHINGLES,
+    _SQL_TOKEN_HASH,
+    _SQL_TOKENS,
+)
 from axolotls_spark.registry import register, stable_f32
 
-_SQL_TOKENS = r"string_split_regex(trim(text), '\s+')"
-_SQL_HASH = "('0x' || substr(md5({x}), 1, 15))::BIGINT"
 _SQL_DOT = (
     "list_sum(list_transform(list_zip({a}, {b}),"
     " p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
@@ -85,7 +89,7 @@ _CMS_W = 64  # buckets per row
     ),
     sketch AS (
         SELECT i,
-               {_SQL_HASH.format(x="i::VARCHAR || ' ' || term")} % {_CMS_W}
+               {_SQL_TOKEN_HASH.format(tok="i::VARCHAR || ' ' || term")} % {_CMS_W}
                    AS bucket,
                COUNT(*) AS cell
         FROM occ GROUP BY 1, 2
@@ -99,7 +103,7 @@ _CMS_W = 64  # buckets per row
     ),
     probe AS (
         SELECT t.term, t.cnt, u.i,
-               {_SQL_HASH.format(x="u.i::VARCHAR || ' ' || t.term")}
+               {_SQL_TOKEN_HASH.format(tok="u.i::VARCHAR || ' ' || t.term")}
                    % {_CMS_W} AS bucket
         FROM top t CROSS JOIN UNNEST(range(0, {_CMS_D})) AS u(i)
     )
@@ -437,7 +441,7 @@ _SPAN_N = 12
     ),
     sh AS (
         SELECT DISTINCT doc_id,
-               {_SQL_HASH.format(x='g')} AS sh
+               {_SQL_TOKEN_HASH.format(tok='g')} AS sh
         FROM (
             SELECT doc_id,
                    array_to_string(toks[i:i + {_SPAN_N - 1}], ' ') AS g
@@ -478,15 +482,7 @@ def substring_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.array_sort(F.collect_list("doc_id")).alias("ids"))
         .filter(F.size("ids") > 1)
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
+    pairs = ordered_pairs("ids", "doc_a", "doc_b")
     return (
         groups.select(F.explode(pairs).alias("p"))
         .groupBy(
@@ -1272,7 +1268,7 @@ def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         SELECT doc_id, {_SQL_TOKENS} AS toks FROM documents
     ),
     sh AS (
-        SELECT DISTINCT doc_id, {_SQL_HASH.format(x='g')} AS sh
+        SELECT DISTINCT doc_id, {_SQL_TOKEN_HASH.format(tok='g')} AS sh
         FROM (
             SELECT doc_id, array_to_string(toks[i:i + 2], ' ') AS g
             FROM t, UNNEST(range(1, len(toks) - 1)) AS u(i)
@@ -1406,8 +1402,8 @@ _DIFF_BUCKETS = 512
 
 
 def _sql_row_checksum(price_expr: str) -> str:
-    return _SQL_HASH.format(
-        x=(
+    return _SQL_TOKEN_HASH.format(
+        tok=(
             "o_orderkey::VARCHAR || '|' || o_custkey::VARCHAR || '|' "
             "|| o_orderstatus || '|' "
             f"|| CAST(FLOOR(({price_expr}) * 100) AS BIGINT)::VARCHAR"
@@ -1420,7 +1416,7 @@ def _sql_row_checksum(price_expr: str) -> str:
     oracle=f"""
     WITH keyed AS (
         SELECT o_orderkey, o_custkey, o_orderstatus, o_totalprice,
-               {_SQL_HASH.format(x='o_orderkey::VARCHAR')} % {_DIFF_MOD}
+               {_SQL_TOKEN_HASH.format(tok='o_orderkey::VARCHAR')} % {_DIFF_MOD}
                    AS drift,
                o_orderkey % {_DIFF_BUCKETS} AS bucket
         FROM orders
@@ -1637,7 +1633,7 @@ def zorder_layout_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle=f"""
     WITH h AS (
         SELECT lang,
-               {_SQL_HASH.format(x="'split:' || doc_id::VARCHAR")} % 100
+               {_SQL_TOKEN_HASH.format(tok="'split:' || doc_id::VARCHAR")} % 100
                    AS bucket
         FROM documents
     ),
@@ -1777,7 +1773,7 @@ _N_SHARDS = 64
     "shard_balance_report",
     oracle=f"""
     WITH d AS (
-        SELECT {_SQL_HASH.format(x="'shard:' || doc_id::VARCHAR")}
+        SELECT {_SQL_TOKEN_HASH.format(tok="'shard:' || doc_id::VARCHAR")}
                    % {_N_SHARDS} AS shard,
                len({_SQL_TOKENS}) AS n_tok
         FROM documents
@@ -1965,8 +1961,8 @@ _ORDER_SHARDS = 16
     WITH keyed AS (
         SELECT e.epoch, d.doc_id,
                len({_SQL_TOKENS}) AS n_tok,
-               {_SQL_HASH.format(
-                   x="'epoch:' || e.epoch::VARCHAR || ':' "
+               {_SQL_TOKEN_HASH.format(
+                   tok="'epoch:' || e.epoch::VARCHAR || ':' "
                      "|| d.doc_id::VARCHAR")} AS hkey
         FROM documents d,
              (SELECT UNNEST(range(0, {_EPOCHS})) AS epoch) e
@@ -2091,19 +2087,11 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MC_K = 5
 
-#: word-trigram shingles — same fragment as queries_text._SQL_SHINGLES
-#: (restated here to keep this module's oracle self-contained).
-_SQL_MC_SHINGLES = (
-    "list_distinct(list_transform(range(1, greatest(len({t}) - 1, 1)),"
-    " i -> array_to_string({t}[i:i+2], ' ')))"
-).format(t=_SQL_TOKENS)
-
-
 def _mc_oracle(k: int) -> str:
     parts = [
         f"""sh AS (
-        SELECT DISTINCT doc_id, {_SQL_HASH.format(x="s.shingle")} AS sh
-        FROM (SELECT doc_id, UNNEST({_SQL_MC_SHINGLES}) AS shingle
+        SELECT DISTINCT doc_id, {_SQL_TOKEN_HASH.format(tok="s.shingle")} AS sh
+        FROM (SELECT doc_id, UNNEST({_SQL_SHINGLES}) AS shingle
               FROM documents) s
     ),
     uni AS (SELECT COUNT(DISTINCT sh) AS u FROM sh)"""
@@ -2175,9 +2163,6 @@ def greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     fraction (one division, float32); the per-round argmax is over
     integer gains with a doc_id tie-break, so both engines must
     select the identical subset in the identical order."""
-    from axolotls_spark import cacheutil
-    from axolotls_spark.operators.dedup import doc_shingle_hashes
-
     docs = load_table(spark, sf_dir, "documents")
     sh = cacheutil.track(doc_shingle_hashes(docs).persist())
     uni = sh.agg(F.countDistinct("sh").alias("u"))

@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from axolotls_spark import cacheutil
+from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators import dedup as D
 from axolotls_spark.operators import text_analysis as T
@@ -26,6 +27,56 @@ _SQL_SHINGLES = (
     "list_distinct(list_transform(range(1, greatest(len({t}) - 1, 1)),"
     " i -> array_to_string({t}[i:i+2], ' ')))"
 ).format(t=_SQL_TOKENS)
+
+
+def _sql_sh(where: str = "") -> str:
+    """``sh`` CTE: (doc_id, shash), one row per distinct md5 shingle
+    hash per document — the oracle twin of dedup.doc_shingle_hashes.
+    ``where`` restricts the documents scanned."""
+    return f"""sh AS (
+        SELECT DISTINCT doc_id,
+               {_SQL_TOKEN_HASH.format(tok='s.shingle')} AS shash
+        FROM (
+            SELECT doc_id, UNNEST({_SQL_SHINGLES}) AS shingle
+            FROM documents
+            {where}
+        ) s
+    )"""
+
+
+_SQL_SH = _sql_sh()
+
+#: Per-doc set sizes and every co-occurring pair's shared-shingle
+#: count, over the ``sh`` CTE.
+_SQL_SIZES_SHARED = """sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
+    shared AS (
+        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
+        FROM sh a JOIN sh b ON a.shash = b.shash AND a.doc_id < b.doc_id
+        GROUP BY a.doc_id, b.doc_id
+    )"""
+
+
+def _sql_exact_jaccard(tau: float) -> str:
+    """Brute-force exact Jaccard of every co-occurring pair at >= tau,
+    over ``_SQL_SIZES_SHARED``."""
+    return f"""SELECT doc_a, doc_b,
+           n_shared / (sa.n_sh + sb.n_sh - n_shared) AS jaccard
+    FROM shared
+    JOIN sizes sa ON doc_a = sa.doc_id
+    JOIN sizes sb ON doc_b = sb.doc_id
+    WHERE n_shared / (sa.n_sh + sb.n_sh - n_shared) >= {tau}"""
+
+
+#: k=8 MinHash signature CTEs over ``sh``, with the frozen dedup params.
+_SQL_SIG_CTES = """params(i, a, b) AS (VALUES {}),
+    sig AS (
+        SELECT sh.doc_id, p.i,
+               MIN((p.a * (sh.shash % 2147483647) + p.b) % 2147483647) AS minh
+        FROM sh, params p
+        GROUP BY sh.doc_id, p.i
+    )""".format(
+    ", ".join(f"({i}, {a}, {b})" for i, (a, b) in enumerate(D.minhash_params(8)))
+)
 
 
 @register(
@@ -69,28 +120,8 @@ def dedup_content_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "minhash_signatures",
     oracle=f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id,
-               {_SQL_TOKEN_HASH.format(tok='sh.shingle')} AS shash
-        FROM (
-            SELECT doc_id, UNNEST({_SQL_SHINGLES}) AS shingle
-            FROM documents
-        ) sh
-    ),
-    params(i, a, b) AS (
-        VALUES (0, 1181241943, 1051802487),
-               (1, 240231708, 1968352745),
-               (2, 1616518890, 1532821674),
-               (3, 114964616, 1337093473),
-               (4, 1176911537, 1570006127),
-               (5, 1500872216, 862655672),
-               (6, 1465957471, 777157381),
-               (7, 1724586546, 1344903021)
-    )
-    SELECT sh.doc_id, p.i,
-           MIN((p.a * (sh.shash % 2147483647) + p.b) % 2147483647) AS minh
-    FROM sh, params p
-    GROUP BY sh.doc_id, p.i
+    WITH {_SQL_SH}, {_SQL_SIG_CTES}
+    SELECT doc_id, i, minh FROM sig
     """,
     tags=("dedup", "minhash", "near-dup"),
 )
@@ -98,36 +129,14 @@ def minhash_signatures_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k=8 MinHash signatures — bit-for-bit oracle-checkable (md5
     token hashes + Mersenne-prime affine family)."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.minhash_signatures(docs, k=8)
+    return D.minhash_signatures(D.doc_shingle_hashes(docs), k=8)
 
 
 # CTE block reproducing the MinHash→LSH candidate pairs — shared by
 # the pairs query and the connected-components grouping query.
 _SQL_CAND_CTES = f"""
-    sh AS (
-        SELECT DISTINCT doc_id,
-               {_SQL_TOKEN_HASH.format(tok='sh.shingle')} AS shash
-        FROM (
-            SELECT doc_id, UNNEST({_SQL_SHINGLES}) AS shingle
-            FROM documents
-        ) sh
-    ),
-    params(i, a, b) AS (
-        VALUES (0, 1181241943, 1051802487),
-               (1, 240231708, 1968352745),
-               (2, 1616518890, 1532821674),
-               (3, 114964616, 1337093473),
-               (4, 1176911537, 1570006127),
-               (5, 1500872216, 862655672),
-               (6, 1465957471, 777157381),
-               (7, 1724586546, 1344903021)
-    ),
-    sig AS (
-        SELECT sh.doc_id, p.i,
-               MIN((p.a * (sh.shash % 2147483647) + p.b) % 2147483647) AS minh
-        FROM sh, params p
-        GROUP BY sh.doc_id, p.i
-    ),
+    {_SQL_SH},
+    {_SQL_SIG_CTES},
     buckets AS (
         SELECT doc_id, i // 4 AS band,
                string_agg(minh::VARCHAR, ',' ORDER BY i) AS bucket_key
@@ -142,96 +151,11 @@ _SQL_CAND_CTES = f"""
     )
 """
 
-
-@register(
-    "minhash_near_dup_pairs",
-    oracle=f"""
-    WITH {_SQL_CAND_CTES}
-    SELECT doc_a, doc_b FROM cand
-    """,
-    tags=("dedup", "minhash", "lsh", "near-dup", "join"),
-)
-def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full MinHash→LSH banding→candidate pairs pipeline (2 bands ×
-    4 rows): fused wide-signature path — two shuffles total, equi-join
-    on bucket keys, never all-pairs."""
-    docs = load_table(spark, sf_dir, "documents")
-    return D.near_dup_candidate_pairs(docs, k=8, bands=2)
-
-
-@register(
-    "dedup_groups",
-    oracle=f"""
-    WITH RECURSIVE {_SQL_CAND_CTES},
-    e AS (
-        SELECT doc_a AS u, doc_b AS v FROM cand
-        UNION
-        SELECT doc_b, doc_a FROM cand
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM e
-        UNION
-        SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u
-    ),
-    rep AS (SELECT u, MIN(v) AS mn FROM reach GROUP BY u)
-    SELECT d.doc_id,
-           CASE WHEN rep.mn IS NULL OR rep.mn > d.doc_id
-                THEN d.doc_id ELSE rep.mn END AS group_rep
-    FROM documents d LEFT JOIN rep ON d.doc_id = rep.u
-    """,
-    tags=("dedup", "connected-components", "iterative", "minhash"),
-)
-def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-duplicate cluster assignment: connected components over
-    the LSH candidate graph via iterative min-label propagation
-    (operators/dedup.py connected_dedup_groups). Oracle computes the
-    same components with a recursive transitive closure."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.near_dup_candidate_pairs(docs, k=8, bands=2)
-    return D.connected_dedup_groups(docs, pairs)
-
-
-@register(
-    "dedup_groups_altstar",
-    oracle=f"""
-    WITH RECURSIVE {_SQL_CAND_CTES},
-    e AS (
-        SELECT doc_a AS u, doc_b AS v FROM cand
-        UNION
-        SELECT doc_b, doc_a FROM cand
-    ),
-    reach(u, v) AS (
-        SELECT u, v FROM e
-        UNION
-        SELECT r.u, e2.v FROM reach r JOIN e e2 ON r.v = e2.u
-    ),
-    rep AS (SELECT u, MIN(v) AS mn FROM reach GROUP BY u)
-    SELECT d.doc_id,
-           CASE WHEN rep.mn IS NULL OR rep.mn > d.doc_id
-                THEN d.doc_id ELSE rep.mn END AS group_rep
-    FROM documents d LEFT JOIN rep ON d.doc_id = rep.u
-    """,
-    tags=("dedup", "connected-components", "large-star", "small-star"),
-)
-def dedup_groups_altstar(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup cluster assignment via the alternating large-star/
-    small-star algorithm (operators/dedup.py
-    connected_components_star) — same output contract as
-    ``dedup_groups`` but O(log^2 n) rounds instead of
-    O(component diameter), the shape that survives deep duplicate
-    chains at 100 TB. Oracle: the same recursive transitive closure
-    that certifies the label-propagation variant, so both
-    algorithms are pinned to one ground truth."""
-    docs = load_table(spark, sf_dir, "documents")
-    pairs = D.near_dup_candidate_pairs(docs, k=8, bands=2)
-    return D.connected_components_star(docs, pairs)
-
-
-@register(
-    "split_leakage_free",
-    oracle=f"""
-    WITH RECURSIVE {_SQL_CAND_CTES},
-    e AS (
+#: Near-dup groups over the ``cand`` graph (needs WITH RECURSIVE):
+#: g(doc_id, group_rep) labels every document with the smallest doc id
+#: reachable from it — the transitive closure both component
+#: algorithms are pinned to.
+_SQL_GROUP_CTES = """e AS (
         SELECT doc_a AS u, doc_b AS v FROM cand
         UNION
         SELECT doc_b, doc_a FROM cand
@@ -247,7 +171,68 @@ def dedup_groups_altstar(spark: SparkSession, sf_dir: str) -> DataFrame:
                CASE WHEN rep.mn IS NULL OR rep.mn > d.doc_id
                     THEN d.doc_id ELSE rep.mn END AS group_rep
         FROM documents d LEFT JOIN rep ON d.doc_id = rep.u
-    )
+    )"""
+
+_SQL_DEDUP_GROUPS = f"""
+    WITH RECURSIVE {_SQL_CAND_CTES}, {_SQL_GROUP_CTES}
+    SELECT doc_id, group_rep FROM g
+    """
+
+
+@register(
+    "minhash_near_dup_pairs",
+    oracle=f"""
+    WITH {_SQL_CAND_CTES}
+    SELECT doc_a, doc_b FROM cand
+    """,
+    tags=("dedup", "minhash", "lsh", "near-dup", "join"),
+)
+def minhash_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Full MinHash→LSH banding→candidate pairs pipeline (2 bands ×
+    4 rows): fused wide-signature path — two shuffles total, equi-join
+    on bucket keys, never all-pairs."""
+    docs = load_table(spark, sf_dir, "documents")
+    return D.near_dup_candidate_pairs(D.doc_shingle_hashes(docs), k=8, bands=2)
+
+
+@register(
+    "dedup_groups",
+    oracle=_SQL_DEDUP_GROUPS,
+    tags=("dedup", "connected-components", "iterative", "minhash"),
+)
+def dedup_groups(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-duplicate cluster assignment: connected components over
+    the LSH candidate graph via iterative min-label propagation
+    (operators/dedup.py connected_dedup_groups). Oracle computes the
+    same components with a recursive transitive closure."""
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = D.near_dup_candidate_pairs(D.doc_shingle_hashes(docs), k=8, bands=2)
+    return D.connected_dedup_groups(docs, pairs)
+
+
+@register(
+    "dedup_groups_altstar",
+    oracle=_SQL_DEDUP_GROUPS,
+    tags=("dedup", "connected-components", "large-star", "small-star"),
+)
+def dedup_groups_altstar(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Near-dup cluster assignment via the alternating large-star/
+    small-star algorithm (operators/dedup.py
+    connected_components_star) — same output contract as
+    ``dedup_groups`` but O(log^2 n) rounds instead of
+    O(component diameter), the shape that survives deep duplicate
+    chains at 100 TB. Oracle: the same recursive transitive closure
+    that certifies the label-propagation variant, so both
+    algorithms are pinned to one ground truth."""
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = D.near_dup_candidate_pairs(D.doc_shingle_hashes(docs), k=8, bands=2)
+    return D.connected_components_star(docs, pairs)
+
+
+@register(
+    "split_leakage_free",
+    oracle=f"""
+    WITH RECURSIVE {_SQL_CAND_CTES}, {_SQL_GROUP_CTES}
     SELECT doc_id, group_rep,
            CASE WHEN b < 90 THEN 'train'
                 WHEN b < 95 THEN 'val'
@@ -277,7 +262,7 @@ def split_leakage_free(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit.
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.near_dup_candidate_pairs(docs, k=8, bands=2)
+    pairs = D.near_dup_candidate_pairs(D.doc_shingle_hashes(docs), k=8, bands=2)
     groups = D.connected_components_star(docs, pairs)
     bucket = (
         F.conv(
@@ -337,7 +322,7 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate.
     """
     docs = load_table(spark, sf_dir, "documents")
-    pairs = D.near_dup_candidate_pairs(docs, k=8, bands=2)
+    pairs = D.near_dup_candidate_pairs(D.doc_shingle_hashes(docs), k=8, bands=2)
     bucket = (
         F.conv(
             F.substring(
@@ -370,26 +355,8 @@ def split_leakage_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register(
     "ngram_jaccard_pairs",
     oracle=f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id,
-               {_SQL_TOKEN_HASH.format(tok='sh.shingle')} AS shash
-        FROM (
-            SELECT doc_id, UNNEST({_SQL_SHINGLES}) AS shingle
-            FROM documents
-        ) sh
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-        FROM sh a JOIN sh b ON a.shash = b.shash AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           n_shared / (sa.n_sh + sb.n_sh - n_shared) AS jaccard
-    FROM shared
-    JOIN sizes sa ON doc_a = sa.doc_id
-    JOIN sizes sb ON doc_b = sb.doc_id
-    WHERE n_shared / (sa.n_sh + sb.n_sh - n_shared) >= 0.12
+    WITH {_SQL_SH}, {_SQL_SIZES_SHARED}
+    {_sql_exact_jaccard(0.12)}
     """,
     tags=("dedup", "jaccard", "ngram", "near-dup", "join"),
 )
@@ -397,32 +364,14 @@ def ngram_jaccard_pairs_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact 3-gram Jaccard for co-occurring pairs — the verify
     stage after LSH candidate generation."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.jaccard_pairs(docs, threshold=0.12)
+    return D.jaccard_pairs(D.doc_shingle_hashes(docs), threshold=0.12)
 
 
 @register(
     "jaccard_prefix_join",
     oracle=f"""
-    WITH sh AS (
-        SELECT DISTINCT doc_id,
-               {_SQL_TOKEN_HASH.format(tok='sh.shingle')} AS shash
-        FROM (
-            SELECT doc_id, UNNEST({_SQL_SHINGLES}) AS shingle
-            FROM documents
-        ) sh
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-        FROM sh a JOIN sh b ON a.shash = b.shash AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    )
-    SELECT doc_a, doc_b,
-           n_shared / (sa.n_sh + sb.n_sh - n_shared) AS jaccard
-    FROM shared
-    JOIN sizes sa ON doc_a = sa.doc_id
-    JOIN sizes sb ON doc_b = sb.doc_id
-    WHERE n_shared / (sa.n_sh + sb.n_sh - n_shared) >= 0.2
+    WITH {_SQL_SH}, {_SQL_SIZES_SHARED}
+    {_sql_exact_jaccard(0.2)}
     """,
     tags=("dedup", "jaccard", "prefix-filter", "ppjoin", "set-similarity"),
 )
@@ -438,7 +387,9 @@ def jaccard_prefix_join_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     join). τ = 1/5 as an integer ratio; prefix lengths are pure
     integer arithmetic."""
     docs = load_table(spark, sf_dir, "documents")
-    return D.jaccard_prefix_pairs(docs, tau_num=1, tau_den=5)
+    return D.jaccard_prefix_pairs(
+        D.doc_shingle_hashes(docs), tau_num=1, tau_den=5
+    )
 
 
 @register(
@@ -1228,7 +1179,7 @@ def incremental_dedup_screen(docs: DataFrame, is_new):
     fold consumes it once, so nothing needs caching at all.  The
     exact tier folds the 60-bit digests the same way.  Work stays
     proportional to bucket collisions, never corpus-vs-corpus."""
-    wide = D.minhash_wide(docs, k=8)
+    wide = D.minhash_wide(D.doc_shingle_hashes(docs), k=8)
     banded = D.lsh_banded_keys(wide, k=8, bands=2)
     near_hits = (
         banded.groupBy("band", "bucket_key")
@@ -1504,10 +1455,9 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
     # ONE shingle scan feeds both the exact side and the signature
-    # aggregate (r8 §2.3) — minhash_wide(docs) used to re-run the
-    # explode + md5 pass the persisted sh relation already pays for.
+    # aggregate (r8 §2.3).
     sh = D.doc_shingle_hashes(docs).distinct().persist()
-    wide = D.minhash_wide(docs, k=8, sh=sh).persist()
+    wide = D.minhash_wide(sh, k=8).persist()
     pairs = D.bucket_group_pairs(D.lsh_banded_keys(wide, k=8, bands=2))
     wa = wide.select(
         F.col("doc_id").alias("doc_a"),
@@ -1710,15 +1660,7 @@ def winnow_shared_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.size("ids") > 1) & (F.size("ids") <= _WINNOW_DF_CAP)
         )
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + 2, F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias("doc_a"), y.alias("doc_b")),
-            ),
-        )
-    )
+    pairs = ordered_pairs("ids", "doc_a", "doc_b")
     return (
         groups.select(F.explode(pairs).alias("p"))
         .groupBy(
@@ -1744,21 +1686,8 @@ _LSH_EVAL_TAUS_SQL = ", ".join(
 @register(
     "lsh_quality_report",
     oracle=f"""
-    WITH {_SQL_CAND_CTES},
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-        FROM sh a JOIN sh b ON a.shash = b.shash AND a.doc_id < b.doc_id
-        GROUP BY a.doc_id, b.doc_id
-    ),
-    truth AS (
-        SELECT doc_a, doc_b,
-               n_shared / (sa.n_sh + sb.n_sh - n_shared) AS jaccard
-        FROM shared
-        JOIN sizes sa ON doc_a = sa.doc_id
-        JOIN sizes sb ON doc_b = sb.doc_id
-        WHERE n_shared / (sa.n_sh + sb.n_sh - n_shared) >= 0.2
-    ),
+    WITH {_SQL_CAND_CTES}, {_SQL_SIZES_SHARED},
+    truth AS ({_sql_exact_jaccard(0.2)}),
     u AS (
         SELECT COALESCE(c.doc_a, t.doc_a) AS doc_a,
                COALESCE(c.doc_b, t.doc_b) AS doc_b,
@@ -1812,13 +1741,11 @@ def lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE shingle scan for both the LSH candidate side and the exact
     # prefix-join truth side (r8 §2.3/§5): without the shared persisted
     # relation each side re-ran the explode + md5 token-hash pass.
-    from axolotls_spark.cacheutil import track
-
-    sh = track(D.doc_shingle_hashes(docs).persist())
-    cand = D.near_dup_candidate_pairs(docs, k=8, bands=2, sh=sh).withColumn(
+    sh = cacheutil.track(D.doc_shingle_hashes(docs).persist())
+    cand = D.near_dup_candidate_pairs(sh, k=8, bands=2).withColumn(
         "in_cand", F.lit(True)
     )
-    truth = D.jaccard_prefix_pairs(docs, tau_num=1, tau_den=5, sh=sh)
+    truth = D.jaccard_prefix_pairs(sh, tau_num=1, tau_den=5)
     u = cand.join(truth, ["doc_a", "doc_b"], "full").select(
         F.coalesce("in_cand", F.lit(False)).alias("in_cand"), "jaccard"
     )
@@ -2255,110 +2182,60 @@ _XXMH_SAMPLE_MOD = 4  # deterministic cert sample: doc_id % 4 == 0
 _XXMH_RECALL_FLOOR_PPM = 999_755
 
 
-def _xxmh_exact_ctes(where: str = "") -> str:
-    """Shared oracle preamble for the production query and its
-    sampled cert: per-doc shingle-hash sets, sizes, and the
-    all-co-occurring-pairs shared counts — ONE definition, the cert
-    restricts it with ``where`` (the doc_id % K sample)."""
-    return f"""sh AS (
-        SELECT DISTINCT doc_id,
-               {_SQL_TOKEN_HASH.format(tok='s.shingle')} AS shash
-        FROM (
-            SELECT doc_id, UNNEST({_SQL_SHINGLES}) AS shingle
-            FROM documents
-            {where}
-        ) s
-    ),
-    sizes AS (SELECT doc_id, COUNT(*) AS n_sh FROM sh GROUP BY doc_id),
-    shared AS (
-        SELECT a.doc_id AS doc_a, b.doc_id AS doc_b, COUNT(*) AS n_shared
-        FROM sh a JOIN sh b ON a.shash = b.shash AND a.doc_id < b.doc_id
-        GROUP BY 1, 2
-    )"""
-
-
 def _xxhash_verified_pairs(
-    spark, docs, tau_num: int, tau_den: int, persist_sh: bool = False
-):
+    docs: DataFrame, sh: DataFrame, tau_num: int, tau_den: int
+) -> DataFrame:
     """Shared production MinHash pipeline (signature → LSH band →
-    exact verify), returning the exact-verified duplicate pairs with
-    their integer intersection/union stats.
+    exact verify): the (doc_a, doc_b, n_inter, n_union) pairs whose
+    exact Jaccard over the md5 shingle-hash relation ``sh`` reaches
+    tau_num/tau_den.
 
-    Signatures are built with Spark's native ``xxhash64`` (whole-
-    stage-codegen JVM hashing) instead of the md5-prefix hash the
-    DuckDB-replayable dedup queries use; the k permutations are the
-    same affine (a*h+b) mod 2^31-1 transforms — identical plan shape
-    with only the digest swapped (tools/hashbench.py carries the
-    measured gap).  The md5-hashed shingle relation appears only on
-    the VERIFY side (exact candidate verification, candidate-sized).
+    Signatures are ``minhash_wide`` over Spark's native ``xxhash64``
+    digest of the same shingles (whole-stage-codegen JVM hashing)
+    instead of the md5-prefix hash the DuckDB-replayable dedup
+    queries use — identical plan shape with only the digest swapped
+    (tools/hashbench.py carries the measured gap). The digest is
+    already reduced mod 2^31-1, so ``minhash_wide``'s own reduction
+    is the identity. The md5-hashed ``sh`` appears only on the
+    candidate-sized VERIFY side.
 
     Scale shape: one shingle shuffle for signatures (k parallel MIN
     aggregates, map-side combined); candidate generation is an
-    equi-join on (slot, minhash) buckets — never all-pairs; the
-    verify join is candidate-sized.  Merge hints pin the corpus-
-    scaled join sides (signature slots, collect_set verify arrays):
-    the post-agg size estimator undervalues them, so the planner
+    equi-join on (slot, minhash) buckets — never all-pairs. The
+    merge hint pins the corpus-scaled signature-slot side: the
+    post-agg size estimator undervalues it, so the planner
     broadcasts — driver-fatal at sf10 (r7 measured-decade finding),
     wrong shape at 100 TB.
     """
-    from axolotls_spark import cacheutil
-    from axolotls_spark.operators import dedup as DD
-
-    # persist_sh: in the production query sh has ONE consumer (the
-    # persisted verify sets), so caching it only pays the InMemory
-    # serialization of the exploded shingle stream (measured 47 s of
-    # task time vs 14 s to recompute — r8 §5 "caching is only worth it
-    # when reused").  The recall cert passes persist_sh=True because
-    # its sh additionally feeds the exact prefix-join and the sample
-    # doc count.
-    sh = DD.doc_shingle_hashes(docs)
-    if persist_sh:
-        sh = cacheutil.track(sh.persist())
-    shraw = spread_for_cpu(docs, "doc_id").select(
+    hx = D.doc_shingles(docs).select(
         "doc_id",
-        F.explode(DD.shingles_col(F.col("text"))).alias("shingle"),
-    ).select(
-        "doc_id",
-        (
-            F.pmod(F.xxhash64(F.col("shingle")), F.lit(DD.MERSENNE_P))
-        ).alias("hx"),
+        F.pmod(F.xxhash64(F.col("shingle")), F.lit(D.MERSENNE_P)).alias("sh"),
     )
-    params = DD.minhash_params(_XXMH_K)
-    sig = shraw.groupBy("doc_id").agg(
-        *[
-            F.min(
-                (F.lit(a) * F.col("hx") + F.lit(b)) % DD.MERSENNE_P
-            ).alias(f"mh_{i}")
-            for i, (a, b) in enumerate(params)
-        ],
-        # Set size rides the signature aggregate for free (same
-        # shuffle) and powers the LOSSLESS length filter below.
-        F.count(F.lit(1)).alias("n_sh_x"),
-    )
-    slots = sig.select(
+    slots = D.minhash_wide(hx, _XXMH_K).select(
         "doc_id",
-        "n_sh_x",
+        "n_sh",
         F.explode(
             F.array(
                 *[
                     F.struct(
                         F.lit(i).cast("int").alias("slot"),
-                        F.col(f"mh_{i}").alias("mh"),
+                        F.col(f"minh_{i}").alias("mh"),
                     )
                     for i in range(_XXMH_K)
                 ]
             )
         ).alias("p"),
-    ).select("doc_id", "n_sh_x", "p.slot", "p.mh")
+    ).select("doc_id", "n_sh", "p.slot", "p.mh")
     # Length filter (SSJoin): J >= tau forces tau_den*min(|a|,|b|) >=
     # tau_num*(|a|+|b|-min) i.e. sizes within the tau band — pairs
     # outside it cannot verify, so dropping them AT the candidate join
     # is lossless and shrinks the verify stream before it is shuffled
     # (r8 §2.3/§3.2; measured −28% candidate pairs at tau=1/2, sf0.1).
-    # NOTE: xxhash-set size equals md5-set size (both count the same
-    # distinct shingle strings, absent intra-doc hash collisions).
-    lmin = F.least(F.col("a.n_sh_x"), F.col("b.n_sh_x"))
-    lmax = F.greatest(F.col("a.n_sh_x"), F.col("b.n_sh_x"))
+    # The xxhash-set size equals the md5-set size (both count the same
+    # distinct shingle strings, absent intra-doc hash collisions) —
+    # pinned by tests/test_dedup.py::test_xxhash_and_md5_set_sizes_agree.
+    lmin = F.least(F.col("a.n_sh"), F.col("b.n_sh"))
+    lmax = F.greatest(F.col("a.n_sh"), F.col("b.n_sh"))
     cand = (
         slots.alias("a")
         .join(
@@ -2374,37 +2251,15 @@ def _xxhash_verified_pairs(
         )
         .distinct()
     )
-    # Persisted: sa/sb below are two join SIDES, and Spark builds the
-    # collect_set aggregate once per side without the pin (r8 §5).
-    sets = cacheutil.track(
-        sh.groupBy("doc_id")
-        .agg(
-            F.collect_set("sh").alias("shs"),
-            F.count(F.lit(1)).alias("n_sh"),
-        )
-        .persist()
+    return D.verify_pairs(cand, sh).filter(
+        F.col("n_inter") * tau_den >= F.col("n_union") * tau_num
     )
-    sa, sb = sets.alias("sa"), sets.alias("sb")
-    inter = F.size(F.array_intersect(F.col("sa.shs"), F.col("sb.shs")))
-    union = F.col("sa.n_sh") + F.col("sb.n_sh") - inter
-    found = (
-        cand.join(sa.hint("merge"), F.col("doc_a") == F.col("sa.doc_id"))
-        .join(sb.hint("merge"), F.col("doc_b") == F.col("sb.doc_id"))
-        .filter(inter * tau_den >= union * tau_num)
-        .select(
-            "doc_a",
-            "doc_b",
-            inter.cast("long").alias("n_inter"),
-            union.cast("long").alias("n_union"),
-        )
-    )
-    return sh, found
 
 
 @register(
     "minhash_xxhash_production",
     oracle=f"""
-    WITH {_xxmh_exact_ctes()}
+    WITH {_SQL_SH}, {_SQL_SIZES_SHARED}
     SELECT doc_a, doc_b,
            CAST(n_shared AS BIGINT) AS n_inter,
            CAST(sa.n_sh + sb.n_sh - n_shared AS BIGINT) AS n_union
@@ -2439,14 +2294,19 @@ def minhash_xxhash_production(spark: SparkSession, sf_dir: str) -> DataFrame:
     gamble).  Output is integer-only (ids + intersection/union
     counts): no float crosses the engine boundary."""
     docs = load_table(spark, sf_dir, "documents")
-    _, found = _xxhash_verified_pairs(spark, docs, *_XXMH_TAU)
-    return found
+    # Not persisted: sh has ONE consumer here (the persisted verify
+    # sets), so caching it would only pay the InMemory serialization
+    # of the exploded shingle stream (measured 47 s of task time vs
+    # 14 s to recompute — r8 §5 "caching is only worth it when
+    # reused").
+    return _xxhash_verified_pairs(docs, D.doc_shingle_hashes(docs), *_XXMH_TAU)
 
 
 @register(
     "minhash_xxhash_recall_cert",
     oracle=f"""
-    WITH {_xxmh_exact_ctes(f"WHERE doc_id % {_XXMH_SAMPLE_MOD} = 0")},
+    WITH {_sql_sh(f"WHERE doc_id % {_XXMH_SAMPLE_MOD} = 0")},
+    {_SQL_SIZES_SHARED},
     true_pairs AS (
         SELECT doc_a, doc_b
         FROM shared
@@ -2482,21 +2342,15 @@ def minhash_xxhash_recall_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     recall_ok is 1 iff 10*found >= 9*true on the sample (or no true
     pairs) — found itself is xxhash-specific so only the verified
     bound crosses the engine boundary."""
-    from axolotls_spark.operators import dedup as DD
-
     tau_num, tau_den = _XXMH_TAU
     docs = load_table(spark, sf_dir, "documents").filter(
         F.col("doc_id") % _XXMH_SAMPLE_MOD == 0
     )
-    sh, found_pairs = _xxhash_verified_pairs(
-        spark, docs, tau_num, tau_den, persist_sh=True
-    )
-    # Reuse the verify path's persisted shingle relation for the exact
-    # ground-truth join (r8 §2.3): identical (doc_id, sh) relation —
-    # previously scanned and md5-hashed the sample twice.
-    truth = DD.jaccard_prefix_pairs(
-        docs, tau_num=tau_num, tau_den=tau_den, sh=sh
-    )
+    # Persisted: ONE md5 shingle relation feeds the verify sets, the
+    # exact ground-truth join and the sample doc count (r8 §2.3).
+    sh = cacheutil.track(D.doc_shingle_hashes(docs).persist())
+    found_pairs = _xxhash_verified_pairs(docs, sh, tau_num, tau_den)
+    truth = D.jaccard_prefix_pairs(sh, tau_num=tau_num, tau_den=tau_den)
     n_found = found_pairs.agg(F.count(F.lit(1)).alias("n_found"))
     n_true = truth.agg(F.count(F.lit(1)).alias("n_true_pairs"))
     n_docs = sh.select("doc_id").distinct().agg(

@@ -27,9 +27,8 @@ def _py_minhash(text: str, k: int, n: int = 3) -> dict[int, int]:
 def test_minhash_matches_python_reference(spark):
     text = "the quick brown fox jumps over the lazy dog again and again"
     df = spark.createDataFrame([(1, text)], "doc_id: long, text: string")
-    got = {
-        r.i: r.minh for r in D.minhash_signatures(df, k=4).collect()
-    }
+    sh = D.doc_shingle_hashes(df)
+    got = {r.i: r.minh for r in D.minhash_signatures(sh, k=4).collect()}
     assert got == _py_minhash(text, 4)
 
 
@@ -41,7 +40,9 @@ def test_identical_docs_are_lsh_candidates(spark):
     )
     pairs = {
         (r.doc_a, r.doc_b)
-        for r in D.near_dup_candidate_pairs(df, k=8, bands=2).collect()
+        for r in D.near_dup_candidate_pairs(
+            D.doc_shingle_hashes(df), k=8, bands=2
+        ).collect()
     }
     assert (1, 2) in pairs
     assert all(3 not in p for p in pairs)
@@ -53,7 +54,7 @@ def test_jaccard_exact_values(spark):
         [(1, "a b c d"), (2, "a b c x")],  # shingles: {abc,bcd} vs {abc,bcx}
         "doc_id: long, text: string",
     )
-    rows = D.jaccard_pairs(df, threshold=0.0).collect()
+    rows = D.jaccard_pairs(D.doc_shingle_hashes(df), threshold=0.0).collect()
     assert len(rows) == 1
     assert abs(rows[0].jaccard - 1 / 3) < 1e-12  # 1 shared / 3 union
 
@@ -194,18 +195,18 @@ def test_prefix_filter_shrinks_candidates_and_stays_complete(spark):
     from axolotls_spark.io.sources import load_table
 
     docs = load_table(spark, "/root/testdata/sf0.001", "documents")
+    sh = D.doc_shingle_hashes(docs)
     got = {
         (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in D.jaccard_prefix_pairs(docs, tau_num=1, tau_den=5).collect()
+        for r in D.jaccard_prefix_pairs(sh, tau_num=1, tau_den=5).collect()
     }
     want = {
         (r.doc_a, r.doc_b, round(r.jaccard, 9))
-        for r in D.jaccard_pairs(docs, threshold=0.2).collect()
+        for r in D.jaccard_pairs(sh, threshold=0.2).collect()
     }
     assert got == want and got  # identical AND non-trivial
 
     # Candidate-stream sizes: distinct pairs generated by each scheme.
-    sh = D.doc_shingle_hashes(docs)
     full = (
         sh.alias("a")
         .join(
@@ -242,6 +243,31 @@ def test_prefix_filter_shrinks_candidates_and_stays_complete(spark):
     )
     assert pruned < full * 0.9  # measurably fewer candidates
     assert pruned >= len({(a, b) for a, b, _ in got})  # still complete
+
+
+def test_xxhash_and_md5_set_sizes_agree(spark, sf_dir):
+    """The premise of minhash_xxhash_production's lossless length
+    filter: per doc, minhash_wide's n_sh over the xxhash-digest
+    relation equals n_sh over the md5 relation, and both equal the
+    Python shingle-set size."""
+    from axolotls_spark.io.sources import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    xx = D.doc_shingles(docs).select(
+        "doc_id",
+        F.pmod(F.xxhash64("shingle"), F.lit(D.MERSENNE_P)).alias("sh"),
+    )
+    n_md5, n_xx = (
+        {r.doc_id: r.n_sh for r in D.minhash_wide(sh, k=1).collect()}
+        for sh in (D.doc_shingle_hashes(docs), xx)
+    )
+    want = {}
+    for r in docs.select("doc_id", "text").collect():
+        toks = r.text.split()
+        grams = {" ".join(toks[i : i + 3]) for i in range(len(toks) - 2)}
+        if grams:
+            want[r.doc_id] = len(grams)
+    assert n_md5 == n_xx == want and want
 
 
 def _py_winnow(text: str, k: int = 3, w: int = 4) -> set[tuple[int, int]]:

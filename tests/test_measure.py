@@ -82,12 +82,16 @@ def test_cores_default(monkeypatch):
     assert measure.cores() == 7
 
 
-@pytest.mark.parametrize("tool", ["measure", "perfgate", "scaling", "stress"])
+@pytest.mark.parametrize("tool", [
+    "measure", "perfgate", "scaling", "stress", "hashbench", "parity",
+    "plan_report", "streamscale", "synth_scale",
+])
 def test_tool_imports_as_script(tool):
     """A fresh interpreter with tools/ first on sys.path, as when the
     tool runs as a script, so a module there that shadows the stdlib
     (a tools/profile.py hides the ``profile`` that pyspark.profiler
-    imports through cProfile) breaks this import."""
+    imports through cProfile) breaks this import, and so does a tool
+    that imports a name the package no longer has."""
     code = ("import importlib.util, sys; sys.path.insert(0, sys.argv[1]); "
             "spec = importlib.util.spec_from_file_location('t', sys.argv[2]); "
             "spec.loader.exec_module(importlib.util.module_from_spec(spec))")

@@ -25,53 +25,29 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import functions as F
 
 from axolotls_spark.io.sources import load_table, spread_for_cpu
-from axolotls_spark.operators.dedup import (
-    MERSENNE_P,
-    minhash_params,
-    shingles_col,
-    token_hash,
-)
+from axolotls_spark.operators import dedup as D
 from axolotls_spark.session import get_spark
 
 
 def _sig_md5(docs, k: int):
-    sh = docs.select(
-        "doc_id",
-        F.explode(shingles_col(F.col("text"))).alias("shingle"),
-    ).select("doc_id", token_hash(F.col("shingle")).alias("sh"))
-    params = minhash_params(k)
-    shp = F.col("sh") % MERSENNE_P
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * shp + F.lit(b)) % MERSENNE_P).alias(f"m_{i}")
-            for i, (a, b) in enumerate(params)
-        ]
-    )
+    return D.minhash_wide(D.doc_shingle_hashes(docs), k)
 
 
 def _sig_xxhash(docs, k: int):
     # Identical plan shape to _sig_md5 with only the digest swapped:
     # one xxhash64 per raw shingle, then the same frozen affine perms.
-    sh = docs.select(
-        "doc_id",
-        F.explode(shingles_col(F.col("text"))).alias("shingle"),
-    ).select(
-        "doc_id",
-        F.pmod(F.xxhash64(F.col("shingle")), F.lit(MERSENNE_P)).alias("sh"),
-    )
-    params = minhash_params(k)
-    shp = F.col("sh")
-    return sh.groupBy("doc_id").agg(
-        *[
-            F.min((F.lit(a) * shp + F.lit(b)) % MERSENNE_P).alias(f"m_{i}")
-            for i, (a, b) in enumerate(params)
-        ]
+    return D.minhash_wide(
+        D.doc_shingles(docs).select(
+            "doc_id",
+            F.pmod(F.xxhash64(F.col("shingle")), F.lit(D.MERSENNE_P)).alias("sh"),
+        ),
+        k,
     )
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.1"
-    k = int(sys.argv[2]) if len(sys.argv) > 2 else 16
+    k = int(sys.argv[2]) if len(sys.argv) > 2 else 12
     spark = get_spark("hashbench")
     spark.sparkContext.setLogLevel("ERROR")
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
