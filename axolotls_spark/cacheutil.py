@@ -1,42 +1,19 @@
-"""Shared caller-owned cache registry.
+"""The one cache release point.
 
-Several operators persist() intermediate relations whose lifetime must
-outlive the function call (the returned DataFrames are lazy — the
-cached relation is re-read when the caller finally materializes them,
-so unpersisting inside the operator would silently re-compute the
-expensive upstream per consumer).  Those persists are *tracked* here,
-and owners of the session (bench harness, parity runner, tests)
-release them via :func:`release_caches` once results are materialized,
-instead of cached relations accumulating for the life of the session.
-
-This generalizes the registry that ``operators/clustering.py`` grew in
-round 4 so every module with the same contract (``operators/prefix.py``
-etc.) shares one release point.
+Code may persist() a relation that its lazy result re-reads: the
+returned DataFrame is only materialized by the caller, so unpersisting
+inside the function would recompute the expensive upstream once per
+consumer.  The session owner (bench harness, parity runner, tests)
+calls :func:`release_caches` after materializing results, so no
+persisted relation outlives the query that made it.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
-
-_CACHED: list[DataFrame] = []
+from pyspark.sql import SparkSession
 
 
-def track(df: DataFrame) -> DataFrame:
-    """Record a persisted DataFrame for later release; returns it."""
-    _CACHED.append(df)
-    return df
-
-
-def release_caches() -> int:
-    """Unpersist every tracked relation. Call after the returned
-    DataFrames have been materialized (results collected or written);
-    returns the number of handles released."""
-    n = 0
-    while _CACHED:
-        df = _CACHED.pop()
-        try:
-            df.unpersist()
-            n += 1
-        except Exception:  # session already stopped — nothing to free
-            pass
-    return n
+def release_caches() -> None:
+    """Clear the session cache: every persisted relation of the running
+    application."""
+    SparkSession.active().catalog.clearCache()

@@ -25,20 +25,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-# ---------------------------------------------------------------------------
-# Caller-owned cache contract.  The Lloyd loops persist the exploded
-# corpus and every iteration's codebook; those relations MUST stay
-# cached until the caller materializes the returned (lazy) DataFrames
-# — unpersisting inside the trainer would silently re-explode the
-# corpus per iteration.  So persists are *tracked* in the shared
-# registry (axolotls_spark/cacheutil.py), and owners of the session
-# (bench harness, parity runner, tests) release them via
-# ``release_caches()`` (or a blanket ``spark.catalog.clearCache()``)
-# once results are materialized, instead of cached relations
-# accumulating for the life of the session.
-# ---------------------------------------------------------------------------
-from axolotls_spark.cacheutil import release_caches, track as _track  # noqa: E402,F401
-
 
 def explode_long(emb: DataFrame, id_col: str = "vec_id",
                  vec_col: str = "embedding") -> DataFrame:
@@ -104,14 +90,14 @@ def kmeans(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
     centroids from scratch inside iteration i+1, and lineage depth —
     hence recomputation — grows quadratically with ``iters``.
     """
-    long = _track(explode_long(emb).persist())
+    long = explode_long(emb).persist()
     centroids = (
         long.filter(F.col("vec_id") < k)
         .select(F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval"))
     )
     assign = None
     for _ in range(iters):
-        centroids = _track(centroids.persist())
+        centroids = centroids.persist()
         assign = kmeans_assign(long, centroids)
         centroids = kmeans_update(long, assign)
     return assign, centroids
@@ -159,7 +145,6 @@ def pq_train(
         )
         .persist()
     )
-    long = _track(long)
     return pq_train_long(long, k=k, iters=iters)
 
 
@@ -206,14 +191,14 @@ def pq_train_long(
         )
 
     for _ in range(iters):
-        cents = _track(cents.persist())
+        cents = cents.persist()
         a = assign(cents)
         cents = (
             long.join(a.select("vec_id", "sub", "cid"), ["vec_id", "sub"])
             .groupBy("cid", "sub", "pos")
             .agg(F.avg("val").alias("cval"))
         )
-    cents = _track(cents.persist())
+    cents = cents.persist()
     return assign(cents), cents
 
 

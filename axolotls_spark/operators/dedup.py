@@ -38,7 +38,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from axolotls_spark import cacheutil
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import spread_for_cpu
 from axolotls_spark.plans.audit import record_loop_plan
@@ -256,7 +255,7 @@ def verify_pairs(cand: DataFrame, sh: DataFrame) -> DataFrame:
     the raised 64 MB threshold lets it — fine at sf0.1, driver-fatal
     at sf10, and the wrong shape at 100 TB.
     """
-    sets = cacheutil.track(
+    sets = (
         sh.groupBy("doc_id")
         .agg(
             F.collect_set("sh").alias("shs"),
@@ -327,15 +326,15 @@ def connected_dedup_groups(
     2^rounds — a 12-deep duplicate chain OOMed the driver purely on
     plan serialization before this was checkpointed.
     """
-    # Cache the edge list: it is re-joined every round, and without
-    # the cache each round would re-execute the whole upstream
+    # Persist the edge list: it is re-joined every round, and without
+    # the persist each round would re-execute the whole upstream
     # candidate-pair pipeline (shingle → minhash → banding).
     edges = (
         pairs.selectExpr(f"doc_a AS src", f"doc_b AS dst")
         .unionAll(pairs.selectExpr("doc_b AS src", "doc_a AS dst"))
-    ).cache()
+    ).persist()
     labels = docs.select(F.col(id_col).alias("id"), F.col(id_col).alias("rep"))
-    labels = labels.cache()
+    labels = labels.persist()
     fp = _relation_fingerprint(labels, ("id", "rep"))
     for _ in range(max_iters):
         neighbor_min = (
@@ -476,11 +475,11 @@ def jaccard_prefix_pairs(
     need = F.expr(
         f"(n_sh * {tau_num} + {tau_den} - 1) div {tau_den}"
     )
-    # Persisted (caller-owned): the self-join below otherwise BUILDS
+    # Persisted: the self-join below otherwise BUILDS
     # THE WHOLE ranked/window subtree twice — Spark does not share
     # common subtrees across join sides (r8 plan audit: the a and b
     # sides each carried their own dfreq+window cascade).
-    pref = cacheutil.track(
+    pref = (
         ranked.filter(F.col("rn") <= F.col("n_sh") - need + 1)
         .select("doc_id", "sh", "rn", "n_sh")
         .persist()

@@ -20,7 +20,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from axolotls_spark.cacheutil import track
 
 DAMPING = 0.85
 ITERS = 5
@@ -53,7 +52,7 @@ def pagerank(edges: DataFrame, seed: str | None = None,
     # spawning shuffle.partitions near-empty tasks; for a graph with
     # a huge rank vector (billions of nodes) drop the repartition and
     # the same plan degrades gracefully to shuffled joins.
-    edges = track(edges.repartition(1).persist())
+    edges = edges.repartition(1).persist()
     # Eager materialization: the persisted graph fans out to nodes /
     # ow / t, whose lazy cache builds RACE at the first action and
     # each re-runs the full corpus-aggregation lineage (r8 §16). One
@@ -67,7 +66,7 @@ def pagerank(edges: DataFrame, seed: str | None = None,
     # 1-row count relation — broadcast, never a driver .count().
     ncnt = nodes.agg(F.count(F.lit(1)).cast("double").alias("n"))
     ow = edges.groupBy("src").agg(F.sum("w").alias("ow"))
-    t = track(
+    t = (
         edges.join(ow, "src")
         .select("src", "dst", (F.col("w") / F.col("ow")).alias("wn"))
         .persist()
@@ -80,7 +79,7 @@ def pagerank(edges: DataFrame, seed: str | None = None,
     # side per iteration.  Collapsing base to SinglePartition (25
     # rows) makes all loop inputs co-partitioned.
     base = nodes if seed is not None else nodes.crossJoin(F.broadcast(ncnt))
-    base = track(base.repartition(1).persist())
+    base = base.repartition(1).persist()
     if seed is None:
         start = F.lit(1.0) / F.col("n")
         restart = F.lit(1.0 - damping) / F.col("n")

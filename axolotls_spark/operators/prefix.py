@@ -33,7 +33,6 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from axolotls_spark.cacheutil import track as _track
 
 __all__ = [
     "ranked_cumsum",
@@ -77,12 +76,9 @@ def ranked_cumsum(
     # persisted relation anywhere upstream breaks that reuse and the
     # offsets stop matching the local row_numbers (observed: ranks
     # off by whole partitions, nondeterministically).  Persisting the
-    # ranged relation freezes one partitioning for both consumers;
-    # follows the caller-owned cache contract — the handle is tracked
-    # in the shared registry (cacheutil.release_caches()), so session
-    # owners can free per-call persists without a blanket clearCache.
+    # ranged relation freezes one partitioning for both consumers.
     extra = extra_cums or {}
-    ranged = _track(
+    ranged = (
         df.repartitionByRange(n_parts, *order_cols)
         .withColumn(_PART, F.spark_partition_id())
         .persist()
@@ -149,7 +145,7 @@ def order_statistic_values(
     keys to one partition, so per-partition counts locate ranks
     consistently.
     """
-    ranged = _track(
+    ranged = (
         df.select(F.col(value_col).alias("_v"))
         .repartitionByRange(n_parts, F.asc("_v"))
         .withColumn(_PART, F.spark_partition_id())
@@ -207,7 +203,7 @@ def exclusive_prefix_max(
     Pareto-optimal iff its y beats the exclusive prefix max taken in
     x order.  ``order_cols`` must form a total order.
     """
-    ranged = _track(
+    ranged = (
         df.repartitionByRange(n_parts, *order_cols)
         .withColumn(_PART, F.spark_partition_id())
         .persist()

@@ -24,7 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from axolotls_spark import cacheutil
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import tokens_col
@@ -305,7 +304,7 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf feeds the df aggregate AND the weight projection — persist +
     # eager count so the corpus tokenizes once, not per consumer and
     # not per racing lazy cache build (r8 §16).
-    tf = cacheutil.track(
+    tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
         .persist()
@@ -340,7 +339,6 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (two full corpus passes at 100 TB).  One pass, cached.
         .persist()
     )
-    u = cacheutil.track(u)
     # Serialize the cache build — the two join sides' lazy builds
     # otherwise race and each re-runs the normalize chain (r8 §16).
     u.count()
@@ -547,7 +545,7 @@ def cooccurrence_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     # document-frequency aggregate (via the vocab cut) and the pair
     # expansion — without the pin the corpus tokenize+distinct ran
     # once per consumer (r8 §5).
-    toks = cacheutil.track(
+    toks = (
         docs.select(
             "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
         )
@@ -1581,7 +1579,7 @@ def graph_triangle_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The canonical edge relation feeds all three legs of the
     # triangle join — persist it, or the whole fact-table lineage
     # (6 scans) executes once PER LEG (18 scans total).
-    und = cacheutil.track(
+    und = (
         trade_edges(spark, sf_dir)
         .filter(F.col("src") != F.col("dst"))
         .select(
@@ -2534,7 +2532,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
             )
         ).alias("e")
     ).select("e.src", "e.dst", "e.w")
-    ed = cacheutil.track(
+    ed = (
         und.groupBy("src", "dst")
         .agg(F.sum("w").alias("w"))
         .repartition(1)
@@ -3147,7 +3145,7 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Single-pass undirection (explode of both orientations) — a
     # union with the swap would run the corpus lineage twice.
-    und = cacheutil.track(
+    und = (
         e0.select(
             F.explode(
                 F.array(
@@ -3167,7 +3165,7 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
         # alive feeds BOTH endpoint joins of the next degree count —
         # persist it per round, or the lineage doubles every peel
         # (same cut-the-lineage move as graph.py / kmeans).
-        alive = cacheutil.track(alive.persist())
+        alive = alive.persist()
         a = alive.select(F.col("node").alias("au"))
         b = alive.select(F.col("node").alias("av"))
         deg = (
@@ -3676,10 +3674,12 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one edge aggregation; each half-iteration joins the
     broadcast 25-row score vector with the persisted edge list, and
     the normalizer is a 1-row broadcast sum — no driver state."""
-    edges = cacheutil.track(
-        trade_edges(spark, sf_dir).repartition(1).persist()
-    )
-    nodes = cacheutil.track(
+    edges = trade_edges(spark, sf_dir).repartition(1).persist()
+    # Eager materialization, as in pagerank: nodes and every
+    # half-iteration read the persisted edges, whose lazy cache builds
+    # would otherwise race at the first action and vary the job count.
+    edges.count()
+    nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
@@ -4438,16 +4438,14 @@ def apsp_trade_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     squaring is a ≤|V|²-row self-join, persisted per round so the
     doubled references resolve to one cached relation.
     """
-    edges = cacheutil.track(
-        trade_edges(spark, sf_dir).repartition(1).persist()
-    )
+    edges = trade_edges(spark, sf_dir).repartition(1).persist()
     tw = edges.agg(F.sum("w").alias("t"))
     nodes = (
         edges.select(F.col("src").alias("v"))
         .union(edges.select(F.col("dst").alias("v")))
         .distinct()
     )
-    d = cacheutil.track(
+    d = (
         edges.crossJoin(F.broadcast(tw))
         .select("src", "dst", F.log(F.col("t") / F.col("w")).alias("c"))
         .union(nodes.select(F.col("v").alias("src"),
@@ -4463,7 +4461,7 @@ def apsp_trade_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
                      F.col("c").alias("ca"))
         b = d.select(F.col("src").alias("k"), F.col("dst").alias("j"),
                      F.col("c").alias("cb"))
-        d = cacheutil.track(
+        d = (
             a.join(F.broadcast(b), "k")
             .groupBy(F.col("i").alias("src"), F.col("j").alias("dst"))
             .agg(F.min(F.col("ca") + F.col("cb")).alias("c"))
@@ -5267,8 +5265,6 @@ def glm_poisson_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the feature relation is persisted and scanned once
     per IRLS aggregate (each a 1-row moment fold against the broadcast
     current beta); nothing iterative touches the driver."""
-    from axolotls_spark.cacheutil import track
-
     spend = (
         load_table(spark, sf_dir, "orders")
         .groupBy("o_custkey")
@@ -5277,7 +5273,7 @@ def glm_poisson_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey", (F.col("c_acctbal").cast("double") / 1000.0).alias("x")
     )
-    base = track(
+    base = (
         cust.join(spend, cust.c_custkey == spend.o_custkey, "left")
         .select(
             F.coalesce(F.col("n_orders"), F.lit(0)).cast("double").alias("y"),
@@ -5378,8 +5374,6 @@ def psm_caliper_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket occupancy, never |treated|x|controls| — the oracle's
     quadratic join is the independent completeness proof.
     """
-    from axolotls_spark.cacheutil import track
-
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         F.col("c_acctbal").cast("double").alias("x"),
@@ -5390,7 +5384,7 @@ def psm_caliper_att(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(F.sum("o_totalprice").alias("yo"))
     )
-    base = track(
+    base = (
         cust.join(spend, cust.c_custkey == spend.o_custkey, "left")
         .select(
             "c_custkey", "x", "t", F.coalesce(F.col("yo"), F.lit(0.0)).alias("y")
@@ -5410,7 +5404,7 @@ def psm_caliper_att(spark: SparkSession, sf_dir: str) -> DataFrame:
     coef = m.select(
         bexp.alias("b"), ((F.col("st") - bexp * F.col("sx")) / F.col("n")).alias("a")
     )
-    scored = track(
+    scored = (
         base.crossJoin(F.broadcast(coef))
         .select(
             "c_custkey", "t", "y", "x",
@@ -5686,7 +5680,7 @@ def tree_depth2_cart(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ]
     )
-    binned = cacheutil.track(
+    binned = (
         base.crossJoin(F.broadcast(rng))
         .select(
             "pos",
@@ -8495,9 +8489,9 @@ def gbdt_boost_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-feature relation (partitioned window), and the argmax as
     orderBy().limit(1) — TakeOrderedAndProject, never a global rank
     window.  The corpus relation is persisted once and reused by
-    both rounds and both RMSE folds (caller-owned cache contract)."""
+    both rounds and both RMSE folds."""
     li = load_table(spark, sf_dir, "lineitem")
-    base = cacheutil.track(
+    base = (
         li.select(
             F.col("l_quantity").alias("q"),
             F.col("l_discount").alias("d"),
@@ -9258,13 +9252,13 @@ def tail_dependence_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     o = load_table(spark, sf_dir, "orders")
     # base feeds BOTH rank passes; ranked feeds the count and the
-    # lambda fold — persist both (caller-owned) so the per-customer
+    # lambda fold — persist both so the per-customer
     # aggregate and the rank join each run once, not per consumer.
     # (r8: eager counts were tried and REVERTED — jobs 27->30, tasks
     # 585->619 with no rebuild eliminated; AQE's TableCacheQueryStage
     # already serializes these cache builds, so the counts were pure
     # overhead here.)
-    base = cacheutil.track(
+    base = (
         o.groupBy(F.col("o_custkey").alias("k"))
         .agg(
             F.sum("o_totalprice").alias("x"),
@@ -9281,7 +9275,7 @@ def tail_dependence_lambda(spark: SparkSession, sf_dir: str) -> DataFrame:
         base, [F.desc("y"), F.asc("k")], "one", rank_name="ry",
         cum_name="__c2",
     ).select("k", "ry")
-    ranked = cacheutil.track(rx.join(ry, "k").persist())
+    ranked = rx.join(ry, "k").persist()
     n = ranked.agg(F.count(F.lit(1)).cast("long").alias("n"))
     qs = spark.createDataFrame([(q,) for q in _TAIL_QS], ["p"])
     # ceil((100-p)/100 * n) in pure INTEGER arithmetic: a float
@@ -10365,15 +10359,15 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     `clustering_coefficient_nodes`.
 
     The edge relation feeds degree, wedge/two-hop candidates, and the
-    closure joins in both consumers — persist once (caller-owned,
-    tracked) AND materialize eagerly so the consumers' racing lazy
-    cache builds don't each re-run the lineage (r8 §16; PLANS.md
-    showed 22 lineitem scans without the persist).  Edge generation
-    fans out per ORDER via per-basket combination expansion over ONE
-    l_orderkey exchange (basket-bounded: <= 7 lineitems per order in
-    TPC-H, so pairs-per-order is a constant) — the old lineitem
-    self-join exchanged and sorted the filtered scan twice for the
-    identical pair set (r8 §2.4)."""
+    closure joins in both consumers — persist once AND materialize
+    eagerly so the consumers' racing lazy cache builds don't each
+    re-run the lineage (r8 §16; PLANS.md showed 22 lineitem scans
+    without the persist).  Edge generation fans out per ORDER via
+    per-basket combination expansion over ONE l_orderkey exchange
+    (basket-bounded: <= 7 lineitems per order in TPC-H, so
+    pairs-per-order is a constant) — the old lineitem self-join
+    exchanged and sorted the filtered scan twice for the identical
+    pair set (r8 §2.4)."""
     li = (
         load_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_quantity") >= _LINKPRED_MIN_QTY)
@@ -10388,7 +10382,7 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
         .distinct()
     )
-    edges = cacheutil.track(edges.persist())
+    edges = edges.persist()
     edges.count()
     return edges
 
@@ -10465,7 +10459,7 @@ def link_prediction_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the same exchange — the old adjacency self-join exchanged and
     # sorted the doubled edge stream twice, r8 §2.4). Persisted +
     # eagerly materialized (r8 §16).
-    nbrs = cacheutil.track(
+    nbrs = (
         und.groupBy("u")
         .agg(F.array_sort(F.collect_list("v")).alias("ns"))
         .persist()

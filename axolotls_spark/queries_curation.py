@@ -46,7 +46,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from axolotls_spark import cacheutil
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import (
@@ -224,7 +223,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assign, _ = CLU.kmeans(emb, k=8, iters=2)
-    mem = cacheutil.track(
+    mem = (
         assign.select("vec_id", "cid")
         .join(emb, "vec_id")
         .select(
@@ -359,7 +358,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     )
-    tf = cacheutil.track(
+    tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
         .persist()
@@ -367,9 +366,7 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Eager count: the three consumers' lazy cache builds otherwise
     # race and each re-runs the corpus tokenize (r8 §16).
     tf.count()
-    dl = cacheutil.track(
-        tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
-    )
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     stats = dl.agg(
         F.avg("dl").alias("avgdl"),
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -646,7 +643,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # 17->24, tasks 394->430 with nothing eliminated; the rounds'
         # cache builds already serialize through the broadcast-merge
         # dependency chain.)
-        v = cacheutil.track(v.persist())
+        v = v.persist()
         pairs = (
             v.select(F.split("sym", " ").alias("arr"), "cnt")
             .filter(F.size("arr") >= 2)
@@ -663,7 +660,7 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy("pair")
             .agg(F.sum("cnt").alias("pc"))
         )
-        top = cacheutil.track(
+        top = (
             pairs.orderBy(F.desc("pc"), "pair")
             .limit(1)
             .select("pair", F.expr("replace(pair, ' ', '')").alias("merged"),
@@ -751,7 +748,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 is orderBy+limit on the ROUNDED score (ties by doc_id),
     so cross-engine float noise cannot reorder the cut."""
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = cacheutil.track(
+    toks = (
         docs.select(
             "doc_id", "lang",
             F.explode(tokens_col(F.col("text"))).alias("term"),
@@ -2012,7 +2009,6 @@ def epoch_shuffle_order(spark: SparkSession, sf_dir: str) -> DataFrame:
     exactly N rows.  Everything after the rank is one hash aggregate
     to epochs x shards = 32 rows.  All checksum arithmetic is exact
     BIGINT."""
-    from axolotls_spark import cacheutil
     from axolotls_spark.operators.prefix import ranked_cumsum
 
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
@@ -2164,7 +2160,7 @@ def greedy_max_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer gains with a doc_id tie-break, so both engines must
     select the identical subset in the identical order."""
     docs = load_table(spark, sf_dir, "documents")
-    sh = cacheutil.track(doc_shingle_hashes(docs).persist())
+    sh = doc_shingle_hashes(docs).persist()
     uni = sh.agg(F.countDistinct("sh").alias("u"))
 
     # Round structure (r8 optimization): every round's not-yet-covered

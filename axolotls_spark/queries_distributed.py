@@ -1263,13 +1263,11 @@ def kendall_tau_concordance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sqrt(a)*sqrt(b) — two correctly-rounded sqrts of exact integers,
     then one rounded multiply — an identical op sequence, then
     float32."""
-    from axolotls_spark import cacheutil
-
     li = load_table(spark, sf_dir, "lineitem")
     # The <=550-row contingency relation feeds FIVE consumers (both
     # sides of the pair join, two tie marginals, the total); persist
     # so the fact table is scanned exactly once.
-    cells = cacheutil.track(
+    cells = (
         li.groupBy(
             F.col("l_quantity").alias("x"), F.col("l_discount").alias("y")
         )
@@ -1403,8 +1401,6 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     near-continuous, so the distinct relation is corpus-sized and a
     global ORDER BY window would funnel it through one task); the
     argmax is one TakeOrdered over that relation."""
-    from axolotls_spark import cacheutil
-
     o = load_table(spark, sf_dir, "orders")
     c = load_table(spark, sf_dir, "customer")
     s = (
@@ -1418,7 +1414,7 @@ def ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two consumers (global totals + the prefix relation) — each
     # re-ran the orders x customer join and the distinct-value
     # aggregate without the pin.
-    dv = cacheutil.track(
+    dv = (
         s.groupBy("v")
         .agg(
             F.sum("a").cast("long").alias("ca"),
@@ -1737,15 +1733,13 @@ def weighted_median_unit_price(
         .alias("v"),
         F.col("l_quantity").cast("long").alias("wt"),
     )
-    from axolotls_spark import cacheutil
-
     # One corpus pass for BOTH medians: the distinct-value relation
     # carries the quantity weight AND the row frequency, so the
     # unweighted median is percentile(v, 0.5, freq) over it — exactly
     # the replicated-row semantics of percentile(v, 0.5) on the raw
     # rows — instead of a second corpus aggregate. Persisted: three
     # consumers (total weight, prefix relation, unweighted median).
-    dv = cacheutil.track(
+    dv = (
         base.groupBy("v")
         .agg(
             F.sum("wt").cast("long").alias("w"),

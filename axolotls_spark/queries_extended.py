@@ -1754,9 +1754,6 @@ def hll_intersection_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.max("rho").alias("max_rho"))
         .persist()
     )
-    from axolotls_spark import cacheutil
-
-    cacheutil.track(regs)
     states = regs.unionAll(
         regs.groupBy("reg").agg(F.max("max_rho").alias("max_rho"))
         .select(F.lit("U").alias("s"), "reg", "max_rho")
@@ -1926,10 +1923,8 @@ def ams_f2_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).cast("long").alias("c")
     )
     # cnt feeds the sketch components, both exact-F2 legs, and the
-    # global regroup — persist the key-domain relation once (tracked).
-    from axolotls_spark import cacheutil
-
-    cnt = cacheutil.track(cnt.persist())
+    # global regroup — persist the key-domain relation once.
+    cnt = cnt.persist()
     spine = F.broadcast(
         spark.range(_AMS_K).select(F.col("id").cast("int").alias("j"))
     )
@@ -1951,7 +1946,7 @@ def ams_f2_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Referenced by BOTH the per-flag estimate and the merge witness
     # — without the pin the x32 md5 sign ladder over the key domain
     # (the query's dominant compute) runs twice.
-    comp = cacheutil.track(
+    comp = (
         cnt.crossJoin(spine)
         .groupBy("flag", "j")
         .agg(F.sum(F.col("c") * sign()).cast("long").alias("s"))
@@ -1965,9 +1960,7 @@ def ams_f2_sketch_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.col("c") * F.col("c")).cast("long").alias("f2_exact"),
     )
     # Two consumers (independent witness sketch + exact global F2).
-    gcnt = cacheutil.track(
-        cnt.groupBy("k").agg(F.sum("c").cast("long").alias("c")).persist()
-    )
+    gcnt = cnt.groupBy("k").agg(F.sum("c").cast("long").alias("c")).persist()
     gcomp = (
         gcnt.crossJoin(spine)
         .groupBy("j")

@@ -589,14 +589,12 @@ def pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection itself still runs over the whole corpus — its scores
     feed the per-component variance that must equal the eigenvalue.
     """
-    from axolotls_spark.cacheutil import track
     from axolotls_spark.operators.pca import gram_moments, principal_components
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # comps is tiny (k*d rows) but its lineage is the corpus-wide
-    # moment sketch; three consumers below → persist (caller-owned
-    # cache contract, released via cacheutil.release_caches()).
-    comps = track(principal_components(gram_moments(emb), 8).persist())
+    # moment sketch; three consumers below → persist.
+    comps = principal_components(gram_moments(emb), 8).persist()
 
     long = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "val_f")

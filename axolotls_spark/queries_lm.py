@@ -93,18 +93,16 @@ def bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     no smoothing floor is needed; held-out scoring adds a COALESCE
     to the backoff term.
     """
-    from axolotls_spark import cacheutil
-
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
     # Tokenization feeds both consumers (unigram counts, bigram
     # stream) — persist AND materialize it eagerly: the lazy cache
     # builds of concurrent consumers race and each re-runs the
     # scan+split pipeline (r8 §16).
-    toks = cacheutil.track(
+    toks = (
         docs.select("doc_id", tokens_col(F.col("text")).alias("t")).persist()
     )
     toks.count()
-    uni = cacheutil.track(
+    uni = (
         toks.select(F.explode("t").alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("double").alias("cu"))
@@ -184,12 +182,10 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     never the corpus). Coverage ratios are exact-integer divisions,
     so the float32 emit is bit-stable across engines.
     """
-    from axolotls_spark import cacheutil
-
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
     # freq feeds both the ranking and the total — persist the
     # Zipf-small relation so the corpus is tokenized exactly once.
-    freq = cacheutil.track(
+    freq = (
         docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -258,10 +254,8 @@ def nucleus_vocab_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     Zipf-small vocab; the cumulative comparison is exact integer
     arithmetic on both engines.
     """
-    from axolotls_spark import cacheutil
-
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    freq = cacheutil.track(
+    freq = (
         docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -438,12 +432,10 @@ def _logreg_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _irls_beta(spark: SparkSession, feats: DataFrame, iters: int = 2) -> DataFrame:
     """Unrolled IRLS: each step one moment aggregate + a Cramer solve
     on the resulting single row. Returns the 1-row (b0, b1, b2),
-    persisted (caller-owned): every consumer references beta under
+    persisted: every consumer references beta under
     several broadcasts (scoring pass, accuracy pass, report row), and
     without the persist each reference re-executes the full
     iters-pass corpus aggregation chain."""
-    from axolotls_spark import cacheutil
-
     beta = spark.range(1).select(
         F.lit(0.0).alias("b0"), F.lit(0.0).alias("b1"), F.lit(0.0).alias("b2")
     )
@@ -456,7 +448,7 @@ def _irls_beta(spark: SparkSession, feats: DataFrame, iters: int = 2) -> DataFra
             F.expr(_OLS_B1).alias("b1"),
             F.expr(_OLS_B2).alias("b2"),
         )
-    return cacheutil.track(beta.persist())
+    return beta.persist()
 
 
 @register(
@@ -739,12 +731,10 @@ def logreg_auc_roc(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = feats.crossJoin(F.broadcast(beta)).select(
         "y", F.expr(_P).alias("p")
     )
-    from axolotls_spark import cacheutil
-
-    # Persisted (caller-owned): t, the ROC walk and the report row all
+    # Persisted: t, the ROC walk and the report row all
     # reference this 64-row histogram — the corpus scoring aggregate
     # must run once, not per reference (same fix as delong_auc_ci).
-    b = cacheutil.track(
+    b = (
         scored.groupBy(
             F.least(F.floor(F.col("p") * 64), F.lit(63))
             .cast("long")
@@ -997,10 +987,8 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fan-out/fan-in relations ride the same bgc aggregate and
     broadcast onto the probe.
     """
-    from axolotls_spark import cacheutil
-
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = cacheutil.track(
+    toks = (
         docs.select("doc_id", tokens_col(F.col("text")).alias("t")).persist()
     )
     toks.count()
@@ -1017,7 +1005,7 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (the probe no longer joins it — cb rides the count window).
     # Eagerly materialized so the three consumers' lazy cache builds
     # don't race (r8 §16).
-    bgc = cacheutil.track(
+    bgc = (
         bg.groupBy("w1", "w2")
         .agg(F.count(F.lit(1)).cast("double").alias("cb"))
         .persist()
@@ -1105,18 +1093,16 @@ def isotonic_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     in SQL.  This is the recalibration step logreg_calibration_bins'
     docstring points at when a quality classifier's scores are
     miscalibrated but rank correctly."""
-    from axolotls_spark import cacheutil
-
     feats = _logreg_features(spark, sf_dir)
     beta = _irls_beta(spark, feats, iters=2)
     scored = feats.crossJoin(F.broadcast(beta)).select(
         "y",
         F.least(F.floor(F.expr(_P) * 10), F.lit(9)).cast("long").alias("bin"),
     )
-    # Persisted (caller-owned): referenced by the i/j spines, the
+    # Persisted: referenced by the i/j spines, the
     # pooled-average join, the k spine and the report join — five
     # references that each re-ran the corpus scoring aggregate.
-    bins = cacheutil.track(
+    bins = (
         scored.groupBy("bin")
         .agg(
             F.count(F.lit(1)).cast("double").alias("n_k"),
@@ -1241,14 +1227,12 @@ def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = feats.crossJoin(F.broadcast(beta)).select(
         "y", F.expr(_P).alias("p")
     )
-    from axolotls_spark import cacheutil
-
-    # Persisted (caller-owned): the placement algebra below references
+    # Persisted: the placement algebra below references
     # this 64-row histogram ~10 times through the broadcast chain
     # (t, c, v, a, s, report row) — without the persist each reference
     # re-ran the corpus scoring aggregate (measured: 102 jobs for one
     # query; the histogram is the last corpus-touching relation).
-    b = cacheutil.track(
+    b = (
         scored.groupBy(
             F.least(F.floor(F.col("p") * 64), F.lit(63))
             .cast("long")
@@ -1277,7 +1261,7 @@ def delong_auc_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Also persisted: both the AUC aggregate and the S10/S01 variance
     # aggregate consume the 64-row placement relation.
-    v = cacheutil.track(
+    v = (
         c.crossJoin(F.broadcast(t))
         .select(
             "npos",

@@ -307,8 +307,6 @@ def image_ahash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (no byte-identical payloads), which the report surfaces
     honestly — a banded-LSH candidate stage would be layered in
     front only for thresholds <= 3 where it is lossless."""
-    from axolotls_spark.cacheutil import track
-
     docs = load_table(spark, sf_dir, "documents")
     # h fans out to BOTH join sides (probes broadcast + candidate
     # stream), and the Arrow decode+hash pass is opaque to pushdown —
@@ -316,9 +314,7 @@ def image_ahash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (once to build 5 probe rows), on the single scan task (measured
     # 1.7 s wall for 0.14 cpu_s).  Spread the scan so the Python pass
     # parallelizes, persist + eager-count so it runs once (r8 §16).
-    h = track(
-        M.ahash64(M.attach_payload(spread_for_cpu(docs, "doc_id"))).persist()
-    )
+    h = M.ahash64(M.attach_payload(spread_for_cpu(docs, "doc_id"))).persist()
     h.count()
     probes = h.filter(F.col("doc_id") < _AHASH_N_PROBES).select(
         F.col("doc_id").alias("probe_id"),
@@ -718,13 +714,11 @@ def multimodal_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join, never all-pairs); the dup flag joins back
     merge-hinted (the r7 broadcast finding); the final rollup is a
     3-group hash aggregate."""
-    from axolotls_spark.cacheutil import track
-
     docs = load_table(spark, sf_dir, "documents")
     manifest = M.attach_payload(spread_for_cpu(docs, "doc_id"))
 
     # Stages 2+3 input: one payload pass, persisted + eager count.
-    fused = track(
+    fused = (
         M.entropy_ahash_pass(manifest, nibble="low")
         .withColumn("nibble_entropy", _nibble_entropy_f32())
         .persist()

@@ -101,14 +101,12 @@ def _als_factors(ratings: DataFrame) -> tuple[DataFrame, DataFrame]:
             ).alias("v")
         )
     )
-    from axolotls_spark import cacheutil
-
-    # u2/v2 persisted (caller-owned): consumers reference u2 three
+    # u2/v2 persisted: consumers reference u2 three
     # times (prediction join, v2's own half-round, the report join)
     # and each lazy reference re-ran the whole unrolled chain of
     # ratings joins+aggregates.  Both are entity-sized (|customers| /
     # |parts|), the standard factor-relation cache of ALS.
-    u2 = cacheutil.track(
+    u2 = (
         ratings.join(v1, "p")
         .groupBy("c")
         .agg(
@@ -119,7 +117,7 @@ def _als_factors(ratings: DataFrame) -> tuple[DataFrame, DataFrame]:
         )
         .persist()
     )
-    v2 = cacheutil.track(
+    v2 = (
         ratings.join(u2, "c")
         .groupBy("p")
         .agg(

@@ -1652,14 +1652,12 @@ def ivf_cell_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     collapsed and the 'index' is a full scan in disguise — the
     build-time preflight every 100 TB vector deployment runs before
     trusting its recall/latency model."""
-    from axolotls_spark import cacheutil
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     cents = emb.filter(F.col("vec_id") < 16)
     assigned = SIM.assign_cells(emb, cents)
     # 16-row relation with two consumers (gate totals + top-4 scan
     # bound) — each re-ran the corpus cell assignment without the pin.
-    sizes = cacheutil.track(
+    sizes = (
         assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("sz")).persist()
     )
     tot = sizes.agg(
@@ -1772,8 +1770,6 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
     not nations) the same plan holds with the rank from the
     distributed-rank primitive and depths capped at the evaluation
     cutoff."""
-    from axolotls_spark import cacheutil
-
     y0, y1 = _RBO_YEARS
     li = load_table(spark, sf_dir, "lineitem")
     o = load_table(spark, sf_dir, "orders")
@@ -1796,7 +1792,7 @@ def rbo_rank_agreement(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("rev")
         )
     )
-    ranked = cacheutil.track(
+    ranked = (
         rev.select(
             "yr",
             "nation",
@@ -2327,24 +2323,18 @@ def cluster_label_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = assign.select("vec_id", "cid").join(
         emb.select("vec_id", "label"), "vec_id"
     )
-    from axolotls_spark import cacheutil
-
-    # Persisted (caller-owned): the contingency table and both
+    # Persisted: the contingency table and both
     # marginals are each referenced by several of the entropy/MI
     # aggregates below — without the persists every reference
     # re-executed the whole k-means assignment chain (measured: 92
     # jobs for this one query).  All three are <= k x |labels| rows.
-    cont = cacheutil.track(
+    cont = (
         lab.groupBy("cid", "label")
         .agg(F.count(F.lit(1)).cast("double").alias("nij"))
         .persist()
     )
-    margc = cacheutil.track(
-        cont.groupBy("cid").agg(F.sum("nij").alias("ni")).persist()
-    )
-    margl = cacheutil.track(
-        cont.groupBy("label").agg(F.sum("nij").alias("nj")).persist()
-    )
+    margc = cont.groupBy("cid").agg(F.sum("nij").alias("ni")).persist()
+    margl = cont.groupBy("label").agg(F.sum("nij").alias("nj")).persist()
     tot = cont.agg(F.sum("nij").alias("n"))
     mi = (
         cont.join(F.broadcast(margc), "cid")
@@ -2578,12 +2568,11 @@ def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
     yc = SIM.spread_for_cpu(
         emb.filter(F.col("vec_id") % 2 == 1), "vec_id"
     ).select(F.col("vec_id").alias("y_id"), F.col("embedding").alias("yv"))
-    from axolotls_spark import cacheutil
 
     # The scored relation feeds BOTH argmax directions — unpersisted,
     # the |X|·|Y| cosine sweep (the query's dominant compute) ran
     # twice; persist + eager count = one sweep (r8 §5, §16).
-    scored = cacheutil.track(
+    scored = (
         yc.join(F.broadcast(x), F.col("x_id") != F.col("y_id"))
         .select(
             "x_id",
@@ -2752,11 +2741,10 @@ def vector_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     scores) and the quality side (recall_at_10) of the same build,
     from the same assignment pass.
 
-    Scale shape: the cell assignment is computed ONCE and persisted
-    (tracked) — the balance report, the probe-cost arithmetic, and
-    the candidate join all reuse it (the standalone parts would scan
-    and assign twice; the composite's whole point is the shared
-    build).  Cell sizes are a 16-row relation reused for both the
+    Scale shape: the cell assignment is computed ONCE and persisted —
+    the balance report, the probe-cost arithmetic, and the candidate
+    join all reuse it (the standalone parts would scan and assign
+    twice; the composite's whole point is the shared build).  Cell sizes are a 16-row relation reused for both the
     gate and the per-query scan cost (pure arithmetic — the probe
     cost needs NO second pass over candidates).  The recall ground
     truth is the honest brute-force eval cost, same as
@@ -2765,19 +2753,15 @@ def vector_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     shared-assignment parts
     (tests/test_round7_ops.py::test_vector_index_lifecycle_plan).
     """
-    from axolotls_spark import cacheutil
-
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     cents = emb.filter(F.col("vec_id") < 16)
-    assigned = cacheutil.track(
-        SIM.assign_cells(emb, cents).persist()
-    )
+    assigned = SIM.assign_cells(emb, cents).persist()
     # 16-row relation with three consumers (gate totals, top-4 scan
     # bound, per-query probe cost) — pin it so each reads the tiny
     # cached rows instead of re-aggregating the assignment.
-    sizes = cacheutil.track(
+    sizes = (
         assigned.groupBy("cell").agg(F.count(F.lit(1)).alias("sz")).persist()
     )
     tot = sizes.agg(
@@ -2798,7 +2782,7 @@ def vector_index_lifecycle(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Two consumers (probe-cost rollup + candidate broadcast): pin the
     # |Q|·nprobe-row probe assignment so the query-slice scoring pass
     # runs once.
-    probe_cells = cacheutil.track(
+    probe_cells = (
         SIM.assign_cells(emb.filter(is_q), cents, n_best=_VIL_NPROBE)
         .withColumnRenamed("vec_id", "query_id")
         .persist()

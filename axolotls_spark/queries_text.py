@@ -12,7 +12,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from axolotls_spark import cacheutil
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators import dedup as D
@@ -911,15 +910,13 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (doc lengths, document frequencies, the candidate probe) and
     # dl feeds two more — unpersisted, the corpus tokenize+aggregate
     # ran once per consumer: persist + eager count = one pass (§16).
-    tf = cacheutil.track(
+    tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
         .persist()
     )
     tf.count()
-    dl = cacheutil.track(
-        tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
-    )
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     stats = dl.agg(
         F.avg("dl").alias("avgdl"),
         F.count(F.lit(1)).cast("double").alias("n_docs"),
@@ -1447,9 +1444,10 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the wide signature relation is computed once and
     persisted — it feeds the band keys, the bucket-group pair
-    expansion AND both estimate probes; the exact side reuses the
-    persisted shingle relation for sizes and the shared-shingle
-    equi-join, restricted to candidate pairs only (never all pairs).
+    expansion AND both estimate probes, and its ``n_sh`` is each
+    doc's set size; the exact side reuses the persisted shingle
+    relation for the shared-shingle equi-join, restricted to
+    candidate pairs only (never all pairs).
     Every emitted number is a ratio of exact integers, so full-
     precision doubles match across engines.
     """
@@ -1462,10 +1460,12 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     wa = wide.select(
         F.col("doc_id").alias("doc_a"),
         *[F.col(f"minh_{i}").alias(f"a{i}") for i in range(8)],
+        F.col("n_sh").alias("na"),
     )
     wb = wide.select(
         F.col("doc_id").alias("doc_b"),
         *[F.col(f"minh_{i}").alias(f"b{i}") for i in range(8)],
+        F.col("n_sh").alias("nb"),
     )
     matches = sum(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
@@ -1474,9 +1474,11 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     est = (
         pairs.join(wa, "doc_a")
         .join(wb, "doc_b")
-        .select("doc_a", "doc_b", (matches / F.lit(8.0)).alias("est_jaccard"))
+        .select(
+            "doc_a", "doc_b", "na", "nb",
+            (matches / F.lit(8.0)).alias("est_jaccard"),
+        )
     )
-    sizes = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("b_id"), F.col("sh").alias("sh_b"))
     shared = (
@@ -1489,14 +1491,10 @@ def minhash_jaccard_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("doc_a", "doc_b")
         .agg(F.count(F.lit(1)).alias("n_shared"))
     )
-    za = sizes.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("na"))
-    zb = sizes.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("nb"))
     nsh = F.coalesce(F.col("n_shared"), F.lit(0)).cast("double")
     exact = nsh / (F.col("na") + F.col("nb") - nsh)
     return (
         est.join(shared, ["doc_a", "doc_b"], "left")
-        .join(za, "doc_a")
-        .join(zb, "doc_b")
         .select(
             "doc_a",
             "doc_b",
@@ -1741,7 +1739,7 @@ def lsh_quality_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ONE shingle scan for both the LSH candidate side and the exact
     # prefix-join truth side (r8 §2.3/§5): without the shared persisted
     # relation each side re-ran the explode + md5 token-hash pass.
-    sh = cacheutil.track(D.doc_shingle_hashes(docs).persist())
+    sh = D.doc_shingle_hashes(docs).persist()
     cand = D.near_dup_candidate_pairs(sh, k=8, bands=2).withColumn(
         "in_cand", F.lit(True)
     )
@@ -1878,20 +1876,18 @@ def rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
     # tf feeds FOUR consumers here (dl, dfreq, the scored probe and
     # the expansion probe) and dfreq/dl two each — persist + eager
     # count so the corpus tokenize+aggregate runs once (§16).
-    tf = cacheutil.track(
+    tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
         .persist()
     )
     tf.count()
-    dl = cacheutil.track(
-        tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
-    )
+    dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     stats = dl.agg(
         F.avg("dl").alias("avgdl"),
         F.count(F.lit(1)).cast("double").alias("n_docs"),
     )
-    dfreq = cacheutil.track(
+    dfreq = (
         tf.groupBy("term")
         .agg(F.count(F.lit(1)).cast("double").alias("df"))
         .persist()
@@ -2129,9 +2125,7 @@ def wmh_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join side."""
     docs = load_table(spark, sf_dir, "documents")
     sk = D.weighted_minhash_sketch(_shingle_idf_weights(docs), k=4).persist()
-    from axolotls_spark.cacheutil import track
 
-    track(sk)
     banded = sk.select(
         "doc_id",
         F.col("i").alias("band"),
@@ -2348,7 +2342,7 @@ def minhash_xxhash_recall_cert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # Persisted: ONE md5 shingle relation feeds the verify sets, the
     # exact ground-truth join and the sample doc count (r8 §2.3).
-    sh = cacheutil.track(D.doc_shingle_hashes(docs).persist())
+    sh = D.doc_shingle_hashes(docs).persist()
     found_pairs = _xxhash_verified_pairs(docs, sh, tau_num, tau_den)
     truth = D.jaccard_prefix_pairs(sh, tau_num=tau_num, tau_den=tau_den)
     n_found = found_pairs.agg(F.count(F.lit(1)).alias("n_found"))
@@ -2622,9 +2616,7 @@ def rake_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sorted member-token list joined by single spaces, and tokens are
     # \s+-split so they contain no spaces), which removes the join
     # back to the token-level relation entirely (r8 §2.4).
-    from axolotls_spark import cacheutil
-
-    phrases = cacheutil.track(
+    phrases = (
         members.groupBy("doc_id", "seg")
         .agg(
             F.array_join(
@@ -2756,7 +2748,7 @@ def term_dispersion_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # are its per-source sums (the old separate toks aggregate was a
     # second full tokenize pass), and it feeds the per-term totals
     # and the cell join, so persist + eager count (r8 §16, §2.3).
-    tf = cacheutil.track(
+    tf = (
         toks.groupBy("tok", "source")
         .agg(F.count(F.lit(1)).cast("long").alias("f"))
         .persist()
@@ -2888,16 +2880,14 @@ def lm_dirichlet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # tf feeds dl, the collection LM and the probe (and coll feeds
     # tot) — persist + eager count = one corpus tokenize (§16).
-    tf = cacheutil.track(
+    tf = (
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
         .persist()
     )
     tf.count()
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
-    coll = cacheutil.track(
-        tf.groupBy("term").agg(F.sum("tf").alias("cf")).persist()
-    )
+    coll = tf.groupBy("term").agg(F.sum("tf").alias("cf")).persist()
     tot = coll.agg(F.sum("cf").alias("t"))
     qrows = [
         (qid, t) for qid, ts in _BM25_QUERIES for t in ts

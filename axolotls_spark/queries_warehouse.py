@@ -33,7 +33,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from axolotls_spark import cacheutil
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.queries_analytics import trade_facts
 from axolotls_spark.registry import register, stable_f32
@@ -427,7 +426,7 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(F.sum("revenue").alias("w"))
     )
-    edges = cacheutil.track(
+    edges = (
         rev.withColumn(
             "rk",
             F.row_number().over(
@@ -443,11 +442,11 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(_BFS_SEED).alias("node"), F.lit(0).alias("hops")
     )
     for _ in range(_BFS_DEPTH):
-        # Persist each round's <=25-row distance vector (caller-owned):
-        # every round references it twice (frontier join + min-merge
-        # union), so the unrolled lazy lineage re-executed 2^depth
-        # copies of the whole chain of broadcasts without the pin.
-        dist = cacheutil.track(dist.persist())
+        # Persist each round's <=25-row distance vector: every round
+        # references it twice (frontier join + min-merge union), so
+        # the unrolled lazy lineage re-executed 2^depth copies of the
+        # whole chain of broadcasts without the pin.
+        dist = dist.persist()
         nxt = edges.join(F.broadcast(dist), edges.src == dist.node).select(
             F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
         )
@@ -885,9 +884,9 @@ def merkle_tree_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("level", F.lit(0))
     )
     # Each level is consumed twice (the output union and the next
-    # level's aggregate); persist the <=64-row relations (tracked) so
+    # level's aggregate); persist the <=64-row relations so
     # the orders scan and the per-level digest chain run once.
-    lvl = cacheutil.track(lvl.persist())
+    lvl = lvl.persist()
     out = lvl
     n = _MERKLE_LEAVES
     level = 0
@@ -919,7 +918,7 @@ def merkle_tree_levels(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .withColumn("level", F.lit(level))
         )
-        lvl = cacheutil.track(lvl.persist())
+        lvl = lvl.persist()
         out = out.unionByName(lvl)
     return out.select(
         "level",

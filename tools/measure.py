@@ -2,8 +2,8 @@
 profiler CLI.
 
 ``bench.py``, ``tools/perfgate.py`` and ``tools/scaling.py`` time
-through :func:`time_queries`; ``tools/stress.py`` shares the session,
-cache release and stage scrape.  The loop:
+through :func:`time_queries`; ``tools/stress.py`` shares the session
+and stage scrape.  The loop:
 
 - warm-up: q1 through the noop sink primes the JVM and parquet footers;
 - a run is the query's build plus a noop-sink write, which materializes
@@ -68,13 +68,6 @@ def session(tool: str, n_cores: int | str | None = None,
     return spark
 
 
-def release(spark) -> None:
-    """Caller-owned cache contract: free operator-owned persists and the
-    session cache, so the next query never pays for this one."""
-    cacheutil.release_caches()
-    spark.catalog.clearCache()
-
-
 @contextlib.contextmanager
 def applied(spark, arm: dict[str, str]):
     """Set an arm's conf overrides for the block, then restore them."""
@@ -118,10 +111,10 @@ def best_of(spark, name: str, sf_dir: str, repeats: int,
                     rec.update(rollup({j: list(i.stageIds) if i else []
                                        for j, i in infos.items()}, scrape(spark)))
                 if len(arms) > 1:
-                    release(spark)
+                    cacheutil.release_caches()
     finally:
         sc.setJobDescription(None)
-        release(spark)
+        cacheutil.release_caches()
     return recs
 
 
@@ -232,7 +225,7 @@ def main() -> None:
                 os.makedirs(args.plan, exist_ok=True)
                 with applied(spark, arm):
                     text = explain_formatted(REGISTRY[name].fn(spark, args.sf))
-                release(spark)
+                cacheutil.release_caches()
                 with open(os.path.join(args.plan, f"{name}_{i}.txt"), "w") as f:
                     f.write(text)
 

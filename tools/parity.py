@@ -216,10 +216,8 @@ def main():
             failed.append(name)
         # Release per-query persisted relations (Lloyd corpora, LSH
         # signatures, ...) so a 250+-query sweep doesn't accumulate
-        # cached blocks for the life of the session — the operators'
-        # caller-owned-cache contract (axolotls_spark/cacheutil.py).
+        # cached blocks for the life of the session.
         cacheutil.release_caches()
-        spark.catalog.clearCache()
     print(f"\n{len(names) - len(failed)}/{len(names)} passed")
     if json_out:
         import json as _json

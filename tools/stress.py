@@ -39,6 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb  # noqa: E402
 
+from axolotls_spark import cacheutil  # noqa: E402
 from axolotls_spark.io.sources import TABLES, table_path  # noqa: E402
 from tools import measure  # noqa: E402
 from tools.parity import compare  # noqa: E402
@@ -142,7 +143,7 @@ def main() -> int:
               f"({timings[name]}s)")
         if not ok:
             failures.append(name)
-        measure.release(spark)
+        cacheutil.release_caches()
 
     try:
         stages = measure.scrape(spark)
