@@ -1,18 +1,14 @@
 from axolotls_spark.io.sources import (
-    BROADCAST_TABLES,
     DEFAULT_SF_DIR,
     TABLES,
-    load_all,
     load_table,
     register_views,
     table_path,
 )
 
 __all__ = [
-    "BROADCAST_TABLES",
     "DEFAULT_SF_DIR",
     "TABLES",
-    "load_all",
     "load_table",
     "register_views",
     "table_path",

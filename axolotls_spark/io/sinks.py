@@ -307,8 +307,9 @@ def write_audit_publish(
         shutil.rmtree(staging)
     df.write.mode("overwrite").option("compression", "zstd").parquet(staging)
 
-    spark = df.sparkSession
-    staged = spark.read.parquet(staging)
+    # The staged files carry df's schema; declaring it skips the
+    # footer-inference job, and the checks still scan the files.
+    staged = df.sparkSession.read.schema(df.schema).parquet(staging)
     agg = staged.agg(
         F.count(F.lit(1)).alias("__n"),
         *[

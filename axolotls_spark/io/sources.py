@@ -7,6 +7,11 @@ zero-copy Arrow interop (``string_column.py:89-102``,
 point), read through Spark's vectorized reader so predicate pushdown
 and column pruning reach the scan.
 
+The ten tables have fixed schemas (TESTDATA.md), declared once in
+:data:`SCHEMAS`, and every read declares its schema: inferring one
+from the parquet footers costs a Spark job per read, before the
+query's own action.
+
 At 100 TB these readers are the contract: callers must ``select``
 only needed columns and ``filter`` early so Catalyst pushes both into
 the scan (verify with ``.explain`` → ``PushedFilters``/``ReadSchema``).
@@ -18,24 +23,47 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-TABLES: tuple[str, ...] = (
-    "region",
-    "nation",
-    "customer",
-    "supplier",
-    "part",
-    "orders",
-    "lineitem",
-    "events",
-    "documents",
-    "embeddings",
-)
+#: Table -> DDL schema, columns in file order.  Naive parquet
+#: timestamps (``isAdjustedToUTC=false``, microseconds) read as
+#: ``TIMESTAMP_NTZ``; a file whose column has another physical type
+#: fails at the scan instead of being reinterpreted.
+SCHEMAS: dict[str, str] = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT,"
+        " c_acctbal DOUBLE, c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING,"
+        " p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
+        " o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ,"
+        " o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT,"
+        " l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE,"
+        " l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING,"
+        " l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "events": (
+        "event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT,"
+        " event_type STRING, value DOUBLE, props STRING"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING,"
+        " n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
 
-# Dimension tables small enough to broadcast at any realistic scale
-# factor; fact tables shuffle on their join keys.
-BROADCAST_TABLES: frozenset[str] = frozenset(
-    {"region", "nation", "supplier", "customer", "part"}
-)
+TABLES: tuple[str, ...] = tuple(SCHEMAS)
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -45,17 +73,8 @@ def table_path(sf_dir: str, name: str) -> str:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one table. Lazy — no job runs until an action.
-
-    ``events.ts`` has shipped as either parquet TIMESTAMP(NANOS,
-    isAdjustedToUTC=false) — which Spark 4 refuses unless read as a
-    raw nanos long (``nanosAsLong``) — or plain TIMESTAMP(MICROS),
-    depending on the generator version. We branch on the type Spark
-    actually reads: a long gets rebuilt into TIMESTAMP_NTZ via pure
-    epoch arithmetic (timezone-independent, so results match the
-    DuckDB oracle's naive reading under any session timezone); a
-    native timestamp passes through untouched.
-    """
+    """Read one table under its declared schema. Lazy — no job runs
+    until an action, schema inference included."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
     # DELIBERATE session mutation (documented contract, ADVICE r1):
@@ -68,21 +87,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # rather than rely on session-zone formatting.
     if spark.conf.get("spark.sql.session.timeZone", "") != "UTC":
         spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if name == "events":
-        from pyspark.sql import functions as F
-
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(table_path(sf_dir, name))
-        if dict(df.dtypes).get("ts") != "bigint":
-            return df
-        return df.withColumn(
-            "ts",
-            F.expr(
-                "timestampadd(MICROSECOND, ts div 1000,"
-                " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-            ),
-        )
-    return spark.read.parquet(table_path(sf_dir, name))
+    return spark.read.schema(SCHEMAS[name]).parquet(table_path(sf_dir, name))
 
 
 def spread_for_cpu(df: DataFrame, key: str) -> DataFrame:
@@ -129,10 +134,6 @@ def read_orc(spark: SparkSession, path: str) -> DataFrame:
     same pushdown/pruning treatment as parquet (PushedFilters +
     ReadSchema in the scan node)."""
     return spark.read.orc(path)
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
 
 
 def register_views(spark: SparkSession, sf_dir: str) -> None:

@@ -40,34 +40,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from axolotls_spark.io.sources import table_path
-
-# events.parquet has shipped with ts as either TIMESTAMP(NANOS) —
-# which Spark reads as a raw long under the nanosAsLong legacy conf
-# (same trick as the batch reader, io/sources.py) — or plain
-# TIMESTAMP(MICROS). The stream source needs a declared schema, so we
-# probe the footer once and declare the matching ts type.
-def _events_raw_schema(sf_dir: str) -> tuple[StructType, bool]:
-    import pyarrow.parquet as pq
-
-    ts_type = pq.read_schema(table_path(sf_dir, "events")).field("ts").type
-    nanos = str(ts_type).startswith("timestamp[ns")
-    from pyspark.sql.types import TimestampNTZType
-
-    ts_field = StructField("ts", LongType() if nanos else TimestampNTZType())
-    return (
-        StructType(
-            [
-                StructField("event_id", LongType()),
-                ts_field,
-                StructField("user_id", LongType()),
-                StructField("event_type", StringType()),
-                StructField("value", DoubleType()),
-                StructField("props", StringType()),
-            ]
-        ),
-        nanos,
-    )
+from axolotls_spark.io.sources import SCHEMAS
 
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -78,27 +51,18 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     to (or swaps in ``format("kafka")``) — downstream operators are
     source-agnostic.
     """
-    schema, nanos = _events_raw_schema(sf_dir)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     # The file stream source lists a *directory*; pathGlobFilter
-    # narrows it to the events file (other tables have other schemas).
+    # narrows it to the events file (other tables have other schemas),
+    # read under the batch reader's declared schema (io/sources.py).
     raw = (
-        spark.readStream.schema(schema)
+        spark.readStream.schema(SCHEMAS["events"])
         .option("pathGlobFilter", "events.parquet")
         .parquet(sf_dir)
     )
     # Watermarks require TIMESTAMP (not NTZ); the session timezone is
     # pinned UTC (session.py) so the NTZ→TIMESTAMP cast is lossless
     # and date_format renders identical strings to the batch path.
-    ts = (
-        F.expr(
-            "timestampadd(MICROSECOND, ts div 1000,"
-            " TIMESTAMP_NTZ '1970-01-01 00:00:00')"
-        )
-        if nanos
-        else F.col("ts")
-    )
-    return raw.withColumn("ts", ts.cast("timestamp"))
+    return raw.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 def run_to_memory(

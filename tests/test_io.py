@@ -1,14 +1,24 @@
 """Source/sink round-trips: partitioned parquet (with partition
-pruning), bucketed tables (shuffle-free join), CSV/JSON."""
+pruning), bucketed tables (shuffle-free join), CSV/JSON, and the
+declared parquet source schemas."""
 
 from __future__ import annotations
 
 import os
+import subprocess
+import sys
 
+import pytest
 from pyspark.sql import functions as F
 
 from axolotls_spark.io import sinks
-from axolotls_spark.io.sources import load_table, read_csv, read_json
+from axolotls_spark.io.sources import (
+    TABLES,
+    load_table,
+    read_csv,
+    read_json,
+    table_path,
+)
 from axolotls_spark.plans import audit
 
 SF_DIR = "/root/testdata/sf0.001"
@@ -326,3 +336,80 @@ def test_parquet_schema_evolution_mergeschema(spark, tmp_path):
     # Column pruning still works on the merged schema.
     txt = audit(back.select("p_partkey")).text
     assert "p_name" not in txt.split("ReadSchema")[1][:120]
+
+
+#: Every generated scale factor next to SF_DIR, and the benchmark's tables.
+DATA_DIRS = [
+    *(os.path.join(os.path.dirname(SF_DIR), sf)
+      for sf in ("sf0.001", "sf0.01", "sf0.1")),
+    os.path.join(os.path.dirname(os.path.dirname(__file__)), "perfbench", "data"),
+]
+
+
+def _assert_declared_schemas_match(spark, sf_dir):
+    for name in TABLES:
+        inferred = spark.read.parquet(table_path(sf_dir, name)).schema
+        assert load_table(spark, sf_dir, name).schema == inferred, name
+
+
+@pytest.mark.parametrize("sf_dir", DATA_DIRS, ids=os.path.basename)
+def test_declared_schemas_match_parquet(spark, sf_dir):
+    """SCHEMAS is what parquet itself says the tables are, at every
+    scale factor on disk: reading under it changes no column type."""
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not present")
+    _assert_declared_schemas_match(spark, sf_dir)
+
+
+def test_declared_schemas_match_synthesized_scale(spark, tmp_path):
+    """tools/synth_scale.py's replicated corpus keeps the declared
+    schemas, so scaling runs read it like the generated SFs."""
+    repo = os.path.dirname(os.path.dirname(__file__))
+    subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "synth_scale.py"),
+         "2", SF_DIR, str(tmp_path)],
+        check=True, capture_output=True,
+    )
+    _assert_declared_schemas_match(spark, str(tmp_path))
+
+
+def test_load_table_starts_no_job(spark):
+    """Reading under a declared schema is lazy: building a DataFrame
+    over every table runs no schema-inference job.  Jobs are counted
+    by a SparkContext job tag, which every job this thread submits
+    carries; a session tag (``spark.addTag``) misses the inference
+    job."""
+    sc = spark.sparkContext
+    jsc = sc._jsc.sc()
+    tag = "test-load-table-jobs"
+
+    def tagged_jobs() -> int:
+        jsc.listenerBus().waitUntilEmpty()
+        return len(jsc.statusTracker().getJobIdsForTag(tag))
+
+    sc.addJobTag(tag)
+    try:
+        dfs = [load_table(spark, SF_DIR, name) for name in TABLES]
+        assert tagged_jobs() == 0
+        # The count is live: an action under the same tag is seen.
+        dfs[0].count()
+        assert tagged_jobs() >= 1
+    finally:
+        sc.removeJobTag(tag)
+
+
+def test_nanos_events_fail_at_scan(spark, tmp_path):
+    """An events file whose ts is TIMESTAMP(NANOS) does not match the
+    declared microsecond TIMESTAMP_NTZ: the scan raises instead of
+    returning rows."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    t = pq.read_table(table_path(SF_DIR, "events"))
+    i = t.schema.get_field_index("ts")
+    t = t.set_column(i, "ts", t.column("ts").cast(pa.timestamp("ns")))
+    pq.write_table(t, table_path(str(tmp_path), "events"))
+    assert pq.read_schema(table_path(str(tmp_path), "events")).field(
+        "ts").type == pa.timestamp("ns")
+    with pytest.raises(Exception, match="PARQUET_COLUMN_DATA_TYPE_MISMATCH"):
+        load_table(spark, str(tmp_path), "events").collect()

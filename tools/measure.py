@@ -18,7 +18,8 @@ and stage scrape.  The loop:
 
 The CLI (``python tools/measure.py --help``) prints one JSON line per
 (query, arm): the min-of-N wall ``s`` plus the :func:`rollup` of the
-first repeat, which runs right after a cache release.  Job, stage and
+first repeat, which runs right after a cache release, and that repeat's
+``build_jobs`` (jobs started while ``fn()`` builds the plan).  Job, stage and
 task counts are deterministic where wall time is throttle-noisy, so
 plan-shape A/Bs compare those.  Arms are ``spark.k=v`` conf lists,
 interleaved per repeat inside ONE session: every arm sees the same
@@ -88,28 +89,37 @@ def best_of(spark, name: str, sf_dir: str, repeats: int,
             arms: Sequence[dict[str, str]] = ({},),
             profile: bool = False) -> list[dict]:
     """One record per arm: min-of-``repeats`` wall seconds ``s`` and,
-    with ``profile``, the :func:`rollup` of the first repeat.  With
+    with ``profile``, the :func:`rollup` of the first repeat plus
+    ``build_jobs``, the jobs its ``fn()`` ran before the action.  With
     several arms, caches are released after every run, so no arm reuses
     another arm's persists."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     recs = [{"s": float("inf")} for _ in arms]
+
+    def job_ids() -> set[int]:
+        # The tracker reads the listener bus's store: drain it first, or
+        # a job that has already run may not be listed yet.
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return set(tracker.getJobIdsForGroup(None))
+
     sc.setJobDescription(name)
     try:
         for r in range(repeats):
             for rec, arm in zip(recs, arms):
                 first = profile and r == 0
                 with applied(spark, arm):
-                    before = set(tracker.getJobIdsForGroup(None)) if first else ()
+                    before = job_ids() if first else set()
                     t0 = time.perf_counter()
-                    REGISTRY[name].fn(spark, sf_dir).write.format(
-                        "noop").mode("overwrite").save()
+                    df = REGISTRY[name].fn(spark, sf_dir)
+                    built = job_ids() if first else set()
+                    df.write.format("noop").mode("overwrite").save()
                     rec["s"] = min(rec["s"], round(time.perf_counter() - t0, 4))
                 if first:
-                    infos = {j: tracker.getJobInfo(j) for j in
-                             set(tracker.getJobIdsForGroup(None)) - before}
+                    infos = {j: tracker.getJobInfo(j) for j in job_ids() - before}
                     rec.update(rollup({j: list(i.stageIds) if i else []
                                        for j, i in infos.items()}, scrape(spark)))
+                    rec["build_jobs"] = len(built - before)
                 if len(arms) > 1:
                     cacheutil.release_caches()
     finally:
