@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from axolotls_spark.cacheutil import materialize
+
 
 DAMPING = 0.85
 ITERS = 5
@@ -52,12 +54,7 @@ def pagerank(edges: DataFrame, seed: str | None = None,
     # spawning shuffle.partitions near-empty tasks; for a graph with
     # a huge rank vector (billions of nodes) drop the repartition and
     # the same plan degrades gracefully to shuffled joins.
-    edges = edges.repartition(1).persist()
-    # Eager materialization: the persisted graph fans out to nodes /
-    # ow / t, whose lazy cache builds RACE at the first action and
-    # each re-runs the full corpus-aggregation lineage (r8 §16). One
-    # count() serializes the build; every later pass is in-memory.
-    edges.count()
+    edges = materialize(edges.repartition(1))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import tokens_col
@@ -301,15 +302,11 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     )
-    # tf feeds the df aggregate AND the weight projection — persist +
-    # eager count so the corpus tokenizes once, not per consumer and
-    # not per racing lazy cache build (r8 §16).
-    tf = (
-        toks.groupBy("doc_id", "term")
-        .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .persist()
+    # tf feeds the df aggregate AND the weight projection; it is not
+    # cached, because both re-read its one aggregate exchange.
+    tf = toks.groupBy("doc_id", "term").agg(
+        F.count(F.lit(1)).cast("double").alias("tf")
     )
-    tf.count()
     n_docs = docs.agg(F.count(F.lit(1)).cast("double").alias("n_docs"))
     dfreq = tf.groupBy("term").agg(
         F.count(F.lit(1)).cast("double").alias("df")
@@ -330,18 +327,12 @@ def sparse_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     nrm = w.groupBy("doc_id").agg(F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("nrm"))
-    u = (
+    # Feeds BOTH sides of the self-join below: one normalize pass.
+    u = materialize(
         w.join(nrm, "doc_id")
         .filter(F.col("nrm") > 0)
         .select("doc_id", "term", (F.col("w") / F.col("nrm")).alias("uw"))
-        # Feeds BOTH sides of the self-join below: without a persist
-        # the whole tokenize→tf→idf→normalize pipeline executes twice
-        # (two full corpus passes at 100 TB).  One pass, cached.
-        .persist()
     )
-    # Serialize the cache build — the two join sides' lazy builds
-    # otherwise race and each re-runs the normalize chain (r8 §16).
-    u.count()
     a = u.alias("a")
     b = u.alias("b")
     return (
@@ -3674,11 +3665,8 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one edge aggregation; each half-iteration joins the
     broadcast 25-row score vector with the persisted edge list, and
     the normalizer is a 1-row broadcast sum — no driver state."""
-    edges = trade_edges(spark, sf_dir).repartition(1).persist()
-    # Eager materialization, as in pagerank: nodes and every
-    # half-iteration read the persisted edges, whose lazy cache builds
-    # would otherwise race at the first action and vary the job count.
-    edges.count()
+    # nodes and every half-iteration read the edges.
+    edges = materialize(trade_edges(spark, sf_dir).repartition(1))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
@@ -4534,10 +4522,10 @@ def mutual_info_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     cube.
 
     Scale shape: the fact table is touched ONCE (3-way feature
-    explode riding the scan, the stump-histogram mold); joint and
-    marginal counts are grouped aggregates of the ≤feat×bins×labels
-    cube, and the MI reduction is a 3-row groupBy — no windows at
-    all.
+    explode riding the scan, the stump-histogram mold); the joint
+    counts are a grouped aggregate of the ≤feat×bins×labels cube, the
+    marginals are windows over that cube partitioned by feat, and the
+    MI reduction is a 3-row groupBy.
     """
     li = load_table(spark, sf_dir, "lineitem")
     base = li.select("l_quantity", "l_discount", "l_tax",
@@ -4571,16 +4559,24 @@ def mutual_info_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("bin"),
         "lbl",
     )
-    joint = binned.groupBy("feat", "bin", "lbl").agg(
-        F.count(F.lit(1)).cast("double").alias("nxy")
+    # One exchange of the cube on feat serves the three marginal
+    # windows and the per-feature reduction: no marginal aggregate is
+    # joined back, so no AQE join rewrite (whose timing varied the job
+    # count) is left to make.
+    joint = (
+        binned.groupBy("feat", "bin", "lbl")
+        .agg(F.count(F.lit(1)).cast("double").alias("nxy"))
+        .repartition("feat")
     )
-    mx = joint.groupBy("feat", "bin").agg(F.sum("nxy").alias("nx"))
-    my = joint.groupBy("feat", "lbl").agg(F.sum("nxy").alias("ny"))
-    tot = joint.groupBy("feat").agg(F.sum("nxy").alias("nn"))
     return (
-        joint.join(mx, ["feat", "bin"])
-        .join(my, ["feat", "lbl"])
-        .join(F.broadcast(tot), "feat")
+        joint.select(
+            "feat",
+            "bin",
+            "nxy",
+            F.sum("nxy").over(Window.partitionBy("feat", "bin")).alias("nx"),
+            F.sum("nxy").over(Window.partitionBy("feat", "lbl")).alias("ny"),
+            F.sum("nxy").over(Window.partitionBy("feat")).alias("nn"),
+        )
         .groupBy("feat")
         .agg(
             F.sum(
@@ -8291,7 +8287,6 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
         # <=30-row relation pinned to one partition before the
         # one-row pivot (documented bounded-relation repartition(1)).
         .repartition(1)
-        .localCheckpoint(eager=True)
     )
     # The chain is a bounded ≤(|C|+2)² relation; the truncated value
     # iteration runs inside ONE Arrow-batched pandas UDF over that
@@ -8350,7 +8345,6 @@ def markov_attribution_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
     eff = vedges.mapInPandas(
         _solve, "channel STRING, base_v DOUBLE, removal DOUBLE"
     )
-    eff = eff.localCheckpoint(eager=True)
     tot = eff.agg(F.sum("removal").alias("tot_removal"))
     return eff.crossJoin(F.broadcast(tot)).select(
         "channel",
@@ -8676,7 +8670,6 @@ def ktruss_trade_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .withColumn("sup", F.lit(0).cast("long"))
         .repartition(1)
-        .localCheckpoint(eager=True)
     )
     for _ in range(_KTRUSS_ROUNDS):
         adj = e.select(F.col("a").alias("u"), F.col("b").alias("v")).unionAll(
@@ -8834,7 +8827,6 @@ def holm_stepdown_nation_tests(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy("p", "nation")).alias("i"),
         F.count(F.lit(1)).over(Window.partitionBy()).alias("m"),
     )
-    ps = ps.localCheckpoint(eager=True)
     stop = ps.agg(
         F.min(
             F.when(
@@ -9104,7 +9096,6 @@ def yuen_trimmed_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).withColumn(
         "g", F.floor(F.lit(_YUEN_TRIM) * F.col("n")).cast("long")
     )
-    marked = marked.localCheckpoint(eager=True)
     bounds = marked.groupBy("grp").agg(
         F.max("n").alias("n"),
         F.max("g").alias("g"),
@@ -9363,9 +9354,7 @@ def evt_hill_tail_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     kmax = max(_HILL_KS)
     topk = spend.select("x").orderBy(F.col("x").desc()).limit(kmax + 1)
     w = Window.orderBy(F.col("x").desc())
-    topk = topk.withColumn("rn", F.row_number().over(w)).localCheckpoint(
-        eager=True
-    )
+    topk = topk.withColumn("rn", F.row_number().over(w))
     ks = spark.createDataFrame([(k,) for k in _HILL_KS], ["k"])
     hill = (
         topk.crossJoin(F.broadcast(ks))
@@ -9641,9 +9630,7 @@ def sen_slope_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.trunc("o_orderdate", "month").alias("m")
     ).agg(F.sum("o_totalprice").alias("y"))
     w = Window.orderBy("m")
-    idx = monthly.select(
-        "y", F.row_number().over(w).alias("t")
-    ).localCheckpoint(eager=True)
+    idx = monthly.select("y", F.row_number().over(w).alias("t"))
     a = idx.alias("a")
     b = idx.alias("b")
     slopes = a.join(b, F.col("b.t") > F.col("a.t")).select(
@@ -10086,7 +10073,6 @@ def bca_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("b")
         .agg((F.sum(F.col("wt") * F.col("v")) / F.sum("wt")).alias("m"))
         .repartition(1)
-        .localCheckpoint(eager=True)
     )
     fs = o.agg(
         F.count(F.lit(1)).cast("double").alias("n"),
@@ -10359,10 +10345,10 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     `clustering_coefficient_nodes`.
 
     The edge relation feeds degree, wedge/two-hop candidates, and the
-    closure joins in both consumers — persist once AND materialize
-    eagerly so the consumers' racing lazy cache builds don't each
-    re-run the lineage (r8 §16; PLANS.md showed 22 lineitem scans
-    without the persist).  Edge generation fans out per ORDER via
+    closure joins in both consumers; it is not cached, because
+    they re-read its one distinct exchange (a cached copy cost 15
+    jobs and 357 tasks against 7 and 8 uncached, measured at
+    sf0.01).  Edge generation fans out per ORDER via
     per-basket combination expansion over ONE l_orderkey exchange
     (basket-bounded: <= 7 lineitems per order in TPC-H, so
     pairs-per-order is a constant) — the old lineitem self-join
@@ -10377,14 +10363,11 @@ def _copurchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.array_sort(F.collect_set("l_partkey")).alias("ps")
     )
     combos = ordered_pairs("ps", "u", "v")
-    edges = (
+    return (
         baskets.select(F.explode(combos).alias("p"))
         .select(F.col("p.u").alias("u"), F.col("p.v").alias("v"))
         .distinct()
     )
-    edges = edges.persist()
-    edges.count()
-    return edges
 
 
 @register(
@@ -10457,14 +10440,10 @@ def link_prediction_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (list size — referenced 3x: z-weight join, da join, db join)
     # and the two-hop candidates (per-node combination expansion over
     # the same exchange — the old adjacency self-join exchanged and
-    # sorted the doubled edge stream twice, r8 §2.4). Persisted +
-    # eagerly materialized (r8 §16).
-    nbrs = (
-        und.groupBy("u")
-        .agg(F.array_sort(F.collect_list("v")).alias("ns"))
-        .persist()
+    # sorted the doubled edge stream twice, r8 §2.4).
+    nbrs = und.groupBy("u").agg(
+        F.array_sort(F.collect_list("v")).alias("ns")
     )
-    nbrs.count()
     deg = nbrs.select("u", F.size("ns").cast("long").alias("d"))
     ccombos = ordered_pairs("ns", "a", "b")
     cand = nbrs.select(

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import (
@@ -358,14 +359,10 @@ def hybrid_search_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id", F.explode(tokens_col(F.col("text"))).alias("term")
     )
-    tf = (
+    tf = materialize(
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .persist()
     )
-    # Eager count: the three consumers' lazy cache builds otherwise
-    # race and each re-runs the corpus tokenize (r8 §16).
-    tf.count()
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     stats = dl.agg(
         F.avg("dl").alias("avgdl"),
@@ -748,7 +745,8 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 is orderBy+limit on the ROUNDED score (ties by doc_id),
     so cross-engine float noise cannot reorder the cut."""
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = (
+    # Four consumers: raw, target, totals and the per-doc fold.
+    toks = materialize(
         docs.select(
             "doc_id", "lang",
             F.explode(tokens_col(F.col("text"))).alias("term"),
@@ -756,12 +754,7 @@ def dsir_importance_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "doc_id", "lang", (token_hash(F.col("term")) % _DSIR_B).alias("b")
         )
-        .persist()
     )
-    # Eager count: four consumers (raw, target, totals, per-doc fold)
-    # otherwise race the lazy cache build and each re-runs the
-    # tokenize+hash pass (r8 §16).
-    toks.count()
     raw = toks.groupBy("b").agg(F.count(F.lit(1)).alias("c_r"))
     tgt = (
         toks.filter(F.col("lang") == "en")

@@ -42,6 +42,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.operators.dedup import token_hash
 from axolotls_spark.operators.prefix import ranked_cumsum
@@ -676,17 +677,15 @@ def max_concurrent_events(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("e")
     ).select("e.t", "e.delta", "e.event_id")
-    cum = ranked_cumsum(
-        b,
-        [F.asc("t"), F.asc("delta"), F.asc("event_id")],
-        "delta",
-        rank_name="_rn",
-        cum_name="cum",
-    ).select("t", "cum").persist()  # feeds the max AND the argmin fold
-    # Eager count: the max aggregate and the argmin join otherwise
-    # race the lazy cache build and each re-runs the whole boundary
-    # explode + prefix-sum chain (r8 §16).
-    cum.count()
+    cum = materialize(  # feeds the max AND the argmin fold
+        ranked_cumsum(
+            b,
+            [F.asc("t"), F.asc("delta"), F.asc("event_id")],
+            "delta",
+            rank_name="_rn",
+            cum_name="cum",
+        ).select("t", "cum")
+    )
     mx = cum.agg(F.max("cum").alias("max_concurrent"))
     return (
         cum.join(F.broadcast(mx), cum.cum == mx.max_concurrent)

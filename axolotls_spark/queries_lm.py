@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import tokens_col
 from axolotls_spark.operators.prefix import ranked_cumsum
@@ -95,20 +96,16 @@ def bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
     # Tokenization feeds both consumers (unigram counts, bigram
-    # stream) — persist AND materialize it eagerly: the lazy cache
-    # builds of concurrent consumers race and each re-runs the
-    # scan+split pipeline (r8 §16).
-    toks = (
-        docs.select("doc_id", tokens_col(F.col("text")).alias("t")).persist()
+    # stream).  uni is read by tot and both probe sides; it is not
+    # cached, because they re-read its one aggregate exchange.
+    toks = materialize(
+        docs.select("doc_id", tokens_col(F.col("text")).alias("t"))
     )
-    toks.count()
     uni = (
         toks.select(F.explode("t").alias("term"))
         .groupBy("term")
         .agg(F.count(F.lit(1)).cast("double").alias("cu"))
-        .persist()  # Zipf-small; read by tot and both probe sides
     )
-    uni.count()  # serialize the cache build (3 racing consumers)
     tot = uni.agg(F.sum("cu").alias("tt"))
     bg = toks.filter(F.size("t") >= 2).select(
         "doc_id",
@@ -818,10 +815,12 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     memorization screens run before training).
 
     Scale shape: one tokenize pass builds the distinct (doc, bigram)
-    relation, persisted because it feeds both the document-frequency
-    aggregate and the probe side; the probe is an equi-join on the
-    bigram key. Novelty fractions are exact integer ratios — the
-    float32 emit is bit-stable.
+    relation, which feeds both the document-frequency aggregate and the
+    probe side from its one distinct exchange (uncached: a lazy persist
+    here raced its two consumers' cache builds and varied the job
+    count); the probe is an equi-join on the bigram key. Novelty
+    fractions are exact integer ratios — the float32 emit is
+    bit-stable.
     """
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
     toks = docs.select("doc_id", tokens_col(F.col("text")).alias("t"))
@@ -836,7 +835,6 @@ def ngram_novelty_score(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "p.w1", "p.w2")
         .distinct()
-        .persist()
     )
     bdf = db.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("ndocs"))
     novel = F.sum(F.when(F.col("ndocs") == 1, 1).otherwise(0))
@@ -979,19 +977,16 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     right fan-in, type total) are aggregates of the bigram-TYPE
     relation, which is Zipf-small.
 
-    Scale shape: mirror of bigram_interp_logprob — one tokenize
-    pass persisted and eagerly materialized (racing lazy cache
-    builds re-ran it per consumer, r8 §16); the doc-bigram →
+    Scale shape: mirror of bigram_interp_logprob, except that the
+    tokenize pass is not cached (a cached one cost 17 jobs and 184
+    tasks against 13 and 25 uncached at sf0.01); the doc-bigram →
     bigram-count attachment is a COUNT WINDOW over the single
     (w1, w2) exchange (not a groupBy + self-equi-join — r8 §2.4);
     the fan-out/fan-in relations ride the same bgc aggregate and
     broadcast onto the probe.
     """
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = (
-        docs.select("doc_id", tokens_col(F.col("text")).alias("t")).persist()
-    )
-    toks.count()
+    toks = docs.select("doc_id", tokens_col(F.col("text")).alias("t"))
     bg = toks.filter(F.size("t") >= 2).select(
         "doc_id",
         F.explode(
@@ -1003,14 +998,9 @@ def kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", "b.w1", "b.w2")
     # Zipf-small bigram-TYPE relation: feeds the fw/bw/ty statistics
     # (the probe no longer joins it — cb rides the count window).
-    # Eagerly materialized so the three consumers' lazy cache builds
-    # don't race (r8 §16).
-    bgc = (
-        bg.groupBy("w1", "w2")
-        .agg(F.count(F.lit(1)).cast("double").alias("cb"))
-        .persist()
+    bgc = bg.groupBy("w1", "w2").agg(
+        F.count(F.lit(1)).cast("double").alias("cb")
     )
-    bgc.count()
     fw = bgc.groupBy("w1").agg(
         F.sum("cb").alias("cw1"),
         F.count(F.lit(1)).cast("double").alias("n1p_fw"),

@@ -13,6 +13,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from axolotls_spark import multimodal as M
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.registry import register
 
@@ -313,9 +314,10 @@ def image_ahash_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unpersisted, every payload crossed the Python boundary TWICE
     # (once to build 5 probe rows), on the single scan task (measured
     # 1.7 s wall for 0.14 cpu_s).  Spread the scan so the Python pass
-    # parallelizes, persist + eager-count so it runs once (r8 §16).
-    h = M.ahash64(M.attach_payload(spread_for_cpu(docs, "doc_id"))).persist()
-    h.count()
+    # parallelizes, and materialize it so it runs once.
+    h = materialize(
+        M.ahash64(M.attach_payload(spread_for_cpu(docs, "doc_id")))
+    )
     probes = h.filter(F.col("doc_id") < _AHASH_N_PROBES).select(
         F.col("doc_id").alias("probe_id"),
         *[F.col(c).alias(f"p{c}") for c in ("b0", "b1", "b2", "b3")],
@@ -709,21 +711,18 @@ def multimodal_ingestion(spark: SparkSession, sf_dir: str) -> DataFrame:
     payload passes plus doc_id-keyed meta/hash joins to reassemble
     what one row can carry) — no payload bytes ever shuffle; the
     gate and the survivor hash relation are FILTERS on that one
-    persisted, eagerly-materialized relation (r8 §16); the screen
-    shuffles only 4 integer band keys per survivor (bucket
+    materialized relation; the screen shuffles only 4 integer band keys per survivor (bucket
     equi-join, never all-pairs); the dup flag joins back
     merge-hinted (the r7 broadcast finding); the final rollup is a
     3-group hash aggregate."""
     docs = load_table(spark, sf_dir, "documents")
     manifest = M.attach_payload(spread_for_cpu(docs, "doc_id"))
 
-    # Stages 2+3 input: one payload pass, persisted + eager count.
-    fused = (
+    # Stages 2+3 input: one payload pass.
+    fused = materialize(
         M.entropy_ahash_pass(manifest, nibble="low")
         .withColumn("nibble_entropy", _nibble_entropy_f32())
-        .persist()
     )
-    fused.count()
 
     # Stage 3: aHash near-dup screen among survivors — a filter on
     # the fused relation (the old plan joined a second payload pass

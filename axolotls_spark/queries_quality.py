@@ -333,7 +333,7 @@ def ri_orphan_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = None
     for child, edges in by_child.items():
         df = load_table(spark, sf_dir, child).select(
-            *{e[1] for e in edges}
+            *dict.fromkeys(e[1] for e in edges)
         )
         aggs = [F.count(F.lit(1)).alias("__n_child")]
         for name, ckey, parent, pkey in edges:

@@ -31,6 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.registry import register
 
@@ -166,42 +167,33 @@ def als_rank1_factors(spark: SparkSession, sf_dir: str) -> DataFrame:
     regularized closed form — the MLlib-ALS shuffle shape with the
     algebra in plain SQL, certified round-for-round by the oracle's
     identical unrolling."""
-    ratings = _ratings(spark, sf_dir).persist()
-    # Eagerly materialize: ratings fans out to several consumers (the
-    # ALS half-rounds, prediction join, n_items) whose lazy cache
-    # builds otherwise race — five lineitem scans measured for one
-    # action before the count (r8 §5).
-    ratings.count()
-    try:
-        u2, v2 = _als_factors(ratings)
-        pred = ratings.join(u2, "c").join(v2, "p")
-        fit = pred.agg(
-            F.sqrt(
-                F.avg(
-                    (F.col("r") - F.col("u") * F.col("v"))
-                    * (F.col("r") - F.col("u") * F.col("v"))
-                )
-            ).alias("rmse"),
-            F.sqrt(F.avg(F.col("r") * F.col("r"))).alias("rms_rating"),
-        )
-        nr = ratings.groupBy("c").agg(F.count("*").alias("n_items"))
-        out = (
-            u2.join(nr, "c")
-            .crossJoin(F.broadcast(fit))
-            .orderBy(F.col("u").desc(), "c")
-            .limit(15)
-            .select(
-                F.col("c").alias("custkey"),
-                F.round("u", 6).alias("u_factor"),
-                F.col("n_items").cast("long").alias("n_items"),
-                F.round("rmse", 6).alias("rmse"),
-                F.round("rms_rating", 6).alias("rms_rating"),
+    # ratings fans out to the ALS half-rounds and the joins below.
+    ratings = materialize(_ratings(spark, sf_dir))
+    u2, v2 = _als_factors(ratings)
+    pred = ratings.join(u2, "c").join(v2, "p")
+    fit = pred.agg(
+        F.sqrt(
+            F.avg(
+                (F.col("r") - F.col("u") * F.col("v"))
+                * (F.col("r") - F.col("u") * F.col("v"))
             )
+        ).alias("rmse"),
+        F.sqrt(F.avg(F.col("r") * F.col("r"))).alias("rms_rating"),
+    )
+    nr = ratings.groupBy("c").agg(F.count("*").alias("n_items"))
+    return (
+        u2.join(nr, "c")
+        .crossJoin(F.broadcast(fit))
+        .orderBy(F.col("u").desc(), "c")
+        .limit(15)
+        .select(
+            F.col("c").alias("custkey"),
+            F.round("u", 6).alias("u_factor"),
+            F.col("n_items").cast("long").alias("n_items"),
+            F.round("rmse", 6).alias("rmse"),
+            F.round("rms_rating", 6).alias("rms_rating"),
         )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        ratings.unpersist()
-    return out
+    )
 
 
 @register(
@@ -243,41 +235,30 @@ def als_top_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     serving scale this is the classic "score the item catalog per
     user" sweep — linear in |items| per user, never |users| x
     |items|."""
-    ratings = _ratings(spark, sf_dir).persist()
-    # Eagerly materialize: ratings fans out to several consumers (the
-    # ALS half-rounds, prediction join, n_items) whose lazy cache
-    # builds otherwise race — five lineitem scans measured for one
-    # action before the count (r8 §5).
-    ratings.count()
-    try:
-        u2, v2 = _als_factors(ratings)
-        users = spark.createDataFrame(
-            [(u,) for u in _ALS_REC_USERS], "c long"
-        )
-        qu = u2.join(F.broadcast(users), "c")
-        rated = ratings.join(F.broadcast(users), "c").select("c", "p")
-        cand = (
-            v2.crossJoin(F.broadcast(qu))
-            .join(F.broadcast(rated), ["c", "p"], "left_anti")
-            .select("c", "p", (F.col("u") * F.col("v")).alias("score"))
-        )
-        from pyspark.sql.window import Window
+    # ratings fans out to the ALS half-rounds and the joins below.
+    ratings = materialize(_ratings(spark, sf_dir))
+    u2, v2 = _als_factors(ratings)
+    users = spark.createDataFrame([(u,) for u in _ALS_REC_USERS], "c long")
+    qu = u2.join(F.broadcast(users), "c")
+    rated = ratings.join(F.broadcast(users), "c").select("c", "p")
+    cand = (
+        v2.crossJoin(F.broadcast(qu))
+        .join(F.broadcast(rated), ["c", "p"], "left_anti")
+        .select("c", "p", (F.col("u") * F.col("v")).alias("score"))
+    )
+    from pyspark.sql.window import Window
 
-        w = Window.partitionBy("c").orderBy(F.col("score").desc(), "p")
-        out = (
-            cand.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") <= 5)
-            .select(
-                F.col("c").alias("custkey"),
-                F.col("p").alias("partkey"),
-                F.round("score", 6).alias("score"),
-                "rn",
-            )
+    w = Window.partitionBy("c").orderBy(F.col("score").desc(), "p")
+    return (
+        cand.withColumn("rn", F.row_number().over(w))
+        .filter(F.col("rn") <= 5)
+        .select(
+            F.col("c").alias("custkey"),
+            F.col("p").alias("partkey"),
+            F.round("score", 6).alias("score"),
+            "rn",
         )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        ratings.unpersist()
-    return out
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -399,7 +380,6 @@ def bradley_terry_strengths(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("win").cast("double").alias("w"),
         )
         .repartition(1)
-        .localCheckpoint(eager=True)
     )
     iters = _BT_ITERS
 

@@ -16,6 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.functions.arrays import cosine, dot, norm
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.operators import similarity as SIM
@@ -1250,17 +1251,13 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     d_sub, k, n_cells, nprobe = 8, 16, 16, 4
-    long = (
-        explode_long(emb)
-        .withColumn("sub", ((F.col("pos") - 1) / F.lit(d_sub)).cast("int"))
-        .persist()
+    # `long` fans out to five consumers (cent, assignment, residuals,
+    # query slice, query residuals), cc to two and rlong to
+    # pq_train_long's rounds.  None is cached: the cached three cost 37
+    # jobs and 316 tasks against 32 and 218 uncached (sf0.01).
+    long = explode_long(emb).withColumn(
+        "sub", ((F.col("pos") - 1) / F.lit(d_sub)).cast("int")
     )
-    # Eagerly materialize: `long` fans out to five consumers (cent,
-    # assignment, residuals, query slice, query residuals) whose lazy
-    # cache builds otherwise RACE — each concurrent AQE stage re-ran
-    # the parquet scan + explode before any had populated the cache
-    # (measured r8: multiple full-input stages for one action).
-    long.count()
     cent = long.filter(F.col("vec_id") < n_cells).select(
         F.col("vec_id").alias("cell"), "pos", F.col("val").alias("cval")
     )
@@ -1279,12 +1276,7 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         cd.withColumn("rn", F.row_number().over(w_cell))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cell")
-        # Referenced by both the residual build and the ADC probe
-        # join — without the pin each reference re-runs the whole
-        # cell-assignment chain (long ⋈ cent → groupBy → window).
-        .persist()
     )
-    cc.count()  # eager: serialize the two consumers' cache builds
     rlong = (
         long.join(cc, "vec_id")
         .join(F.broadcast(cent), ["cell", "pos"])
@@ -1292,9 +1284,7 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "vec_id", "pos", "sub",
             (F.col("val") - F.col("cval")).alias("val"),
         )
-        .persist()
     )
-    rlong.count()  # eager, same reason (pq_train_long fans out)
     codes, pc1 = pq_train_long(rlong, k=k, iters=1, init_offset=n_cells)
     qd = (
         long.filter(F.col("vec_id") == 0)
@@ -2569,19 +2559,16 @@ def reciprocal_best_match(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb.filter(F.col("vec_id") % 2 == 1), "vec_id"
     ).select(F.col("vec_id").alias("y_id"), F.col("embedding").alias("yv"))
 
-    # The scored relation feeds BOTH argmax directions — unpersisted,
-    # the |X|·|Y| cosine sweep (the query's dominant compute) ran
-    # twice; persist + eager count = one sweep (r8 §5, §16).
-    scored = (
+    # The scored relation feeds BOTH argmax directions: one |X|·|Y|
+    # cosine sweep (the query's dominant compute), not two.
+    scored = materialize(
         yc.join(F.broadcast(x), F.col("x_id") != F.col("y_id"))
         .select(
             "x_id",
             "y_id",
             SIM.cosine(F.col("xv"), F.col("yv")).alias("sim"),
         )
-        .persist()
     )
-    scored.count()
     wx = Window.partitionBy("x_id").orderBy(F.desc("sim"), F.asc("y_id"))
     wy = Window.partitionBy("y_id").orderBy(F.desc("sim"), F.asc("x_id"))
     best_xy = (

@@ -233,44 +233,39 @@ def dbscan_core_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sub-percolation cluster sizes; see module docstring)."""
     pts = _eps_points(spark, sf_dir)
     prs = eps_neighbor_pairs(pts).persist()
-    try:
-        core = (
-            prs.groupBy("u")
-            .agg(F.count("*").alias("n"))
-            .filter(F.col("n") >= _DBSCAN_MIN_NBRS)
-            .select("u")
+    core = (
+        prs.groupBy("u")
+        .agg(F.count("*").alias("n"))
+        .filter(F.col("n") >= _DBSCAN_MIN_NBRS)
+        .select("u")
+    )
+    cc_edges = (
+        prs.join(core.withColumnRenamed("u", "cu"), prs.u == F.col("cu"))
+        .join(core.withColumnRenamed("u", "cv"), prs.v == F.col("cv"))
+        .filter(F.col("u") < F.col("v"))
+        .select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b"))
+    )
+    corerep = D.connected_components_star(
+        core.withColumnRenamed("u", "vec_id"), cc_edges, id_col="vec_id"
+    ).select(
+        F.col("vec_id").alias("cid"), F.col("group_rep").alias("rep")
+    )
+    border = (
+        prs.join(core, "u", "left_anti")
+        .join(corerep, prs.v == F.col("cid"))
+        .groupBy("u")
+        .agg(F.min("rep").alias("brep"))
+    )
+    return (
+        pts.select("vec_id")
+        .join(corerep, pts.vec_id == corerep.cid, "left")
+        .join(border, pts.vec_id == border.u, "left")
+        .select(
+            "vec_id",
+            F.when(F.col("cid").isNotNull(), F.lit("core"))
+            .when(F.col("u").isNotNull(), F.lit("border"))
+            .otherwise(F.lit("noise"))
+            .alias("role"),
+            F.coalesce("rep", "brep").cast("long").alias("cluster_rep"),
         )
-        cc_edges = (
-            prs.join(core.withColumnRenamed("u", "cu"), prs.u == F.col("cu"))
-            .join(core.withColumnRenamed("u", "cv"), prs.v == F.col("cv"))
-            .filter(F.col("u") < F.col("v"))
-            .select(F.col("u").alias("doc_a"), F.col("v").alias("doc_b"))
-        )
-        corerep = D.connected_components_star(
-            core.withColumnRenamed("u", "vec_id"), cc_edges, id_col="vec_id"
-        ).select(
-            F.col("vec_id").alias("cid"), F.col("group_rep").alias("rep")
-        )
-        border = (
-            prs.join(core, "u", "left_anti")
-            .join(corerep, prs.v == F.col("cid"))
-            .groupBy("u")
-            .agg(F.min("rep").alias("brep"))
-        )
-        out = (
-            pts.select("vec_id")
-            .join(corerep, pts.vec_id == corerep.cid, "left")
-            .join(border, pts.vec_id == border.u, "left")
-            .select(
-                "vec_id",
-                F.when(F.col("cid").isNotNull(), F.lit("core"))
-                .when(F.col("u").isNotNull(), F.lit("border"))
-                .otherwise(F.lit("noise"))
-                .alias("role"),
-                F.coalesce("rep", "brep").cast("long").alias("cluster_rep"),
-            )
-        )
-        out = out.localCheckpoint(eager=True)
-    finally:
-        prs.unpersist()
-    return out
+    )

@@ -15,6 +15,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.registry import register
 
@@ -904,10 +905,8 @@ def trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     the no-ties variance n(n−1)(2n+5)/18 applies.
 
     Scale shape: the corpus collapses to the per-day aggregate first
-    (day-domain relation, calendar-bounded, eagerly checkpointed — it
-    feeds four independent subtrees whose lazy-cache materializations
-    otherwise RACE and re-scan orders once each, measured r8); the
-    pairwise self-join, sign sum and pair-median all run on that
+    (day-domain relation, calendar-bounded, materialized once for the
+    four independent subtrees it feeds); the pairwise self-join, sign sum and pair-median all run on that
     bounded relation — the O(d²) pair space never touches corpus-sized
     data. At 100 TB the only corpus work is the one grouped scan. The
     pair-median itself is distributed: Spark's exact ``percentile``
@@ -920,23 +919,23 @@ def trend_mann_kendall(spark: SparkSession, sf_dir: str) -> DataFrame:
     VALUE of a multiset needs no tie-break columns) with the pair
     count m = d(d−1)/2 derived from the day count — no single-task
     sort anywhere.  The pair stream is NOT cached: regenerating the
-    broadcast nested-loop join from the checkpointed day relation is
+    broadcast nested-loop join from the materialized day relation is
     cheaper than serializing 2.9 M pair rows into the columnar cache,
     and each consumer projects only the column it needs before the
     pairs are materialized (r8 §2.3/§5).
     """
     from axolotls_spark.operators.prefix import order_statistic_values
 
-    daily = (
+    daily = materialize(
         load_table(spark, sf_dir, "orders")
         .groupBy(F.col("o_orderdate").cast("date").alias("day"))
         .agg(F.sum("o_totalprice").alias("rev"))
-        .localCheckpoint(eager=True)
+        .coalesce(1)  # calendar-bounded
     )
-    # The checkpointed day relation is byte-tiny (one coalesced
-    # partition), so the nested-loop pair generation STREAMED it on a
-    # single task — measured 7.7 s (6.8 cpu_s) for the 2.9 M slope/
-    # sign rows while 31 cores idled.  Spreading the stream side
+    # The materialized day relation is byte-tiny (one partition), so
+    # the nested-loop pair generation STREAMED it on a single task —
+    # measured 7.7 s (6.8 cpu_s) for the 2.9 M slope/sign rows while
+    # 31 cores idled.  Spreading the stream side
     # keeps the O(d²) expansion parallel; the broadcast side is the
     # same bounded day relation.
     a = daily.repartition(
@@ -2162,7 +2161,7 @@ def matrix_profile_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation (84 rows for seven years — bounded at any corpus size,
     the allowlisted per-month-aggregate window class), subsequences
     are 5 LEADs on that relation, and the all-pairs join is
-    ≤(|months|)² on checkpointed z-vectors — never corpus-sized.
+    ≤(|months|)² on the z-vectors — never corpus-sized.
     The top-3 is TakeOrderedAndProject with a rounded-distance,
     (month_a, month_b) deterministic order."""
     o = load_table(spark, sf_dir, "orders")
@@ -2199,7 +2198,6 @@ def matrix_profile_motif(spark: SparkSession, sf_dir: str) -> DataFrame:
                 for i, c in enumerate(cols)
             ],
         )
-        .localCheckpoint(eager=True)
     )
     a = z.alias("a")
     b = z.alias("b")

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators import dedup as D
@@ -908,14 +909,11 @@ def bm25_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # The inverted (doc, term, tf) relation feeds three consumers
     # (doc lengths, document frequencies, the candidate probe) and
-    # dl feeds two more — unpersisted, the corpus tokenize+aggregate
-    # ran once per consumer: persist + eager count = one pass (§16).
-    tf = (
+    # dl feeds two more: one corpus tokenize+aggregate pass.
+    tf = materialize(
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .persist()
     )
-    tf.count()
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     stats = dl.agg(
         F.avg("dl").alias("avgdl"),
@@ -1874,14 +1872,11 @@ def rocchio_expansion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(T.tokens_col(F.col("text"))).alias("term")
     )
     # tf feeds FOUR consumers here (dl, dfreq, the scored probe and
-    # the expansion probe) and dfreq/dl two each — persist + eager
-    # count so the corpus tokenize+aggregate runs once (§16).
-    tf = (
+    # the expansion probe) and dfreq/dl two each.
+    tf = materialize(
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .persist()
     )
-    tf.count()
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl")).persist()
     stats = dl.agg(
         F.avg("dl").alias("avgdl"),
@@ -2747,13 +2742,11 @@ def term_dispersion_dp(spark: SparkSession, sf_dir: str) -> DataFrame:
     # aggregate; everything else derives from it — the source sizes
     # are its per-source sums (the old separate toks aggregate was a
     # second full tokenize pass), and it feeds the per-term totals
-    # and the cell join, so persist + eager count (r8 §16, §2.3).
-    tf = (
-        toks.groupBy("tok", "source")
-        .agg(F.count(F.lit(1)).cast("long").alias("f"))
-        .persist()
+    # and the cell join (r8 §2.3).  It is not cached: a cached copy
+    # cost 16 jobs and 236 tasks against 11 and 17 uncached (sf0.01).
+    tf = toks.groupBy("tok", "source").agg(
+        F.count(F.lit(1)).cast("long").alias("f")
     )
-    tf.count()
     part_sizes = tf.groupBy("source").agg(
         F.sum("f").cast("long").alias("tp")
     )
@@ -2879,13 +2872,11 @@ def lm_dirichlet_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.explode(D.tokens_col(F.col("text"))).alias("term")
     )
     # tf feeds dl, the collection LM and the probe (and coll feeds
-    # tot) — persist + eager count = one corpus tokenize (§16).
-    tf = (
+    # tot): one corpus tokenize.
+    tf = materialize(
         toks.groupBy("doc_id", "term")
         .agg(F.count(F.lit(1)).cast("double").alias("tf"))
-        .persist()
     )
-    tf.count()
     dl = tf.groupBy("doc_id").agg(F.sum("tf").alias("dl"))
     coll = tf.groupBy("term").agg(F.sum("tf").alias("cf")).persist()
     tot = coll.agg(F.sum("cf").alias("t"))
@@ -3744,10 +3735,11 @@ def wasserstein_length_shift(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounded distinct-value spine; the integral is a per-lang fold.
     No corpus self-joins, no global windows."""
     docs = load_table(spark, sf_dir, "documents")
-    counts = docs.groupBy("lang", F.col("n_chars").alias("v")).agg(
-        F.count(F.lit(1)).cast("double").alias("c")
+    counts = materialize(
+        docs.groupBy("lang", F.col("n_chars").alias("v"))
+        .agg(F.count(F.lit(1)).cast("double").alias("c"))
+        .coalesce(1)  # bounded by languages x distinct lengths
     )
-    counts = counts.localCheckpoint(eager=True)
     sizes = counts.groupBy("lang").agg(F.sum("c").alias("n"))
     spine = counts.select("v").distinct()
     langs = counts.select("lang").filter(F.col("lang") != "en").distinct()
@@ -3907,7 +3899,6 @@ def rouge_lead_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
         "side",
         F.when(F.col("p") < _ROUGE_LEAD, F.lit("s")).otherwise(F.lit("r")),
     )
-    pos = pos.localCheckpoint(eager=True)
     uni = pos.groupBy("doc_id", "lang", "nt", "tok").agg(
         F.sum(F.when(F.col("side") == "s", 1).otherwise(0)).alias("cs"),
         F.sum(F.when(F.col("side") == "r", 1).otherwise(0)).alias("cr"),

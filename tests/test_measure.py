@@ -1,7 +1,8 @@
-"""JVM-free checks of the shared measurement loop (tools/measure.py):
-the stage rollup over a canned REST ``stages`` list, conf-arm parsing,
-the core-count default, and that every profiling CLI still imports the
-way it does when run as a script."""
+"""Checks of the shared measurement loop (tools/measure.py): the stage
+rollup over a canned REST ``stages`` list, conf-arm parsing, the
+core-count default, and that every profiling CLI still imports the way
+it does when run as a script, all JVM-free; and that a profiled run
+counts its jobs by its own job tag."""
 
 from __future__ import annotations
 
@@ -100,3 +101,15 @@ def test_tool_imports_as_script(tool):
         capture_output=True, text=True, timeout=120,
     )
     assert r.returncode == 0, r.stderr
+
+
+def test_best_of_counts_stream_jobs_by_tag(spark, sf_dir, monkeypatch):
+    """A stream's micro-batch jobs run under the stream's own job group,
+    inside ``fn()``; the run's job tag still sees them, as build jobs.
+    The test session has no UI, so the stage scrape is stubbed out:
+    only job counts are checked."""
+    monkeypatch.setattr(measure, "scrape", lambda spark: [])
+    (rec,) = measure.best_of(spark, "streaming_hourly_counts", sf_dir, 1,
+                             profile=True)
+    assert rec["build_jobs"] >= 1
+    assert rec["jobs"] > rec["build_jobs"]

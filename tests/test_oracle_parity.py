@@ -75,6 +75,28 @@ def test_release_caches_frees_every_persist(spark, sf_dir):
     assert cache.isEmpty()
 
 
+#: Queries that materialize a relation outside a convergence round: a
+#: bounded test family, an ALS ratings relation and a Markov chain.
+_MATERIALIZING = (
+    "holm_stepdown_nation_tests",
+    "als_rank1_factors",
+    "markov_attribution_removal",
+)
+
+
+def test_release_caches_frees_non_loop_materializations(spark, sf_dir):
+    """A materialization outside a convergence round is a persist, so
+    ``release_caches()`` frees its blocks; an eager ``localCheckpoint``
+    would keep them until its RDD is garbage-collected."""
+    jsc = spark.sparkContext._jsc.sc()
+    cacheutil.release_caches()
+    before = jsc.getPersistentRDDs().size()
+    for name in _MATERIALIZING:
+        REGISTRY[name].fn(spark, sf_dir).collect()
+    cacheutil.release_caches()
+    assert jsc.getPersistentRDDs().size() <= before
+
+
 def test_every_query_declares_tags():
     for name, spec in REGISTRY.items():
         assert spec.tags, f"{name} has no tags"

@@ -5,10 +5,15 @@ performance bug even while every value-check still passes."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
+
 from axolotls_spark.plans import audit
 from axolotls_spark.queries import REGISTRY
 
 SF_DIR = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _facts(spark, name, **kw):
@@ -831,6 +836,7 @@ def test_registry_wide_plan_hygiene(spark):
         "rmst_retention",           # same distinct-duration life table
         "logrank_test_retention",   # distinct-duration life table
         "fdr_bh_nation_tests",      # 25-row test family
+        "holm_stepdown_nation_tests",  # same 25-row test family
         "acf_ljung_box",            # 14-row lag relation cumsum
         "max_drawdown_revenue",     # per-day aggregate running peak
         "logreg_auc_roc",           # fixed 64-bin ROC relation
@@ -838,6 +844,8 @@ def test_registry_wide_plan_hygiene(spark):
         "bootstrap_ci_poisson",     # fixed 32-replicate relation
         "mixture_waterfill_rates",  # <=|languages|-row breakpoint walk
         "mom_revenue_growth",       # per-month aggregate
+        "matrix_profile_motif",     # per-month aggregate (calendar-
+                                    # bounded subsequence relation)
         "pareto_brand_revenue",     # <=25 brand rows
         "rfm_segment_counts",       # per-customer ntile; documented
                                     # degrade path
@@ -1191,22 +1199,12 @@ def test_vocab_topk_sweep_no_global_window(spark):
 
 def test_als_join_reduce_shape(spark):
     """ALS half-rounds are equi-joins + hash aggregates over the
-    persisted ratings relation: no cartesian, no Python, ratings
-    cached (InMemoryRelation). The registered query returns a
-    localCheckpoint (cache-release contract), which truncates its
-    lineage — so audit the internal pre-checkpoint pipeline, the
-    same pattern as the loop-plan captures."""
-    from axolotls_spark.queries_recsys import _als_factors, _ratings
-
-    ratings = _ratings(spark, SF_DIR).persist()
-    try:
-        u2, v2 = _als_factors(ratings)
-        f = audit(u2)
-        assert "CartesianProduct" not in f.text
-        assert "BatchEvalPython" not in f.text
-        assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
-    finally:
-        ratings.unpersist()
+    materialized ratings relation: no cartesian, no Python, ratings
+    cached (InMemoryRelation)."""
+    f = _facts(spark, "als_rank1_factors")
+    assert "CartesianProduct" not in f.text
+    assert "BatchEvalPython" not in f.text
+    assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
 
 
 def test_zipf_vocab_cut_is_distributed_topk(spark):
@@ -1316,3 +1314,32 @@ def test_lsh_band_design_touches_no_table(spark):
     f = _facts(spark, "lsh_band_design")
     assert "InMemoryFileIndex" not in f.text
     assert "Range" in f.text
+
+
+_PLAN_SCRIPT = """
+import sys
+from axolotls_spark.plans.audit import explain_formatted
+from axolotls_spark.queries import REGISTRY
+from axolotls_spark.session import get_spark
+spark = get_spark("plan-hash-seed", master="local[1]",
+                  extra_conf={"spark.ui.enabled": "false"})
+for name in sys.argv[2:]:
+    print(explain_formatted(REGISTRY[name].fn(spark, sys.argv[1])))
+"""
+
+
+def test_plans_do_not_follow_python_hash_seed():
+    """A plan built from Python set iteration follows the per-process
+    string hash, so plan diffs and pins stop reproducing across
+    processes.  Two fresh processes with different ``PYTHONHASHSEED``
+    values must print the same formatted plans."""
+
+    def plans(seed: str) -> str:
+        return subprocess.run(
+            [sys.executable, "-c", _PLAN_SCRIPT, SF_DIR,
+             "ri_orphan_report", "dataset_datasheet"],
+            cwd=REPO, env={**os.environ, "PYTHONHASHSEED": seed},
+            capture_output=True, text=True, check=True,
+        ).stdout
+
+    assert plans("1") == plans("3")

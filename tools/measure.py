@@ -37,6 +37,7 @@ import re
 import sys
 import time
 import urllib.request
+import uuid
 from collections.abc import Sequence
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -85,45 +86,57 @@ def applied(spark, arm: dict[str, str]):
                 spark.conf.set(k, v)
 
 
+def tagged_jobs(spark, tag: str) -> list[int]:
+    """Ids of the jobs that carry the SparkContext job tag ``tag``.
+
+    A job tag is a thread-local property that every job the thread
+    submits carries, and the threads it starts inherit it, so a
+    stream's micro-batch jobs, which run under the stream's own job
+    group, are counted too.  The tracker reads the listener bus's
+    store: it is drained first, or a job that has already run may not
+    be listed yet."""
+    jsc = spark.sparkContext._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    return list(jsc.statusTracker().getJobIdsForTag(tag))
+
+
 def best_of(spark, name: str, sf_dir: str, repeats: int,
             arms: Sequence[dict[str, str]] = ({},),
             profile: bool = False) -> list[dict]:
     """One record per arm: min-of-``repeats`` wall seconds ``s`` and,
     with ``profile``, the :func:`rollup` of the first repeat plus
-    ``build_jobs``, the jobs its ``fn()`` ran before the action.  With
+    ``build_jobs``, the jobs its ``fn()`` ran before the action.  The
+    profiled run's jobs are the ones that carry its own job tag.  With
     several arms, caches are released after every run, so no arm reuses
     another arm's persists."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     recs = [{"s": float("inf")} for _ in arms]
-
-    def job_ids() -> set[int]:
-        # The tracker reads the listener bus's store: drain it first, or
-        # a job that has already run may not be listed yet.
-        sc._jsc.sc().listenerBus().waitUntilEmpty()
-        return set(tracker.getJobIdsForGroup(None))
-
-    sc.setJobDescription(name)
     try:
         for r in range(repeats):
             for rec, arm in zip(recs, arms):
                 first = profile and r == 0
-                with applied(spark, arm):
-                    before = job_ids() if first else set()
-                    t0 = time.perf_counter()
-                    df = REGISTRY[name].fn(spark, sf_dir)
-                    built = job_ids() if first else set()
-                    df.write.format("noop").mode("overwrite").save()
-                    rec["s"] = min(rec["s"], round(time.perf_counter() - t0, 4))
+                tag = f"measure-{name}-{uuid.uuid4().hex}"
+                sc.addJobTag(tag)
+                try:
+                    with applied(spark, arm):
+                        t0 = time.perf_counter()
+                        df = REGISTRY[name].fn(spark, sf_dir)
+                        built = tagged_jobs(spark, tag) if first else []
+                        df.write.format("noop").mode("overwrite").save()
+                        rec["s"] = min(rec["s"],
+                                       round(time.perf_counter() - t0, 4))
+                finally:
+                    sc.removeJobTag(tag)
                 if first:
-                    infos = {j: tracker.getJobInfo(j) for j in job_ids() - before}
+                    infos = {j: tracker.getJobInfo(j)
+                             for j in tagged_jobs(spark, tag)}
                     rec.update(rollup({j: list(i.stageIds) if i else []
                                        for j, i in infos.items()}, scrape(spark)))
-                    rec["build_jobs"] = len(built - before)
+                    rec["build_jobs"] = len(built)
                 if len(arms) > 1:
                     cacheutil.release_caches()
     finally:
-        sc.setJobDescription(None)
         cacheutil.release_caches()
     return recs
 
