@@ -10,6 +10,13 @@ owner (bench harness, parity runner, tests) calls
 relation outlives the query that made it.  An eager
 ``localCheckpoint`` is only for a convergence round that must cut its
 lineage; ``release_caches`` does not free those blocks.
+
+The cost model (Spark 4.1.2, adaptive execution): each reader of a
+lazy persist that is not built yet plans as its own
+``TableCacheQueryStage``, and every such stage that finds the cache
+unbuilt submits a job of its own, so a tiny relation with six readers
+can cost six build jobs.  :func:`materialize` builds the cache once,
+in its count, and the readers that come after it start none.
 """
 
 from __future__ import annotations

@@ -25,6 +25,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from axolotls_spark.cacheutil import materialize
+
 
 def explode_long(emb: DataFrame, id_col: str = "vec_id",
                  vec_col: str = "embedding") -> DataFrame:
@@ -85,10 +87,11 @@ def kmeans(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
     the exploded corpus and feeds BOTH sides of every iteration
     (distance join + re-average join) — persist it once so the
     posexplode runs a single corpus pass instead of 2·iters.  Each
-    round's centroid relation (k·dim rows, tiny) is persisted too;
-    without that, the unrolled lazy plan re-derives iteration i's
-    centroids from scratch inside iteration i+1, and lineage depth —
-    hence recomputation — grows quadratically with ``iters``.
+    round's centroid relation (k·dim rows, tiny) is materialized in
+    one partition; without that, the unrolled lazy plan re-derives
+    iteration i's centroids from scratch inside iteration i+1, and
+    lineage depth — hence recomputation — grows quadratically with
+    ``iters``.
     """
     long = explode_long(emb).persist()
     centroids = (
@@ -97,7 +100,7 @@ def kmeans(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
     )
     assign = None
     for _ in range(iters):
-        centroids = centroids.persist()
+        centroids = materialize(centroids.coalesce(1))
         assign = kmeans_assign(long, centroids)
         centroids = kmeans_update(long, assign)
     return assign, centroids
@@ -191,14 +194,14 @@ def pq_train_long(
         )
 
     for _ in range(iters):
-        cents = cents.persist()
+        cents = materialize(cents.coalesce(1))
         a = assign(cents)
         cents = (
             long.join(a.select("vec_id", "sub", "cid"), ["vec_id", "sub"])
             .groupBy("cid", "sub", "pos")
             .agg(F.avg("val").alias("cval"))
         )
-    cents = cents.persist()
+    cents = materialize(cents.coalesce(1))
     return assign(cents), cents
 
 

@@ -86,16 +86,18 @@ def pagerank(edges: DataFrame, seed: str | None = None,
         )
         restart = F.lit(1.0 - damping) * start
     ranks = base.select("node", start.alias("rank"))
-    # Merge-hinted (not broadcast) iteration joins: every relation in
-    # the loop is SinglePartition (edges/t/base descend from the
-    # repartition(1)), and SinglePartition satisfies any clustered
-    # distribution — so SMJ needs NO exchange and the per-node
-    # aggregate none either.  The broadcast form cost one broadcast
-    # job + one AQE stage per unrolled step, and the driver's ~60 ms
-    # re-optimization gap BETWEEN stages dominated the query
-    # (measured: 41 jobs, 1.1 cpu_s, 3.3 s wall); the exchange-free
-    # loop pipelines all iterations inside a single stage.  For a
-    # huge rank vector drop the repartition(1) upstream and the same
+    # Merge-hinted (not broadcast) iteration joins over relations that
+    # descend from the repartition(1) (edges/t/base).  The broadcast
+    # form cost one broadcast job + one AQE stage per unrolled step,
+    # and the driver's ~60 ms re-optimization gap BETWEEN stages
+    # dominated the query (measured: 41 jobs, 1.1 cpu_s, 3.3 s wall).
+    # The merge-joined loop is NOT exchange-free: on Spark 4.1.2 the
+    # plan (initial and final) re-shuffles the SinglePartition caches
+    # base and t into hashpartitioning(..., shuffle.partitions) at the
+    # loop joins, and 24 of pagerank_trade_graph's 32 jobs at
+    # perfbench/data run in the action.  Why the SinglePartition sides
+    # do not satisfy the joins' distribution is not established.  For
+    # a huge rank vector drop the repartition(1) upstream and the same
     # hints yield ordinary shuffled merge joins.
     for _ in range(iters):
         contrib = (

@@ -8,13 +8,14 @@ torch ops.
 Scale design (the moment-sketch shape):
 
 1. **Partial Gram matrices map-side.** Each Arrow batch contributes
-   (count, sum-vector, X^T·X) — a d + d² fixed-size partial per
-   partition, computed vectorized in numpy inside ``mapInPandas``.
-   The corpus is read ONCE and never shuffled; only
-   O(partitions × d²) floats move.
-2. **Tiny exact reduce.** Partials explode to (pos, val) rows and
-   sum by position — exact, associative, a few-thousand-row shuffle
-   regardless of corpus size.
+   (count, sum-vector, X^T·X), computed vectorized in numpy inside
+   one ``mapInPandas``; each partition sums its batches into one
+   d + d² partial row.  The corpus is read ONCE and never shuffled;
+   only O(partitions × d²) floats move.
+2. **One exact reduce.** ``repartition(1)`` sends the partial rows to
+   a single ``mapInPandas`` that sums them in partition-id order —
+   one row per input partition, so the reduce is bounded whatever
+   the corpus size, and the sum is the same on every run.
 3. **Eigendecomposition where the data is small.** The d×d
    covariance is one row; ``numpy.linalg.eigh`` runs inside a
    ``mapInPandas`` over that single row (never a driver collect),
@@ -31,62 +32,73 @@ sign-insensitive score match).
 
 from __future__ import annotations
 
-from typing import Iterator
+from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def gram_moments(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
-    """(n, sum, gram) 1-row relation via map-side numpy partials +
-    exact positional reduce. Population moments — covariance uses
-    1/n (matched by the tests' numpy reference)."""
+def sketch(df: DataFrame, moments: Callable, schema: str) -> DataFrame:
+    """One-row exact sum of ``moments`` over ``df``: one corpus pass
+    and one reduce.
 
-    def partials(
-        it: Iterator["pd.DataFrame"],  # noqa: F821
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
+    ``moments(pdf)`` maps an Arrow batch to a dict of numbers and
+    numpy arrays, keyed by the column names of ``schema``.  Each
+    partition sums its batches map-side into one ``partials`` row,
+    tagged with the partition id; ``repartition(1)`` sends those rows
+    (one per input partition, whatever the corpus size) to a single
+    reduce that sums them in partition order, so the result is the
+    same on every run."""
+    cols = [f.split()[0] for f in schema.split(",")]
+
+    def partials(it):
+        import numpy as np
+        import pandas as pd
+        from pyspark import TaskContext
+
+        acc = None
+        for pdf in it:
+            m = moments(pdf)
+            acc = m if acc is None else {c: acc[c] + m[c] for c in cols}
+        if acc is not None:
+            yield pd.DataFrame(
+                {"part": [TaskContext.get().partitionId()]}
+                | {c: [np.asarray(acc[c]).tolist()] for c in cols}
+            )
+
+    def total(it):
         import numpy as np
         import pandas as pd
 
-        n = 0
-        s = None
-        g = None
-        for pdf in it:
-            x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
-            n += x.shape[0]
-            s = x.sum(0) if s is None else s + x.sum(0)
-            g = x.T @ x if g is None else g + x.T @ x
-        if n:
+        frames = [pdf for pdf in it if len(pdf)]
+        if frames:
+            pdf = pd.concat(frames).sort_values("part")
             yield pd.DataFrame(
-                {"n": [n], "s": [s.tolist()], "g": [g.ravel().tolist()]}
+                {c: [np.stack(list(pdf[c])).sum(0).tolist()] for c in cols}
             )
 
-    p = emb.select(vec_col).mapInPandas(
-        partials, "n BIGINT, s ARRAY<DOUBLE>, g ARRAY<DOUBLE>"
+    return (
+        df.mapInPandas(partials, "part INT, " + schema)
+        .repartition(1)
+        .mapInPandas(total, schema)
     )
-    # Exact reduce: few rows x (d + d^2) values -> positional sums.
-    sums = (
-        p.select(F.posexplode("s").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.sum("v").alias("v"))
+
+
+def gram_moments(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
+    """(n, s, g) 1-row relation: the :func:`sketch` of the count, the
+    sum vector and the flattened X^T·X.  Population moments —
+    covariance uses 1/n (matched by the tests' numpy reference)."""
+
+    def moments(pdf):
+        import numpy as np
+
+        x = np.vstack(pdf[vec_col].to_numpy()).astype("float64")
+        return {"n": x.shape[0], "s": x.sum(0), "g": (x.T @ x).ravel()}
+
+    return sketch(
+        emb.select(vec_col), moments,
+        "n BIGINT, s ARRAY<DOUBLE>, g ARRAY<DOUBLE>",
     )
-    grams = (
-        p.select(F.posexplode("g").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.sum("v").alias("v"))
-    )
-    n_total = p.agg(F.sum("n").alias("n"))
-    # collect_list gives NO cross-partition order guarantee, even after
-    # an orderBy (the final agg's merge can interleave) — carry pos in a
-    # struct and array_sort, then strip it.  Positional order is load-
-    # bearing here: a permutation silently scrambles the covariance.
-    _ordered = lambda c: F.transform(  # noqa: E731
-        F.array_sort(F.collect_list(F.struct(F.col("pos"), F.col("v")))),
-        lambda s: s["v"],
-    )
-    s_arr = sums.agg(_ordered("s").alias("s"))
-    g_arr = grams.agg(_ordered("g").alias("g"))
-    return n_total.crossJoin(F.broadcast(s_arr)).crossJoin(F.broadcast(g_arr))
 
 
 def principal_components(moments: DataFrame, k: int) -> DataFrame:

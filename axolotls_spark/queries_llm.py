@@ -16,8 +16,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from axolotls_spark.cacheutil import materialize
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.operators.dedup import tokens_col
+from axolotls_spark.operators.pca import (
+    gram_moments, principal_components, sketch,
+)
 from axolotls_spark.registry import register, stable_f32
 
 _SQL_TOKENS = r"string_split_regex(trim(text), '\s+')"
@@ -589,12 +593,10 @@ def pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     projection itself still runs over the whole corpus — its scores
     feed the per-component variance that must equal the eigenvalue.
     """
-    from axolotls_spark.operators.pca import gram_moments, principal_components
-
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     # comps is tiny (k*d rows) but its lineage is the corpus-wide
-    # moment sketch; three consumers below → persist.
-    comps = principal_components(gram_moments(emb), 8).persist()
+    # moment sketch, and six readers below fan out from it.
+    comps = materialize(principal_components(gram_moments(emb), 8))
 
     long = emb.select(
         "vec_id", F.posexplode("embedding").alias("pos", "val_f")
@@ -720,8 +722,9 @@ def procrustes_alignment_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus contributes map-side (n, ||X||^2,
     ||Y||^2, X'Y) partials — a d^2-sized summary per partition,
-    reduced by an exact positional sum; the SVD runs inside one Arrow
-    batch on the 1-row reduced relation (never a driver collect).
+    summed by the single reduce of ``operators.pca.sketch``; the SVD
+    runs inside one Arrow batch on the 1-row reduced relation (never
+    a driver collect).
     At 100 TB this is one read pass and O(partitions * d^2) floats of
     traffic."""
     import pandas as pd
@@ -736,52 +739,21 @@ def procrustes_alignment_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     xy = emb.select(F.col("embedding").alias("xv"), yexpr.alias("yv"))
 
-    def partials(it):
+    def moments(pdf):
         import numpy as np
 
-        n = 0
-        fx2 = 0.0
-        fy2 = 0.0
-        m = None
-        for pdf in it:
-            x = np.vstack(pdf["xv"].to_numpy()).astype("float64")
-            yv = np.vstack(pdf["yv"].to_numpy()).astype("float64")
-            n += x.shape[0]
-            fx2 += float((x * x).sum())
-            fy2 += float((yv * yv).sum())
-            m = x.T @ yv if m is None else m + x.T @ yv
-        if n:
-            yield pd.DataFrame(
-                {
-                    "n": [n],
-                    "fx2": [fx2],
-                    "fy2": [fy2],
-                    "m": [m.ravel().tolist()],
-                }
-            )
+        x = np.vstack(pdf["xv"].to_numpy()).astype("float64")
+        yv = np.vstack(pdf["yv"].to_numpy()).astype("float64")
+        return {
+            "n": x.shape[0],
+            "fx2": float((x * x).sum()),
+            "fy2": float((yv * yv).sum()),
+            "m": (x.T @ yv).ravel(),
+        }
 
-    p = xy.mapInPandas(
-        partials, "n BIGINT, fx2 DOUBLE, fy2 DOUBLE, m ARRAY<DOUBLE>"
+    one = sketch(
+        xy, moments, "n BIGINT, fx2 DOUBLE, fy2 DOUBLE, m ARRAY<DOUBLE>"
     )
-    msum = (
-        p.select(F.posexplode("m").alias("pos", "v"))
-        .groupBy("pos")
-        .agg(F.sum("v").alias("v"))
-    )
-    m_arr = msum.agg(
-        F.transform(
-            F.array_sort(
-                F.collect_list(F.struct(F.col("pos"), F.col("v")))
-            ),
-            lambda s: s["v"],
-        ).alias("m")
-    )
-    scalars = p.agg(
-        F.sum("n").cast("long").alias("n_vectors"),
-        F.sum("fx2").alias("fx2"),
-        F.sum("fy2").alias("fy2"),
-    )
-    one = scalars.crossJoin(F.broadcast(m_arr))
     src, sgn, d = list(_PROC_SRC), list(_PROC_SGN), _PROC_D
 
     def solve(it):
@@ -800,7 +772,7 @@ def procrustes_alignment_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
                 residual = fx2 + fy2 - 2.0 * sigma_sum
                 yield pd.DataFrame(
                     {
-                        "n_vectors": [int(row["n_vectors"])],
+                        "n_vectors": [int(row["n"])],
                         "frob2_x": [fx2],
                         "frob2_y": [fy2],
                         "sigma_sum": [sigma_sum],

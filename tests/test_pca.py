@@ -97,3 +97,21 @@ def test_components_orthonormal(spark, sf_dir):
         w[r.pos, r.comp] = r.weight
     gram = w.T @ w
     assert np.allclose(gram, np.eye(K), atol=1e-8)
+
+
+def test_sketch_reads_corpus_once(spark, sf_dir):
+    """The moment sketch is one corpus pass and one reduce: the plans
+    of ``gram_moments`` and of ``procrustes_alignment_drift`` each
+    hold exactly one ``embeddings`` scan and one ``partials``
+    MapInPandas, not one per summed column."""
+    from axolotls_spark.plans.audit import explain_formatted
+    from axolotls_spark.queries import REGISTRY
+
+    emb = load_table(spark, sf_dir, "embeddings")
+    for df in (
+        gram_moments(emb),
+        REGISTRY["procrustes_alignment_drift"].fn(spark, sf_dir),
+    ):
+        text = explain_formatted(df)
+        assert text.count("Arguments: partials(") == 1, text
+        assert text.count("embeddings.parquet]") == 1, text

@@ -17,6 +17,10 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _facts(spark, name, **kw):
+    """Plan facts of ``name`` built on an empty session cache, so a
+    cached relation in the plan is one the query itself persisted,
+    never one an earlier test left behind."""
+    spark.catalog.clearCache()
     return audit(REGISTRY[name].fn(spark, SF_DIR), **kw)
 
 
@@ -318,11 +322,6 @@ def test_gopher_filters_map_only(spark):
     """Repetition metrics are a sorted-array fold per row — besides
     the deliberate small-file spread there is NO shuffle, and no
     Python in the plan: the filter runs at scan rate at 100 TB."""
-    # Cache-free pin: the staged token projection canonically matches
-    # the bigram-LM queries' persisted token relation, so a cache
-    # leaked by an earlier test would substitute an InMemoryRelation
-    # (and its stored exchange) into this plan.
-    spark.catalog.clearCache()
     f = _facts(spark, "gopher_repetition_filters")
     assert f.n_exchanges <= 1  # only the spread_for_cpu repartition
     assert "BatchEvalPython" not in f.text
@@ -389,13 +388,15 @@ def test_sparse_cosine_prunes_and_broadcasts_df(spark):
 
 def test_pagerank_aggregate_then_iterate(spark):
     """The only corpus-sized work is the edge aggregation (dims all
-    broadcast).  r9: every power iteration is a MERGE join between
-    SinglePartition relations (edges/base descend from the
-    repartition(1)), so the unrolled loop runs exchange-free in one
-    stage — the old broadcast-per-iteration shape paid one broadcast
-    job plus a ~60 ms AQE driver-replanning gap per step (41 jobs for
-    1.1 cpu_s).  Pin: dims still broadcast on the corpus pass, the
-    loop is sort-merge (2 per iteration), and no cartesian/Python."""
+    broadcast).  r9: every power iteration is a merge-hinted join of
+    relations that descend from the repartition(1) (edges/base), in
+    place of the broadcast-per-iteration shape that paid one
+    broadcast job plus a ~60 ms AQE driver-replanning gap per step
+    (41 jobs for 1.1 cpu_s).  The loop is not exchange-free: the
+    final plan re-shuffles the SinglePartition caches base and t into
+    hashpartitioning at the loop joins.  Pin: dims still broadcast on
+    the corpus pass, the loop is sort-merge (2 per iteration), and no
+    cartesian/Python."""
     f = _facts(spark, "pagerank_trade_graph")
     assert f.n_broadcast_hash_joins >= 4   # the 4 dim joins
     assert f.n_sort_merge_joins >= 10      # 2 merge joins x 5 iterations
@@ -952,18 +953,15 @@ def test_textrank_single_edge_derivation(spark):
     aggregate — never co.union(co-swapped), which re-executes the
     heaviest stage (the per-doc V^2 pair join) once per orientation
     (round-2 verdict finding). One pair join, two file scans,
-    exchanges bounded. Cache cleared first: leftover persisted
-    relations from earlier tests substitute into this plan and shift
-    its size stats (and hence join strategy / exchange counts)."""
-    spark.catalog.clearCache()
+    exchanges bounded."""
     f = _facts(spark, "textrank_keywords")
     assert f.text.count("InMemoryFileIndex") <= 2
-    # <=4 SMJs of its own + 10 from pagerank's r9 exchange-free
-    # merge-join iterations (2 per unrolled step — those replace the
-    # broadcast-per-iteration shape and add no PER-ITERATION
-    # exchanges; the static count grows only by the one-time
-    # SinglePartition pins on the graph/base relations and their
-    # repetition inside cached-lineage dumps).
+    # <=4 SMJs of its own + 10 from pagerank's r9 merge-join
+    # iterations (2 per unrolled step — those replace the
+    # broadcast-per-iteration shape; the static count grows by the
+    # one-time SinglePartition pins on the graph/base relations and
+    # their repetition inside cached-lineage dumps).  The executed
+    # loop is not exchange-free (see graph.pagerank).
     assert f.n_sort_merge_joins <= 14
     assert f.n_exchanges <= 24
 
@@ -1064,7 +1062,6 @@ def test_er_blocking_single_join_no_cartesian(spark):
     """Multi-key blocking must be ONE equi-join on the exploded
     (key_type, key_value) relation — never a cartesian, never one
     join per key family — and scoring must add no Python."""
-    spark.catalog.clearCache()  # plan counts pinned cache-free
     for name in ("er_best_match", "er_clusters", "er_best_match_capped"):
         f = _facts(spark, name)
         assert "CartesianProduct" not in f.text, name
@@ -1086,7 +1083,6 @@ def test_fuzzy_join_single_equi_join_no_python(spark):
     """The edit-distance join must be one equi-join on the exploded
     pigeonhole keys + map-only levenshtein verify — no cartesian, no
     Python, bounded scans (probe + index sides of one table)."""
-    spark.catalog.clearCache()
     f = _facts(spark, "fuzzy_join_doc_titles")
     assert "CartesianProduct" not in f.text
     assert "BatchEvalPython" not in f.text
@@ -1097,7 +1093,6 @@ def test_pq_encode_single_corpus_explode(spark):
     """PQ must explode the corpus once (persisted long form feeds
     init, update, and both assignment joins) and broadcast the
     codebooks — no SMJ on the vector side, no Python."""
-    spark.catalog.clearCache()
     f = _facts(spark, "pq_encode_embeddings")
     assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
     assert "BatchEvalPython" not in f.text
@@ -1108,7 +1103,6 @@ def test_mv_refresh_cost_is_two_aggregates(spark):
     """Incremental MV refresh = base-state agg + delta agg + a
     group-cardinality merge join: bounded exchanges, split predicate
     pushed to both scans."""
-    spark.catalog.clearCache()
     f = _facts(spark, "mv_incremental_refresh")
     assert f.n_exchanges <= 4
     assert any("o_orderdate" in p for p in f.pushed_filters)
@@ -1124,7 +1118,6 @@ def test_mmr_corpus_scored_once(spark):
     is now stronger: ZERO parquet scans may appear in the final plan
     (a regression that re-derived a pick from the corpus would
     surface a scan here)."""
-    spark.catalog.clearCache()
     f = _facts(spark, "mmr_diverse_topk")
     assert f.text.count("InMemoryFileIndex") == 0
     assert "Scan parquet" not in f.text
@@ -1134,7 +1127,6 @@ def test_mmr_corpus_scored_once(spark):
 def test_hll_estimate_reuses_register_relation(spark):
     """The register aggregate feeds both the group spine and the
     dense join — it must be persisted (one corpus pass, not two)."""
-    spark.catalog.clearCache()
     f = _facts(spark, "hll_distinct_by_priority")
     assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
     # orders scanned once for registers (cached) + once for the exact
@@ -1149,7 +1141,6 @@ def test_span_dedup_single_span_exchange(spark):
     side; the group expansion removes the join entirely).  Pins: no
     join operator at all, and exactly the two expected exchanges
     (spread + the span-hash groupBy) feeding the pair aggregate."""
-    spark.catalog.clearCache()
     f = _facts(spark, "substring_span_dedup")
     assert f.n_sort_merge_joins == 0
     assert f.n_broadcast_hash_joins == 0
@@ -1169,7 +1160,6 @@ def test_adc_family_topk_is_distributed(spark):
     from axolotls_spark.plans.audit import single_partition_windows
 
     for name in ("pq_adc_topk", "ann_ivf_adc_topk", "ann_ivfpq_residual_topk"):
-        spark.catalog.clearCache()
         f = _facts(spark, name)
         assert "TakeOrderedAndProject" in f.text, name
         assert single_partition_windows(f.text) == (), name
@@ -1192,7 +1182,6 @@ def test_vocab_topk_sweep_no_global_window(spark):
         "vocab_coverage_curve",
         "q15_top_supplier",
     ):
-        spark.catalog.clearCache()
         f = _facts(spark, name)
         assert single_partition_windows(f.text) == (), name
 
@@ -1243,7 +1232,6 @@ def test_bucketed_join_is_exchange_free_under_the_join(spark):
     below the join (the only shuffle in the plan is the final tiny
     group-by).  This pins the on-disk co-location contract: the
     shuffle is paid once at write time, not per join."""
-    spark.catalog.clearCache()
     f = _facts(spark, "bucketed_join_colocate", execute=True)
     assert f.text.count("Bucketed: true") >= 2
     assert "SortMergeJoin" in f.text
