@@ -468,9 +468,11 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the ONLY corpus-sized work is the edge aggregation
     (lineitem joined to broadcast dimensions, one shuffle for the
-    groupBy); the graph that comes out is |nations|² at most, so
-    every power iteration is a broadcast join over a 25-row rank
-    vector. 100 TB of facts, 25-node graph: aggregate-then-iterate.
+    groupBy); the graph that comes out is |nations|² at most, so it
+    collects into one row and all power iterations run inside one
+    array ``aggregate`` over a 25-entry rank map — no join or
+    exchange per iteration. 100 TB of facts, 25-node graph:
+    aggregate-then-iterate.
     """
     from axolotls_spark.operators.graph import pagerank
 
@@ -2869,7 +2871,8 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-20 terms. A composition showcase: the SAME pagerank operator
     (operators/graph.py) and even the same unrolled-iteration oracle
     SQL (_pr_iter_sql) run here over a text-derived graph instead of
-    the trade graph.
+    the trade graph.  The ≤{_TR_V}-term vocabulary cap bounds the
+    graph to one row, which pagerank's in-expression iteration needs.
 
     Scale shape: identical to cooccurrence_pmi up front (vocab cap
     bounds pair fan-out at V²), but with ZERO corpus-keyed
@@ -3524,8 +3527,8 @@ def ppr_trade_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     it, unlike global pagerank_trade_graph.
 
     Scale shape identical to pagerank_trade_graph: corpus-sized work
-    is the one edge aggregation; all 5 iterations are broadcast
-    joins over the 25-row rank vector
+    is the one edge aggregation; all 5 iterations run inside one
+    array ``aggregate`` over the one-row 25-node graph
     (operators/graph.pagerank with a seed)."""
     from axolotls_spark.operators.graph import pagerank
 

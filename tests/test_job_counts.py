@@ -28,7 +28,7 @@ JOBS = {
     "token_stats_bpe": 2,
     "multimodal_decode": 1,
     "kmeans_clusters": 21,
-    "pagerank_trade_graph": 32,
+    "pagerank_trade_graph": 7,
     "pca_project_embeddings": 15,
     "er_best_match": 6,
     "fuzzy_join_doc_titles": 3,

@@ -8,12 +8,26 @@ from __future__ import annotations
 import os
 import subprocess
 import sys
+import uuid
 
 from axolotls_spark.plans import audit
 from axolotls_spark.queries import REGISTRY
+from tools import measure
 
 SF_DIR = "/root/testdata/sf0.001"
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def _build_jobs(spark, name) -> int:
+    """Jobs that ``name``'s ``fn()`` starts while it builds its plan."""
+    sc = spark.sparkContext
+    tag = f"plan-audit-build-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        REGISTRY[name].fn(spark, SF_DIR)
+    finally:
+        sc.removeJobTag(tag)
+    return len(measure.tagged_jobs(spark, tag))
 
 
 def _facts(spark, name, **kw):
@@ -387,21 +401,20 @@ def test_sparse_cosine_prunes_and_broadcasts_df(spark):
 
 
 def test_pagerank_aggregate_then_iterate(spark):
-    """The only corpus-sized work is the edge aggregation (dims all
-    broadcast).  r9: every power iteration is a merge-hinted join of
-    relations that descend from the repartition(1) (edges/base), in
-    place of the broadcast-per-iteration shape that paid one
-    broadcast job plus a ~60 ms AQE driver-replanning gap per step
-    (41 jobs for 1.1 cpu_s).  The loop is not exchange-free: the
-    final plan re-shuffles the SinglePartition caches base and t into
-    hashpartitioning at the loop joins.  Pin: dims still broadcast on
-    the corpus pass, the loop is sort-merge (2 per iteration), and no
-    cartesian/Python."""
+    """The only corpus-sized work is the edge aggregation: the 4
+    dimension joins broadcast and lineitem⋈orders is the only join
+    that may shuffle.  The power iterations run inside one array ``aggregate``
+    over the graph collected into one row, so no loop join, cache,
+    cartesian or Python appears, and none of the three pagerank
+    callers starts a job while its plan is built."""
     f = _facts(spark, "pagerank_trade_graph")
     assert f.n_broadcast_hash_joins >= 4   # the 4 dim joins
-    assert f.n_sort_merge_joins >= 10      # 2 merge joins x 5 iterations
-    assert "CartesianProduct" not in f.text
-    assert "BatchEvalPython" not in f.text
+    assert f.n_sort_merge_joins <= 1       # lineitem⋈orders only
+    for node in ("InMemoryRelation", "CartesianProduct", "BatchEvalPython"):
+        assert node not in f.text, node
+    for name in ("pagerank_trade_graph", "ppr_trade_similarity",
+                 "textrank_keywords"):
+        assert _build_jobs(spark, name) == 0, name
 
 
 def test_pmi_vocab_topk_not_global_window(spark):
@@ -943,9 +956,14 @@ def test_psi_totals_derive_from_histograms(spark):
 
 
 def test_textrank_reuses_vocab_tokens(spark):
+    """The capped vocabulary reaches the per-doc token arrays as ONE
+    broadcast row (a nested-loop join over a 1-row build side, never a
+    cartesian product), and the token arrays are recomputed, not
+    cached: textrank persists nothing."""
     f = _facts(spark, "textrank_keywords")
-    assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
+    assert "BroadcastNestedLoopJoin" in f.text
     assert "CartesianProduct" not in f.text
+    assert "InMemoryRelation" not in f.text
 
 
 def test_textrank_single_edge_derivation(spark):
@@ -956,14 +974,8 @@ def test_textrank_single_edge_derivation(spark):
     exchanges bounded."""
     f = _facts(spark, "textrank_keywords")
     assert f.text.count("InMemoryFileIndex") <= 2
-    # <=4 SMJs of its own + 10 from pagerank's r9 merge-join
-    # iterations (2 per unrolled step — those replace the
-    # broadcast-per-iteration shape; the static count grows by the
-    # one-time SinglePartition pins on the graph/base relations and
-    # their repetition inside cached-lineage dumps).  The executed
-    # loop is not exchange-free (see graph.pagerank).
-    assert f.n_sort_merge_joins <= 14
-    assert f.n_exchanges <= 24
+    assert f.n_sort_merge_joins == 0
+    assert f.n_exchanges <= 5
 
 
 def test_kcore_iterates_over_persisted_edges(spark):
