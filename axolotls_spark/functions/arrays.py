@@ -32,6 +32,13 @@ def dot(a: Column, b: Column) -> Column:
     return F.aggregate(prods, F.lit(0.0), lambda acc, x: acc + x)
 
 
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared Euclidean distance of two numeric arrays, accumulated in
+    double, left-to-right (same per-row order as ``dot``)."""
+    diff = F.zip_with(a, b, lambda x, y: x.cast("double") - y.cast("double"))
+    return F.aggregate(diff, F.lit(0.0), lambda acc, x: acc + x * x)
+
+
 def norm(a: Column) -> Column:
     """L2 norm of a numeric array (double)."""
     sq = F.transform(a, lambda x: x.cast("double") * x.cast("double"))

@@ -5,18 +5,21 @@ Semantic clustering is a curation primitive for LLM data pipelines
 has no clustering (SURVEY §2A — its only ops are element-wise torch
 kernels); this is a §2B extension designed scale-first:
 
-- Vectors are held in LONG form (vec_id, pos, val) — the distance
-  computation is a plain broadcast-join + hash aggregate, never a
-  Python UDF, so it stays in whole-stage codegen.
-- Centroids (k × dim rows) are broadcast every iteration; the big
-  side is never shuffled for the distance step. The only wide
-  exchanges are the (vec_id, cid) argmin window and the centroid
-  re-average — both over data that shrinks with k·dim or N, not
-  N·dim·k.
+- The state is k·dim centroid values, a size the query fixes, so the
+  centroids live in ONE row (``c: array<struct<cid, v>>``, sorted by
+  cid) that is broadcast every iteration.  The nearest centroid of a
+  vector is a per-row array expression against that row — a map step
+  with no exchange, no Python and no corpus-sized intermediate.
+- The only exchanges per iteration are the (cid, pos) re-average,
+  partially aggregated map-side, and the fold of its k·dim rows back
+  into the one-row form.
 - Iterations are unrolled into one lazy plan (fixed, small count) —
   deterministic init (first k vec_ids) makes the whole run
   reproducible and oracle-checkable by unrolling the same algebra
   in SQL.
+
+Product quantization (below) keeps the long (vec_id, pos, val) form:
+its codebooks are trained per subspace on the exploded corpus.
 """
 
 from __future__ import annotations
@@ -26,6 +29,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from axolotls_spark.cacheutil import materialize
+from axolotls_spark.functions.arrays import sq_dist
 
 
 def explode_long(emb: DataFrame, id_col: str = "vec_id",
@@ -42,68 +46,57 @@ def explode_long(emb: DataFrame, id_col: str = "vec_id",
     )
 
 
-def kmeans_assign(long: DataFrame, centroids: DataFrame) -> DataFrame:
-    """One Lloyd assignment step: nearest centroid per vector.
-
-    ``long``: (vec_id, pos, val); ``centroids``: (cid, pos, cval).
-    Distance = Σ_pos (val-cval)²; ties broken by lowest cid so the
-    assignment is a pure function of the inputs. Returns
-    (vec_id, cid, d2) — d2 is the squared distance to the WINNING
-    centroid (pre-update), which is what inertia sums.
-    """
-    d2 = (
-        long.join(F.broadcast(centroids), "pos")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval"))
-                * (F.col("val") - F.col("cval"))
-            ).alias("d2")
-        )
-    )
-    w = Window.partitionBy("vec_id").orderBy("d2", "cid")
-    return (
-        d2.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cid", "d2")
-    )
-
-
-def kmeans_update(long: DataFrame, assign: DataFrame) -> DataFrame:
-    """Centroid re-average: (cid, pos, cval) from current members."""
-    return (
-        long.join(assign, "vec_id")
-        .groupBy("cid", "pos")
-        .agg(F.avg("val").alias("cval"))
-    )
+def centroid_row(cents: DataFrame) -> DataFrame:
+    """(cid, pos, cval) → one row ``c: array<struct<cid, v>>``, sorted
+    by cid, ``v`` the centroid in pos order."""
+    s = F.col("s")
+    return cents.agg(
+        F.array_sort(F.collect_list(F.struct("cid", "pos", "cval"))).alias("s")
+    ).select(F.transform(
+        F.array_distinct(F.transform(s, lambda x: x["cid"])),
+        lambda cid: F.struct(cid.alias("cid"), F.transform(
+            F.filter(s, lambda x: x["cid"] == cid), lambda x: x["cval"]
+        ).alias("v")),
+    ).alias("c"))
 
 
 def kmeans(emb: DataFrame, k: int, iters: int) -> tuple[DataFrame, DataFrame]:
-    """Run ``iters`` Lloyd iterations with deterministic init (the
-    first k vec_ids are the seed centroids). Returns (assignment,
-    centroids) as lazy DataFrames.
+    """Run ``iters`` >= 1 Lloyd iterations with deterministic init (the
+    vectors with vec_id < k seed centroids cid = vec_id). Returns
+    (assignment, centroids) as lazy DataFrames: (vec_id, cid, d2), d2
+    the squared distance to the WINNING centroid of the last round
+    (pre-update, what inertia sums), and (cid, pos, cval) re-averaged
+    from that assignment.
 
-    Reuse discipline (same shape as ``graph.pagerank``): ``long`` is
-    the exploded corpus and feeds BOTH sides of every iteration
-    (distance join + re-average join) — persist it once so the
-    posexplode runs a single corpus pass instead of 2·iters.  Each
-    round's centroid relation (k·dim rows, tiny) is materialized in
-    one partition; without that, the unrolled lazy plan re-derives
-    iteration i's centroids from scratch inside iteration i+1, and
-    lineage depth — hence recomputation — grows quadratically with
-    ``iters``.
+    Each round crosses the vectors with the broadcast centroid row and
+    keeps ``array_min`` of (d2, cid) structs, so ties go to the lowest
+    cid; a centroid that captures no member drops out.  A vector whose
+    embedding is null or empty is not clustered.
     """
-    long = explode_long(emb).persist()
-    centroids = (
-        long.filter(F.col("vec_id") < k)
-        .select(F.col("vec_id").alias("cid"), "pos", F.col("val").alias("cval"))
-    )
-    assign = None
+    vecs = emb.where(F.size("embedding") > 0).select("vec_id", "embedding")
+    row = vecs.where(F.col("vec_id") < k).agg(F.array_sort(F.collect_list(
+        F.struct(F.col("vec_id").alias("cid"),
+                 F.col("embedding").cast("array<double>").alias("v"))
+    )).alias("c")).where(F.size("c") > 0)  # no seed: nothing is assigned
     for _ in range(iters):
-        centroids = materialize(centroids.coalesce(1))
-        assign = kmeans_assign(long, centroids)
-        centroids = kmeans_update(long, assign)
-    return assign, centroids
+        best = F.array_min(F.transform("c", lambda x: F.struct(
+            sq_dist(F.col("embedding"), x["v"]).alias("d2"),
+            x["cid"].alias("cid"),
+        )))
+        # inline() makes the argmin a Generate: the isnotnull(cid) a
+        # caller's join infers stops above it, where a projection
+        # would let it into the join condition and run the argmin
+        # twice per vector.
+        assign = vecs.crossJoin(F.broadcast(row)).select(
+            "vec_id", "embedding", F.inline(F.array(best))
+        )
+        cents = (
+            assign.select("cid", F.posexplode("embedding").alias("pos0", "val"))
+            .groupBy("cid", (F.col("pos0") + 1).alias("pos"))
+            .agg(F.avg("val").alias("cval"))
+        )
+        row = centroid_row(cents)
+    return assign.select("vec_id", "cid", "d2"), cents
 
 
 # ---------------------------------------------------------------------------

@@ -207,35 +207,33 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ|cluster|², bounded by clustering granularity, never the N²
     all-pairs join; raise k as the corpus grows to hold cluster
     size — and therefore per-key join fan-out — constant. The
-    kmeans assignment itself never shuffles the N·dim fact side
+    kmeans assignment itself never shuffles the vectors
     (operators/clustering.py). Output is all-integer, so the whole
     cluster→prune pipeline is exactly hash-checked against the
     SQL-unrolled oracle.
 
-    Reuse discipline: the member relation (assignment ⋈ vectors,
-    with the L2 norm computed ONCE per vector) feeds both sides of
-    the pairwise self-join — persist it, or the whole kmeans lineage
-    executes twice and every pair re-derives two norms (the
-    sparse_cosine_pairs lesson from round 1; 12.4 s → ~1 s at
-    sf0.1).
+    Reuse: the member relation (assignment ⋈ vectors, with the L2
+    norm computed ONCE per vector) feeds both sides of the pairwise
+    self-join through one reused exchange, so the kmeans lineage and
+    the norms run once without a cache.
     """
     from axolotls_spark.functions.arrays import dot, norm
     from axolotls_spark.operators import clustering as CLU
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     assign, _ = CLU.kmeans(emb, k=8, iters=2)
+    # One explicit repartition by cid: AQE leaves a user-numbered
+    # shuffle uncoalesced, so the CPU-dense pairwise join keeps one task
+    # per cluster instead of folding the byte-tiny relation into one
+    # task; both self-join sides reuse this one exchange.
     mem = (
         assign.select("vec_id", "cid")
         .join(emb, "vec_id")
         .select(
             "vec_id", "cid", "embedding", norm(F.col("embedding")).alias("nm")
         )
-        .persist()
+        .repartition(int(spark.conf.get("spark.sql.shuffle.partitions")), "cid")
     )
-    # (r8: an eager count was tried and REVERTED — tasks 205->207, no
-    # rebuild eliminated; the kmeans loop's own checkpoints already
-    # serialize the lineage, so the self-join sides share the lazy
-    # cache build without racing.)
     a = mem.select(
         F.col("vec_id").alias("a_id"),
         "cid",

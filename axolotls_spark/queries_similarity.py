@@ -345,13 +345,13 @@ _KMEANS_ORACLE = _KMEANS_CTE + """
 def kmeans_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relational k-means (k=8, 2 Lloyd iterations, deterministic
     first-k init) — cluster sizes + centroid L2 norms. The distance
-    step is a broadcast join + hash aggregate over the long-form
-    vectors (operators/clustering.py); the identical algebra is
+    step is per-vector array math against the centroids broadcast as
+    one row (operators/clustering.py); the identical algebra is
     unrolled in the DuckDB oracle, so the assignment is exactly
     hash-checked. Curation primitive for cluster-then-sample /
-    topic balancing over a 100 TB corpus: the N·dim fact side is
-    never shuffled for distances — only the shrunken (vec_id, cid)
-    argmin and the k·dim re-average exchange."""
+    topic balancing over a 100 TB corpus: the vectors are never
+    shuffled — only the map-side-aggregated k·dim re-average and the
+    fold of its rows into the next round's centroid row exchange."""
     from axolotls_spark.operators import clustering as CLU
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -1467,41 +1467,37 @@ def silhouette_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     centroid distances, turning O(N^2) into one broadcast-centroid
     pass; the convention sklearn calls "silhouette on centroids").
 
-    Scale shape: ONE extra distance pass against the 8x64-row
-    broadcast centroid relation on top of the certified kmeans run;
-    a and b fall out of the same per-point conditional MIN
-    aggregate; output is k rows. Complements kmeans_inertia (which
+    Scale shape: ONE extra map-side distance pass of the assigned
+    vectors against the broadcast one-row final centroids
+    (``clustering.centroid_row``) on top of the certified kmeans run;
+    a and b fall out of the same per-point array of k distances;
+    output is k rows. Complements kmeans_inertia (which
     only sees within-cluster tightness — silhouette also penalizes
     overlapping clusters)."""
+    from axolotls_spark.functions.arrays import sq_dist
     from axolotls_spark.operators import clustering as CLU
 
     emb = load_table(spark, sf_dir, "embeddings").select(
         "vec_id", "embedding"
     )
     assign, cents = CLU.kmeans(emb, k=8, iters=2)
-    long = CLU.explode_long(emb)
-    d3 = (
-        long.join(F.broadcast(cents), "pos")
-        .groupBy("vec_id", "cid")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval"))
-                * (F.col("val") - F.col("cval"))
-            ).alias("d2c")
-        )
-    )
+    d = F.col("d")
     per_point = (
-        d3.join(
-            assign.select("vec_id", F.col("cid").alias("acid")), "vec_id"
-        )
-        .groupBy("vec_id", "acid")
-        .agg(
-            F.min(
-                F.when(F.col("cid") == F.col("acid"), F.col("d2c"))
-            ).alias("a2d"),
-            F.min(
-                F.when(F.col("cid") != F.col("acid"), F.col("d2c"))
-            ).alias("b2d"),
+        assign.select("vec_id", F.col("cid").alias("acid"))
+        .join(emb, "vec_id")
+        .crossJoin(F.broadcast(CLU.centroid_row(cents)))
+        .select("acid", F.transform("c", lambda x: F.struct(
+            x["cid"].alias("cid"),
+            sq_dist(F.col("embedding"), x["v"]).alias("d2"),
+        )).alias("d"))
+        .select(
+            "acid",
+            F.get(F.filter(d, lambda x: x["cid"] == F.col("acid")), 0)["d2"]
+            .alias("a2d"),
+            F.array_min(F.transform(
+                F.filter(d, lambda x: x["cid"] != F.col("acid")),
+                lambda x: x["d2"],
+            )).alias("b2d"),
         )
     )
     a_d = F.sqrt(F.col("a2d"))
@@ -2300,10 +2296,11 @@ def cluster_label_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     "clusters ≈ topics".
 
     Scale shape: the k-means assignment is the shared broadcast-
-    Lloyd operator (one corpus pass per iteration, cached, same
-    relation every kmeans_* query certifies); NMI itself is one
-    contingency aggregate (≤ k·|labels| cells) plus scalar entropy
-    algebra on it."""
+    Lloyd operator (one map-side pass of the vectors per iteration
+    against a one-row centroid broadcast, the same plan every
+    kmeans_* query certifies); NMI itself is one contingency
+    aggregate (≤ k·|labels| cells) plus scalar entropy algebra on
+    it."""
     from axolotls_spark.operators import clustering as CLU
 
     emb = load_table(spark, sf_dir, "embeddings").select(
@@ -2313,18 +2310,15 @@ def cluster_label_nmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     lab = assign.select("vec_id", "cid").join(
         emb.select("vec_id", "label"), "vec_id"
     )
-    # Persisted: the contingency table and both
-    # marginals are each referenced by several of the entropy/MI
-    # aggregates below — without the persists every reference
-    # re-executed the whole k-means assignment chain (measured: 92
-    # jobs for this one query).  All three are <= k x |labels| rows.
-    cont = (
-        lab.groupBy("cid", "label")
-        .agg(F.count(F.lit(1)).cast("double").alias("nij"))
-        .persist()
+    # Not persisted: every reader of the contingency table and its two
+    # marginals reuses the exchanges of the one k-means plan, while a
+    # persist keeps 32 partitions per cached relation (sf0.1: 33 jobs
+    # and 33 tasks without the persists, 35 and 624 with them).
+    cont = lab.groupBy("cid", "label").agg(
+        F.count(F.lit(1)).cast("double").alias("nij")
     )
-    margc = cont.groupBy("cid").agg(F.sum("nij").alias("ni")).persist()
-    margl = cont.groupBy("label").agg(F.sum("nij").alias("nj")).persist()
+    margc = cont.groupBy("cid").agg(F.sum("nij").alias("ni"))
+    margl = cont.groupBy("label").agg(F.sum("nij").alias("nj"))
     tot = cont.agg(F.sum("nij").alias("n"))
     mi = (
         cont.join(F.broadcast(margc), "cid")

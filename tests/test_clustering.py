@@ -97,3 +97,62 @@ def test_pq_encode_matches_numpy_mirror(spark):
         for i in range(n):
             expected[(i, s)] = cid_map[a2[i]]
     assert got == expected
+
+
+def test_kmeans_matches_numpy_mirror(spark):
+    """A NumPy Lloyd loop (first-k init, lowest-cid ties, empty
+    clusters dropped) gives the same assignment, the same d2 and the
+    same centroids as ``kmeans`` on a seeded random corpus."""
+    import numpy as np
+
+    n, dim, k, iters = 60, 8, 4, 3
+    X = np.random.default_rng(11).normal(size=(n, dim))
+    emb = spark.createDataFrame(
+        [(i, [float(x) for x in X[i]]) for i in reversed(range(n))],
+        "vec_id long, embedding array<double>",
+    )
+    assign, cents = CLU.kmeans(emb, k=k, iters=iters)
+
+    cids, C = np.arange(k), X[:k].copy()
+    for _ in range(iters):
+        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        a = cids[d2.argmin(axis=1)]  # first minimum == lowest cid
+        best = d2.min(axis=1)
+        cids = np.unique(a)
+        C = np.stack([X[a == c].mean(axis=0) for c in cids])
+
+    got = {r.vec_id: (r.cid, r.d2) for r in assign.collect()}
+    assert {i: c for i, (c, _) in got.items()} == dict(enumerate(a.tolist()))
+    assert np.allclose([got[i][1] for i in range(n)], best, rtol=1e-12)
+    cv = {(r.cid, r.pos): r.cval for r in cents.collect()}
+    assert len(cv) == len(cids) * dim
+    for j, c in enumerate(cids):
+        assert np.allclose([cv[(c, p + 1)] for p in range(dim)], C[j],
+                           rtol=1e-12)
+
+
+def test_kmeans_equidistant_vector_goes_to_lower_cid(spark):
+    """Vector 2 sits exactly halfway between seeds 0 and 1; rows arrive
+    in descending vec_id order, so only the cid sort puts seed 0
+    first."""
+    rows = [(2, [1.0, 0.0]), (1, [2.0, 0.0]), (0, [0.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assign, _ = CLU.kmeans(emb, k=2, iters=1)
+    got = {r.vec_id: (r.cid, r.d2) for r in assign.collect()}
+    assert got == {0: (0, 0.0), 1: (1, 0.0), 2: (0, 1.0)}
+
+
+def test_kmeans_drops_null_embedding(spark):
+    """A row whose embedding is null is not clustered — not even as a
+    seed: seed 1 is null, so every vector joins cid 0 — and leaves the
+    rest of the run unchanged."""
+    rows = [(0, [0.0, 0.0]), (1, None), (2, [1.0, 1.0]), (3, [3.0, 0.0])]
+    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    assign, cents = CLU.kmeans(emb, k=2, iters=2)
+    got = sorted(map(tuple, assign.collect()))
+    assert [(v, c) for v, c, _ in got] == [(0, 0), (2, 0), (3, 0)]
+    kept, kept_cents = CLU.kmeans(
+        emb.where("embedding IS NOT NULL"), k=2, iters=2)
+    assert got == sorted(map(tuple, kept.collect()))
+    assert sorted(map(tuple, cents.collect())) == sorted(
+        map(tuple, kept_cents.collect()))

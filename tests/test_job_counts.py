@@ -27,7 +27,7 @@ JOBS = {
     "nucleus_vocab_size": 15,
     "token_stats_bpe": 2,
     "multimodal_decode": 1,
-    "kmeans_clusters": 21,
+    "kmeans_clusters": 10,
     "pagerank_trade_graph": 7,
     "pca_project_embeddings": 15,
     "er_best_match": 6,

@@ -60,8 +60,9 @@ def test_query_matches_oracle(name, parity_results):
 
 
 #: Queries that persist relations their lazy results re-read: in the
-#: query body, on the dedup path and in the k-means loop.
-_PERSISTING = ("cusum_changepoint", "minhash_jaccard_estimate", "kmeans_clusters")
+#: query body, on the dedup path and in the product-quantization loop.
+_PERSISTING = ("cusum_changepoint", "minhash_jaccard_estimate",
+               "pq_encode_embeddings")
 
 
 def test_release_caches_frees_every_persist(spark, sf_dir):

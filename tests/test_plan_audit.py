@@ -6,6 +6,7 @@ performance bug even while every value-check still passes."""
 from __future__ import annotations
 
 import os
+import re
 import subprocess
 import sys
 import uuid
@@ -321,15 +322,41 @@ def test_split_map_roundtrip_is_map_only(spark):
     assert "ArrowEvalPython" not in f.text
 
 
+#: The registry queries built on ``operators/clustering.kmeans``.
+_KMEANS_CALLERS = ("kmeans_clusters", "kmeans_inertia",
+                   "cluster_balanced_sample", "silhouette_kmeans",
+                   "cluster_label_nmi", "semdedup_prune")
+
+
+def _nlj_build_rows(text: str) -> list[int]:
+    """Runtime row count of the build side of every
+    BroadcastNestedLoopJoin in an executed plan's final AQE plan."""
+    final = text.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    rows = []
+    for i, line in enumerate(lines):
+        j = line.find("BroadcastNestedLoopJoin")
+        if j < 0:
+            continue
+        col = line.rfind("+- ", 0, j) + 3  # column of the join's children
+        build = next(c for c in lines[i + 1:] if c[col:col + 3] == "+- ")
+        rows.append(int(re.search(r"rowCount=(\d+)", build).group(1)))
+    return rows
+
+
 def test_kmeans_distance_broadcasts_centroids(spark):
-    """Lloyd distance step: centroids (k x dim) broadcast against the
-    long fact side each iteration — the N·dim side is never shuffled
-    for distances, so the plan has one BroadcastHashJoin per
-    iteration and no cartesian/NLJ anywhere."""
-    f = _facts(spark, "kmeans_clusters")
-    assert f.n_broadcast_hash_joins >= 2
-    assert "CartesianProduct" not in f.text
-    assert "BroadcastNestedLoopJoin" not in f.text
+    """Lloyd distance step: every round crosses the vectors with the
+    centroids broadcast as ONE row and picks the nearest centroid with
+    array math, so every BroadcastNestedLoopJoin builds one row and
+    the vectors are never shuffled for distances.  There is one join
+    per round (2) plus one for the last round's second reader, the
+    final re-average; no per-vector argmin Window appears, and no join
+    condition evaluates the argmin a second time per vector."""
+    f = _facts(spark, "kmeans_clusters", execute=True)
+    rows = _nlj_build_rows(f.text)
+    assert rows and set(rows) == {1} and len(rows) <= 2 + 1, rows
+    assert not re.search(r"windowspecdefinition\(vec_id#", f.text)
+    assert not re.search(r"Join condition: .*array_min", f.text)
 
 
 def test_gopher_filters_map_only(spark):
@@ -546,20 +573,24 @@ def test_pmi_reuses_vocab_filtered_tokens(spark):
     assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
 
 
-def test_kmeans_caches_long_corpus(spark):
-    """kmeans persists the exploded corpus + per-round centroids so
-    lineage (and recomputation) stops growing with iteration count."""
+def test_kmeans_one_lazy_plan(spark):
+    """k-means is one lazy plan: it persists nothing, runs no
+    cartesian product or Python, and none of its callers starts a job
+    while its plan is built."""
     f = _facts(spark, "kmeans_clusters")
-    assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
+    for node in ("InMemoryRelation", "CartesianProduct", "Python", "Pandas"):
+        assert node not in f.text, node
+    for name in _KMEANS_CALLERS:
+        assert _build_jobs(spark, name) == 0, name
 
 
 def test_semdedup_reuses_member_relation(spark):
     """SemDeDup: the (assignment + vector + norm) member relation
-    feeds both sides of the within-cluster self-join — it must come
-    from cache, or the whole kmeans lineage executes twice. And the
-    pairwise step must stay an equi-join on cid."""
-    f = _facts(spark, "semdedup_prune")
-    assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
+    feeds both sides of the within-cluster self-join — both must read
+    ONE exchange of it, or the whole kmeans lineage executes twice.
+    And the pairwise step must stay an equi-join on cid."""
+    f = _facts(spark, "semdedup_prune", execute=True)
+    assert "ReusedExchange" in f.text
     assert "CartesianProduct" not in f.text
 
 
