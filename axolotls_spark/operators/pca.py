@@ -19,23 +19,25 @@ Scale design (the moment-sketch shape):
 3. **Eigendecomposition where the data is small.** The d×d
    covariance is one row; ``numpy.linalg.eigh`` runs inside a
    ``mapInPandas`` over that single row (never a driver collect),
-   emitting the top-k eigenpairs.
-4. **Projection as a relational op.** Components are a (pos, comp,
-   weight) relation (d·k rows, broadcast); scores are a join +
-   group-by dot product in whole-stage codegen.
+   emitting ONE row: mean, top-k components, trace.
+4. **Projection as a map.** That row broadcasts into a nested-loop
+   join; scores are array dot products, never a per-position
+   explode of the corpus.
 
 Eigenvector sign (and near-degenerate order) is solver-specific, so
-the query is rows-only for the oracle; accuracy vs numpy's reference
+the query reports sign-free invariants; accuracy vs numpy's reference
 PCA is pinned in tests/test_pca.py (eigenvalues, orthonormality,
 sign-insensitive score match).
 """
 
 from __future__ import annotations
 
-from typing import Callable, Iterator
+from typing import Callable
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from axolotls_spark.functions.arrays import dot
 
 
 def sketch(df: DataFrame, moments: Callable, schema: str) -> DataFrame:
@@ -102,46 +104,59 @@ def gram_moments(emb: DataFrame, vec_col: str = "embedding") -> DataFrame:
 
 
 def principal_components(moments: DataFrame, k: int) -> DataFrame:
-    """Top-k eigenpairs of the covariance as a (comp, eigenvalue,
-    pos, weight) relation — eigh on the 1-row moments inside
-    mapInPandas, never a driver-side collect."""
+    """Top-k eigenpairs of the covariance as ONE row: ``mean``,
+    ``comps`` (array<struct<comp, eigenvalue, w>>, sorted by comp,
+    eigenvalue descending) and the covariance ``trace`` — eigh on
+    the 1-row moments inside mapInPandas, never a driver collect."""
 
-    def eig(
-        it: Iterator["pd.DataFrame"],  # noqa: F821
-    ) -> Iterator["pd.DataFrame"]:  # noqa: F821
+    def eig(it):
         import numpy as np
         import pandas as pd
 
         for pdf in it:
-            for _, row in pdf.iterrows():
-                n = float(row["n"])
-                s = np.asarray(row["s"], dtype="float64")
-                d = s.shape[0]
-                g = np.asarray(row["g"], dtype="float64").reshape(d, d)
-                mean = s / n
+            for n, s, g in zip(pdf["n"], pdf["s"], pdf["g"]):
+                mean = np.asarray(s, dtype="float64") / n
+                d = mean.shape[0]
+                g = np.asarray(g, dtype="float64").reshape(d, d)
                 cov = g / n - np.outer(mean, mean)
                 vals, vecs = np.linalg.eigh(cov)
                 order = np.argsort(vals)[::-1][:k]
-                out = {
-                    "comp": [],
-                    "eigenvalue": [],
-                    "pos": [],
-                    "weight": [],
-                    "mean_pos": [],
-                }
-                for ci, ei in enumerate(order):
-                    for pos in range(d):
-                        out["comp"].append(ci)
-                        out["eigenvalue"].append(float(vals[ei]))
-                        out["pos"].append(pos)
-                        out["weight"].append(float(vecs[pos, ei]))
-                        out["mean_pos"].append(float(mean[pos]))
-                yield pd.DataFrame(out)
+                comps = [
+                    {"comp": ci, "eigenvalue": float(vals[ei]),
+                     "w": vecs[:, ei].tolist()}
+                    for ci, ei in enumerate(order)
+                ]
+                yield pd.DataFrame({
+                    "mean": [mean.tolist()], "comps": [comps],
+                    "trace": [float(np.trace(cov))],
+                })
 
     return moments.mapInPandas(
         eig,
-        "comp INT, eigenvalue DOUBLE, pos INT, weight DOUBLE,"
-        " mean_pos DOUBLE",
+        "mean ARRAY<DOUBLE>, comps ARRAY<STRUCT<comp: INT,"
+        " eigenvalue: DOUBLE, w: ARRAY<DOUBLE>>>, trace DOUBLE",
+    )
+
+
+def project(emb: DataFrame, pcs: DataFrame, id_col: str = "vec_id",
+            vec_col: str = "embedding") -> DataFrame:
+    """(id, comp, score, eigenvalue) against the
+    :func:`principal_components` row ``pcs``:
+    score(v, c) = sum_pos (x[pos] - mean[pos]) * w[c, pos].  A map
+    step: ``pcs`` broadcasts into a nested-loop join, each score is
+    an array dot product, and ``inline`` emits one row per component.
+    """
+    xc = F.zip_with(
+        F.col(vec_col), F.col("mean"), lambda x, m: x.cast("double") - m
+    )
+    return (
+        emb.crossJoin(F.broadcast(pcs))
+        .select(id_col, xc.alias("xc"), "comps")
+        .select(id_col, F.inline(F.transform("comps", lambda c: F.struct(
+            c["comp"].alias("comp"),
+            dot(F.col("xc"), c["w"]).alias("score"),
+            c["eigenvalue"].alias("eigenvalue"),
+        ))))
     )
 
 
@@ -152,23 +167,7 @@ def pca_project(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Project every vector onto the top-k principal axes (centered):
-    score(v, c) = sum_pos (x[pos] - mean[pos]) * w[c, pos].
-
-    The components relation (d·k rows) broadcasts; the projection is
-    an equi-join on pos + hash aggregate — pure codegen over the
-    corpus, one shuffle (the groupBy), no Python in the hot path.
+    two corpus reads (the sketch, the projection), no corpus shuffle.
     """
-    comps = principal_components(gram_moments(emb, vec_col), k)
-    long = emb.select(
-        id_col, F.posexplode(vec_col).alias("pos", "val_f")
-    ).select(id_col, "pos", F.col("val_f").cast("double").alias("val"))
-    return (
-        long.join(F.broadcast(comps), "pos")
-        .groupBy(id_col, "comp")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("mean_pos")) * F.col("weight")
-            ).alias("score"),
-            F.first("eigenvalue").alias("eigenvalue"),
-        )
-    )
+    pcs = principal_components(gram_moments(emb, vec_col), k)
+    return project(emb, pcs, id_col, vec_col)

@@ -20,6 +20,15 @@ prefix sum are independent of where the sampled range boundaries fall,
 so the sampling nondeterminism inside RangePartitioner cannot change
 the result.
 
+A rank / running sum over a frequency table ordered by count
+descending needs no range shuffle and no tie-break: terms of equal
+count are interchangeable for it, so the table folds into its count
+LEVELS, ``(cnt, f)`` with f terms at count cnt.  Counts that total T
+have at most √(2T) distinct values (levels 1..L already hold
+L(L+1)/2 tokens), so the levels collect into ONE row and the prefix
+sum is one array ``aggregate`` over it (``top_p_rank``,
+``top_k_mass``).
+
 Reference parity: the reference engine has no distributed runtime —
 its cumulative ops are single-process torch folds; this is the
 Spark-native re-expression of the same semantics at cluster scale.
@@ -38,6 +47,8 @@ __all__ = [
     "ranked_cumsum",
     "exclusive_prefix_max",
     "order_statistic_values",
+    "top_p_rank",
+    "top_k_mass",
 ]
 
 _PART = "__rcs_part"
@@ -227,4 +238,97 @@ def exclusive_prefix_max(
         # partition correctly gets NULL (no predecessor).
         .withColumn(out_name, F.greatest(F.col(_OFF_S), F.col(_LCUM)))
         .drop(_PART, _LCUM, _OFF_S)
+    )
+
+
+def _count_levels(freq: DataFrame) -> DataFrame:
+    """One row: ``lv``, the count levels of the (term, cnt) relation
+    ``freq`` as array<struct<cnt, f>> sorted by cnt descending;
+    ``n_terms``, the number of terms (0 when ``freq`` is empty); and
+    ``t``, the total count as a double (null when empty)."""
+    return (
+        freq.groupBy("cnt")
+        .agg(F.count(F.lit(1)).alias("f"))
+        .agg(
+            F.sort_array(F.collect_list(F.struct("cnt", "f")), asc=False)
+            .alias("lv"),
+            F.coalesce(F.sum("f"), F.lit(0)).alias("n_terms"),
+            F.sum(F.col("cnt") * F.col("f")).cast("double").alias("t"),
+        )
+    )
+
+
+def _long(v) -> Column:
+    return F.lit(v).cast("long")
+
+
+def top_p_rank(freq: DataFrame, p: float) -> DataFrame:
+    """One row (rank, n_terms): ``rank`` is the smallest rn with
+    ``double(cum) >= p * double(T)``, where terms are ranked by cnt
+    descending (any tie order), cum is the running sum of cnt and T
+    the total; null when ``freq`` is empty.
+
+    One fold over the count levels carries (terms before, count
+    before, answer).  In the level that crosses the threshold the
+    answer is ``rn_before + j`` for the smallest j with
+    ``double(cum_before + j·cnt) >= p·T``; j comes from ``ceil`` of
+    the double quotient and is corrected by one either way against
+    the exact long sum, because the threshold is a double.  Past
+    2**53 tokens a running sum no longer converts to a double
+    exactly, and one step of correction can fall short."""
+    thr = F.lit(p) * F.col("t")
+
+    def reached(cum: Column) -> Column:
+        return cum.cast("double") >= thr
+
+    def step(acc: Column, x: Column) -> Column:
+        rn, cum, cnt, f = acc["rn"], acc["cum"], x["cnt"], x["f"]
+        j = F.least(
+            F.greatest(F.ceil((thr - cum.cast("double")) / cnt), _long(1)), f
+        )
+        j = (
+            F.when(reached(cum + (j - 1) * cnt), j - 1)
+            .when(~reached(cum + j * cnt), j + 1)
+            .otherwise(j)
+        )
+        return F.struct(
+            (rn + f).alias("rn"),
+            (cum + f * cnt).alias("cum"),
+            F.when(
+                acc["ans"].isNull() & reached(cum + f * cnt), rn + j
+            ).otherwise(acc["ans"]).alias("ans"),
+        )
+
+    init = F.struct(
+        _long(0).alias("rn"), _long(0).alias("cum"), _long(None).alias("ans")
+    )
+    return _count_levels(freq).select(
+        F.aggregate("lv", init, step)["ans"].alias("rank"), "n_terms"
+    )
+
+
+def top_k_mass(freq: DataFrame, ks: Sequence[int]) -> DataFrame:
+    """(k, covered, t) for each k in ``ks``: ``covered`` is the total
+    cnt of the top-k terms by cnt descending (any tie order), ``t``
+    the total as a double.  No rows when ``freq`` is empty.
+
+    One fold over the count levels per k: a level whose f terms
+    start after rank rn_before adds cnt · clamp(k - rn_before, 0, f).
+    """
+    k = F.col("k")
+
+    def step(acc: Column, x: Column) -> Column:
+        rn, cnt, f = acc["rn"], x["cnt"], x["f"]
+        return F.struct(
+            (rn + f).alias("rn"),
+            (acc["cov"] + cnt * F.least(F.greatest(k - rn, _long(0)), f))
+            .alias("cov"),
+        )
+
+    init = F.struct(_long(0).alias("rn"), _long(0).alias("cov"))
+    return (
+        _count_levels(freq)
+        .where(F.size("lv") > 0)
+        .select(F.explode(F.array(*[_long(v) for v in ks])).alias("k"), "lv", "t")
+        .select("k", F.aggregate("lv", init, step)["cov"].alias("covered"), "t")
     )

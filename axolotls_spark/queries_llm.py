@@ -16,11 +16,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from axolotls_spark.cacheutil import materialize
+from axolotls_spark.functions.arrays import dot
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.operators.dedup import tokens_col
 from axolotls_spark.operators.pca import (
-    gram_moments, principal_components, sketch,
+    gram_moments, principal_components, project, sketch,
 )
 from axolotls_spark.registry import register, stable_f32
 
@@ -589,72 +589,46 @@ def pca_project_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-8 PCA over every embedding vector, reported as sign-free
     invariants (see operators/pca.py for the moment-sketch design:
     one corpus scan for map-side Gram partials, eigh on the 1-row
-    covariance, broadcast components, codegen projection).  The
-    projection itself still runs over the whole corpus — its scores
-    feed the per-component variance that must equal the eigenvalue.
+    covariance into ONE components row, projection as a map against
+    that broadcast row).  The projection itself still runs over the
+    whole corpus — its scores feed the per-component variance that
+    must equal the eigenvalue; the basis checks and the trace read
+    the components row alone.
     """
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    # comps is tiny (k*d rows) but its lineage is the corpus-wide
-    # moment sketch, and six readers below fan out from it.
-    comps = materialize(principal_components(gram_moments(emb), 8))
-
-    long = emb.select(
-        "vec_id", F.posexplode("embedding").alias("pos", "val_f")
-    ).select("vec_id", "pos", F.col("val_f").cast("double").alias("val"))
-    scores = (
-        long.join(F.broadcast(comps), "pos")
-        .groupBy("vec_id", "comp")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("mean_pos")) * F.col("weight")
-            ).alias("score"),
-            F.first("eigenvalue").alias("eigenvalue"),
-        )
-    )
+    pcs = principal_components(gram_moments(emb), 8)
     # Parseval check: centered scores have mean 0, so the population
     # variance of the projection equals the eigenvalue exactly.
-    var_gap = scores.groupBy("comp").agg(
+    var_gap = project(emb, pcs).groupBy("comp").agg(
         (F.avg(F.col("score") * F.col("score")) - F.first("eigenvalue")).alias("vg")
     )
-    unit = comps.groupBy("comp").agg(
-        F.sum(F.col("weight") * F.col("weight")).alias("un")
-    )
-    a = comps.select(F.col("comp").alias("ca"), "pos", F.col("weight").alias("wa"))
-    b = comps.select(F.col("comp").alias("cb"), "pos", F.col("weight").alias("wb"))
-    orth = (
-        a.join(b, "pos")
-        .filter(F.col("cb") < F.col("ca"))
-        .groupBy("ca", "cb")
-        .agg(F.sum(F.col("wa") * F.col("wb")).alias("d"))
-        .groupBy(F.col("ca").alias("comp"))
-        .agg(F.max(F.abs("d")).alias("om"))
-    )
-    eig = comps.groupBy("comp").agg(F.first("eigenvalue").alias("ev"))
-    nxt = eig.select((F.col("comp") - 1).alias("comp"), F.col("ev").alias("ev_next"))
-    ordered = eig.join(nxt, "comp", "left").select(
-        "comp", F.coalesce(F.col("ev") >= F.col("ev_next"), F.lit(True)).alias("order_ok")
-    )
-    trace = (
-        long.groupBy("pos")
-        .agg((F.avg(F.col("val") * F.col("val")) - F.avg("val") * F.avg("val")).alias("v"))
-        .agg(F.round(F.sum("v"), 4).alias("trace_total"))
+    # The basis checks read the one components row with array math:
+    # |w|², the max |dot| with every earlier component, and the
+    # eigenvalue order against the next component.
+    comps = F.col("comps")
+    checks = pcs.select(
+        F.inline(F.transform(comps, lambda c, i: F.struct(
+            c["comp"].alias("comp"),
+            dot(c["w"], c["w"]).alias("un"),
+            F.array_max(F.transform(
+                F.slice(comps, 1, i), lambda e: F.abs(dot(e["w"], c["w"]))
+            )).alias("om"),
+            F.coalesce(
+                c["eigenvalue"] >= F.get(comps, i + 1)["eigenvalue"], F.lit(True)
+            ).alias("order_ok"),
+        ))),
+        F.round("trace", 4).alias("trace_total"),
     )
     # `+ 0.0` normalizes IEEE -0.0 (round of a tiny negative gap) to
     # 0.0 so the value hash matches the oracle's literal zero.
     z = lambda c, s: (F.round(c, s) + F.lit(0.0))  # noqa: E731
-    return (
-        unit.join(var_gap, "comp")
-        .join(orth, "comp", "left")
-        .join(ordered, "comp")
-        .crossJoin(F.broadcast(trace))
-        .select(
-            "comp",
-            z(F.col("un"), 6).alias("unit_norm"),
-            z(F.col("vg"), 6).alias("var_gap"),
-            z(F.coalesce(F.col("om"), F.lit(0.0)), 6).alias("orth_max"),
-            "order_ok",
-            "trace_total",
-        )
+    return checks.join(var_gap, "comp").select(
+        "comp",
+        z(F.col("un"), 6).alias("unit_norm"),
+        z(F.col("vg"), 6).alias("var_gap"),
+        z(F.coalesce(F.col("om"), F.lit(0.0)), 6).alias("orth_max"),
+        "order_ok",
+        "trace_total",
     )
 
 

@@ -32,7 +32,7 @@ from pyspark.sql.window import Window
 from axolotls_spark.cacheutil import materialize
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import tokens_col
-from axolotls_spark.operators.prefix import ranked_cumsum
+from axolotls_spark.operators.prefix import top_k_mass, top_p_rank
 from axolotls_spark.queries_analytics import _OLS_B0, _OLS_B1, _OLS_B2
 from axolotls_spark.registry import register, stable_f32
 
@@ -143,6 +143,17 @@ def bigram_interp_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
 _VOCAB_KS = (100, 1000, 10000)
 
 
+def _term_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(term, cnt): corpus token counts in one map-side-combined
+    aggregate."""
+    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
+    return (
+        docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
+        .groupBy("term")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+
+
 @register(
     "vocab_coverage_curve",
     oracle=f"""
@@ -172,47 +183,20 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary cover, for k ∈ {100, 1k, 10k}? — the OOV/coverage
     curve that sizes a tokenizer's vocabulary before training it.
 
-    Scale shape: the corpus collapses to the Zipf-small term
-    frequency table in one map-side-combined aggregate; the global
-    rank and the 3×|vocab| candidate cross-join act on that small
-    relation only (the unpartitioned row_number is over the vocab,
-    never the corpus). Coverage ratios are exact-integer divisions,
-    so the float32 emit is bit-stable across engines.
+    Scale shape: the corpus collapses to the term frequency table in
+    one map-side-combined aggregate, and that table to its count
+    levels (cnt, f) — at most √(2·tokens) of them — collected into
+    one row; each k's covered-token count is one array fold over that
+    row (operators/prefix.top_k_mass).  No rank, window or join runs
+    over the vocabulary.  Coverage ratios are exact-integer
+    divisions, so the float32 emit is bit-stable across engines.
     """
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    # freq feeds both the ranking and the total — persist the
-    # Zipf-small relation so the corpus is tokenized exactly once.
-    freq = (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()
-    )
-    # Only the top-max(ks) terms can ever contribute to a coverage
-    # bucket, so truncate FIRST with orderBy+limit
-    # (TakeOrderedAndProject — distributed per-partition top-k) and
-    # rank the bounded k-row result; the unpartitioned row_number
-    # never sees the full, corpus-growing vocabulary.
-    top = freq.orderBy(F.desc("cnt"), "term").limit(max(_VOCAB_KS))
-    ranked = top.select(
-        "cnt",
-        F.row_number().over(Window.orderBy(F.desc("cnt"), "term")).alias("rn"),
-    )
-    tot = freq.agg(F.sum("cnt").cast("double").alias("t"))
-    ks = spark.range(1).select(
-        F.explode(F.array(*[F.lit(k) for k in _VOCAB_KS])).alias("vocab_size")
-    )
-    covered = F.sum(F.when(F.col("rn") <= F.col("vocab_size"), F.col("cnt")))
-    return (
-        ranked.crossJoin(F.broadcast(ks))
-        .crossJoin(F.broadcast(tot))
-        .groupBy(F.col("vocab_size").cast("long").alias("vocab_size"))
-        .agg(
-            F.coalesce(covered, F.lit(0)).cast("long").alias("tokens_covered"),
-            (F.coalesce(covered, F.lit(0)).cast("double") / F.min("t"))
-            .cast("float")
-            .alias("coverage"),
-        )
+    return top_k_mass(_term_counts(spark, sf_dir), _VOCAB_KS).select(
+        F.col("k").alias("vocab_size"),
+        F.col("covered").alias("tokens_covered"),
+        (F.col("covered").cast("double") / F.col("t"))
+        .cast("float")
+        .alias("coverage"),
     )
 
 
@@ -247,47 +231,16 @@ def nucleus_vocab_size(spark: SparkSession, sf_dir: str) -> DataFrame:
     for.
 
     Scale shape: identical to vocab_coverage_curve — corpus → term
-    frequencies in one aggregate, then rank/cumsum over the
-    Zipf-small vocab; the cumulative comparison is exact integer
-    arithmetic on both engines.
+    frequencies in one aggregate → count levels (cnt, f) in one row,
+    and one array fold over the levels carries (terms before, tokens
+    before, answer) (operators/prefix.top_p_rank).  Inside the level
+    that crosses 90% the rank is the oracle's own comparison,
+    ``double(cum) >= 0.9 * t``, on the exact long running sum.  An
+    empty corpus gives (null, 0).
     """
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    freq = (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .persist()  # read by both the rank/cumsum branch and the total
-    )
-    # (r8: an eager count was tried and REVERTED — jobs 16->18, tasks
-    # 291->324, nothing eliminated; the prefix scaffold's broadcast-
-    # offsets job already materializes the cache first.)
-    # Global rank + running sum over the full (corpus-growing) vocab —
-    # the one cumulative query a top-k limit can't truncate. Computed
-    # via the two-level distributed prefix sum (operators/prefix.py):
-    # range-partition on the order, per-partition offsets broadcast
-    # back, windows run partitioned; no unpartitioned window ever sees
-    # the vocabulary.
-    ranked = ranked_cumsum(
-        freq,
-        [F.desc("cnt"), F.asc("term")],
-        "cnt",
-        rank_name="rn",
-        cum_name="cum",
-    ).select("rn", "cum")
-    tot = freq.agg(F.sum("cnt").cast("double").alias("t"))
-    return (
-        ranked.crossJoin(F.broadcast(tot))
-        .agg(
-            F.min(
-                F.when(
-                    F.col("cum").cast("double") >= F.lit(0.9) * F.col("t"),
-                    F.col("rn"),
-                )
-            )
-            .cast("long")
-            .alias("nucleus_vocab_size"),
-            F.count(F.lit(1)).cast("long").alias("total_vocab"),
-        )
+    return top_p_rank(_term_counts(spark, sf_dir), 0.9).select(
+        F.col("rank").alias("nucleus_vocab_size"),
+        F.col("n_terms").alias("total_vocab"),
     )
 
 
@@ -339,13 +292,9 @@ def vocab_unseen_mass(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every reduction is algebraic; nothing wider than the term-count
     shuffle ever exists.
     """
-    docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
-    tc = (
-        docs.select(F.explode(tokens_col(F.col("text"))).alias("term"))
-        .groupBy("term")
-        .agg(F.count(F.lit(1)).alias("c"))
+    ff = _term_counts(spark, sf_dir).groupBy(F.col("cnt").alias("c")).agg(
+        F.count(F.lit(1)).alias("f")
     )
-    ff = tc.groupBy("c").agg(F.count(F.lit(1)).alias("f"))
     agg = ff.agg(
         F.sum(F.col("c") * F.col("f")).cast("double").alias("n_tokens"),
         F.sum("f").cast("double").alias("vocab"),

@@ -24,12 +24,12 @@ JOBS = {
     "cdc_apply_latest": 2,
     "minhash_near_dup_pairs": 4,
     "cosine_topk": 4,
-    "nucleus_vocab_size": 15,
+    "nucleus_vocab_size": 5,
     "token_stats_bpe": 2,
     "multimodal_decode": 1,
     "kmeans_clusters": 10,
     "pagerank_trade_graph": 7,
-    "pca_project_embeddings": 15,
+    "pca_project_embeddings": 5,
     "er_best_match": 6,
     "fuzzy_join_doc_titles": 3,
 }

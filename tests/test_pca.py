@@ -87,16 +87,22 @@ def test_pca_scores_match_numpy_reference(spark, sf_dir, ref):
         assert agree or flipped, f"component {c} mismatch beyond sign"
 
 
-def test_components_orthonormal(spark, sf_dir):
+def test_components_orthonormal(spark, sf_dir, ref):
+    """``principal_components`` is one row: comps sorted by comp, an
+    orthonormal basis, eigenvalues descending, and the covariance
+    trace."""
     from axolotls_spark.operators.pca import principal_components
 
+    _, xc, vals, _ = ref
     emb = load_table(spark, sf_dir, "embeddings")
-    comps = principal_components(gram_moments(emb), K).collect()
-    w = np.zeros((64, K))
-    for r in comps:
-        w[r.pos, r.comp] = r.weight
-    gram = w.T @ w
-    assert np.allclose(gram, np.eye(K), atol=1e-8)
+    (row,) = principal_components(gram_moments(emb), K).collect()
+    assert [c.comp for c in row.comps] == list(range(K))
+    w = np.array([c.w for c in row.comps]).T  # (64, K)
+    assert np.allclose(w.T @ w, np.eye(K), atol=1e-8)
+    ev = [c.eigenvalue for c in row.comps]
+    assert ev == sorted(ev, reverse=True)
+    assert np.allclose(ev, vals, rtol=1e-6, atol=1e-9)
+    assert row.trace == pytest.approx((xc * xc).sum() / len(xc), rel=1e-9)
 
 
 def test_sketch_reads_corpus_once(spark, sf_dir):

@@ -7,33 +7,39 @@ axolotls_spark.plans.audit. The point is reviewability: the scale
 claims in SCALE.md become one table a reader can re-generate.
 
 Usage: python tools/plan_report.py [sf_dir]  (writes PLANS.md)
+
+The session runs on ``local[$SPARK_GRAFT_CPUS]`` (``measure.session``),
+and the core count goes into the header: ``io.sources.spread_for_cpu``
+picks partition counts by core count, so plans differ between boxes.
 """
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
-from axolotls_spark.plans.audit import (
+from axolotls_spark.plans.audit import (  # noqa: E402
     audit,
     capture_loop_plans,
     facts_from_text,
 )
-from axolotls_spark.queries import REGISTRY
-from axolotls_spark.session import get_spark
-from bench import HEADLINE
+from axolotls_spark.queries import REGISTRY  # noqa: E402
+from bench import HEADLINE  # noqa: E402
+from tools import measure  # noqa: E402
 
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    spark = get_spark("plan-report", master="local[8]")
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = measure.session("plan-report")
 
     lines = [
         "# PLANS — physical-plan digest of the bench headline set",
         "",
-        f"Generated by `python tools/plan_report.py {sf_dir}` from",
+        f"Generated by `python tools/plan_report.py {sf_dir}` on",
+        f"`local[{measure.cores()}]` from",
         '`explain("formatted")` (initial plan, AQE markers included).',
         "Columns: shuffle exchanges / broadcast exchanges / broadcast",
         "hash joins / sort-merge joins / scans (pushed-filter count and",
@@ -114,7 +120,7 @@ def main() -> None:
         "relations, never over the corpus.",
         "",
     ]
-    with open("/root/repo/PLANS.md", "w") as fh:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as fh:
         fh.write("\n".join(lines))
     print(f"wrote PLANS.md ({len(lines)} lines)")
 
