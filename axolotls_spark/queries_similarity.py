@@ -17,7 +17,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from axolotls_spark.cacheutil import materialize
-from axolotls_spark.functions.arrays import cosine, dot, norm
+from axolotls_spark.functions.arrays import cosine, dot, norm, sq_dist
 from axolotls_spark.io.sources import load_table
 from axolotls_spark.operators import similarity as SIM
 from axolotls_spark.registry import register
@@ -48,6 +48,21 @@ def _adc_topk_tail(adc: DataFrame, k: int = 10) -> DataFrame:
         top.withColumn("rn", F.row_number().over(w))
         .select("vec_id", F.round("adc_d2", 6).alias("adc_d2"), "rn")
     )
+
+
+def _probe(whole: DataFrame, cells: DataFrame, nprobe: int) -> DataFrame:
+    """IVF probe of the query vector (vec_id 0): its ``nprobe`` nearest
+    cells of the one-row ``cells`` (ties to the lower cell) as (cell,
+    d2, qres), qres = query − cell centroid.  ``whole`` is
+    ``clustering.subvectors`` with one subspace."""
+    return whole.filter(F.col("vec_id") == 0).crossJoin(
+        F.broadcast(cells)
+    ).select(F.inline(F.transform("c", lambda x: F.struct(
+        x["cid"].alias("cell"),
+        sq_dist(F.col("v"), x["v"]).alias("d2"),
+        F.zip_with("v", x["v"], lambda a, b: a.cast("double") - b)
+        .alias("qres"),
+    )))).orderBy("d2", "cell").limit(nprobe)
 
 
 @register(
@@ -927,39 +942,12 @@ def ann_ivf_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
     codes, pq_cents = CLU.pq_train(emb, m=8, k=16, iters=1, dim=64)
-
-    cents = emb.filter(F.col("vec_id") < 16).select(
-        F.col("vec_id").alias("cell"), F.col("embedding").alias("cvec")
+    whole = CLU.subvectors(emb, 1, F.size("embedding"))
+    cells = CLU.seed_row(whole, 16)
+    corpus_cells = CLU.assign(whole, cells).select(
+        F.col("vec_id").alias("cand_id"), F.col("cid").alias("cell")
     )
-    euc2 = lambda a, b: F.aggregate(
-        F.zip_with(
-            a, b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    w_cell = Window.partitionBy("cand_id").orderBy("d2c", "cell")
-    corpus_cells = (
-        emb.crossJoin(F.broadcast(cents))
-        .select(
-            F.col("vec_id").alias("cand_id"),
-            "cell",
-            euc2(F.col("embedding"), F.col("cvec")).alias("d2c"),
-        )
-        .withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") == 1)
-        .select("cand_id", "cell")
-    )
-    probed = (
-        emb.filter(F.col("vec_id") == 0)
-        .crossJoin(F.broadcast(cents))
-        .select("cell", euc2(F.col("embedding"), F.col("cvec")).alias("d2c"))
-        .orderBy("d2c", "cell")
-        .limit(4)
-        .select("cell")
-    )
+    probed = _probe(whole, cells, 4).select("cell")
     qlong = explode_long(emb.filter(F.col("vec_id") == 0)).select("pos", "val")
     dt = (
         pq_cents.join(F.broadcast(qlong), "pos")
@@ -1239,73 +1227,38 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     the structural win appears exactly when the data has cell
     structure); at query time each probed cell gets
     its own distance table from the cell-specific query residual.
-    Everything stays long-form relational: residuals are one join
-    (val − cval), training reuses pq_train_long verbatim, and the
+    The cells are the shared nearest-centroid step
+    (operators/clustering.assign) against the 16 seed vectors
+    broadcast as one row; a residual is one zip_with against that
+    row, training is ``pq_train`` on the residual arrays, and the
     nprobe·m·k table rows broadcast. The oracle re-derives the whole
     pipeline — cell assignment, residuals, Lloyd, per-cell tables —
     in SQL."""
-    from axolotls_spark.operators.clustering import (
-        explode_long,
-        pq_train_long,
-    )
+    from axolotls_spark.operators import clustering as CLU
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
-    d_sub, k, n_cells, nprobe = 8, 16, 16, 4
-    # `long` fans out to five consumers (cent, assignment, residuals,
-    # query slice, query residuals), cc to two and rlong to
-    # pq_train_long's rounds.  None is cached: the cached three cost 37
-    # jobs and 316 tasks against 32 and 218 uncached (sf0.01).
-    long = explode_long(emb).withColumn(
-        "sub", ((F.col("pos") - 1) / F.lit(d_sub)).cast("int")
+    k, n_cells, nprobe = 16, 16, 4
+    whole = CLU.subvectors(emb, 1, F.size("embedding"))
+    cells = CLU.seed_row(whole, n_cells)
+    cc = CLU.assign(whole, cells).select(
+        "vec_id", F.col("cid").alias("cell"), "v"
     )
-    cent = long.filter(F.col("vec_id") < n_cells).select(
-        F.col("vec_id").alias("cell"), "pos", F.col("val").alias("cval")
+    cell_v = F.get(F.filter("c", lambda x: x["cid"] == F.col("cell")), 0)["v"]
+    res = cc.crossJoin(F.broadcast(cells)).select(
+        "vec_id",
+        F.zip_with("v", cell_v, lambda a, b: a.cast("double") - b)
+        .alias("embedding"),
     )
-    cd = (
-        long.join(F.broadcast(cent), "pos")
-        .groupBy("vec_id", "cell")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval"))
-                * (F.col("val") - F.col("cval"))
-            ).alias("d2")
-        )
+    codes, pc1 = CLU.pq_train(
+        res, m=8, k=k, iters=1, dim=64, init_offset=n_cells
     )
-    w_cell = Window.partitionBy("vec_id").orderBy("d2", "cell")
-    cc = (
-        cd.withColumn("rn", F.row_number().over(w_cell))
-        .filter(F.col("rn") == 1)
-        .select("vec_id", "cell")
-    )
-    rlong = (
-        long.join(cc, "vec_id")
-        .join(F.broadcast(cent), ["cell", "pos"])
-        .select(
-            "vec_id", "pos", "sub",
-            (F.col("val") - F.col("cval")).alias("val"),
-        )
-    )
-    codes, pc1 = pq_train_long(rlong, k=k, iters=1, init_offset=n_cells)
-    qd = (
-        long.filter(F.col("vec_id") == 0)
-        .join(F.broadcast(cent), "pos")
-        .groupBy("cell")
-        .agg(
-            F.sum(
-                (F.col("val") - F.col("cval"))
-                * (F.col("val") - F.col("cval"))
-            ).alias("d2")
-        )
-    )
-    probed = qd.orderBy("d2", "cell").limit(nprobe).select("cell")
-    qres = (
-        long.filter(F.col("vec_id") == 0)
-        .join(F.broadcast(cent.join(probed, "cell")), "pos")
-        .select("cell", "pos", "sub", (F.col("val") - F.col("cval")).alias("qv"))
-    )
+    qres = _probe(whole, cells, nprobe).select(
+        "cell", F.posexplode("qres").alias("pos0", "qv")
+    ).select("cell", (F.col("pos0") + 1).alias("pos"), "qv")
     dt = (
         qres.join(
-            F.broadcast(pc1.select("cid", "pos", F.col("cval").alias("bval"))),
+            F.broadcast(pc1.select("cid", "sub", "pos",
+                                   F.col("cval").alias("bval"))),
             "pos",
         )
         .groupBy("cell", "cid", "sub")
@@ -1318,7 +1271,7 @@ def ann_ivfpq_residual_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     adc = (
         codes.filter(F.col("vec_id") != 0)
-        .join(cc.withColumnRenamed("vec_id", "vid"), codes.vec_id == F.col("vid"))
+        .join(cc.select("vec_id", "cell"), "vec_id")
         .join(F.broadcast(dt), ["cell", "sub", "cid"])
         .groupBy("vec_id")
         .agg(F.sum("pd2").alias("adc_d2"))
@@ -1474,7 +1427,6 @@ def silhouette_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is k rows. Complements kmeans_inertia (which
     only sees within-cluster tightness — silhouette also penalizes
     overlapping clusters)."""
-    from axolotls_spark.functions.arrays import sq_dist
     from axolotls_spark.operators import clustering as CLU
 
     emb = load_table(spark, sf_dir, "embeddings").select(

@@ -52,51 +52,75 @@ def test_empty_cluster_drops_out(spark):
     assert cids <= {0, 1} and len(cids) >= 1
 
 
-def test_pq_encode_matches_numpy_mirror(spark):
-    """Independent certification of product quantization: a pure
-    NumPy mirror of the same algorithm (first-k init, one Lloyd
-    refinement per subspace, min-distance/lowest-cid assignment) must
-    produce identical codes on a deterministic corpus — this catches
-    shared-misconception bugs the same-algebra DuckDB oracle cannot
-    (both SQL sides would repeat them)."""
+def _pq_mirror(X, m, k, iters, init_offset):
+    """NumPy product quantization: per subspace, the non-null rows with
+    vec_id in [init_offset, init_offset + k) seed cid = vec_id −
+    init_offset, ``iters`` Lloyd rounds (first minimum == lowest cid,
+    empty cells dropped), then the codes against the last centroids.
+    Returns {(vec_id, sub): (cid, d2)}."""
     import numpy as np
 
-    n, dim, m, k = 40, 16, 4, 4
-    rng = np.random.default_rng(7)
-    X = rng.normal(size=(n, dim)).astype("float64")
-    emb = spark.createDataFrame(
-        [(i, [float(x) for x in X[i]]) for i in range(n)],
-        "vec_id long, embedding array<double>",
-    )
-    got = {
-        (r.vec_id, r.sub): r.code
-        for r in CLU.pq_encode(emb, m=m, k=k, iters=1, dim=dim).collect()
-    }
-
-    d_sub = dim // m
-    expected = {}
+    ids = np.array([i for i, x in enumerate(X) if x])
+    d_sub = len(X[ids[0]]) // m
+    seeds = [i for i in ids if init_offset <= i < init_offset + k]
+    out = {}
     for s in range(m):
-        sub = X[:, s * d_sub : (s + 1) * d_sub]
-        cents = sub[:k].copy()  # first-k init
+        sub = np.array([X[i][s * d_sub:(s + 1) * d_sub] for i in ids])
+        cids = np.array(seeds) - init_offset
+        C = np.array([X[i][s * d_sub:(s + 1) * d_sub] for i in seeds])
+        for _ in range(iters):
+            a = cids[((sub[:, None, :] - C[None, :, :]) ** 2)
+                     .sum(axis=2).argmin(axis=1)]
+            cids = np.unique(a)
+            C = np.stack([sub[a == c].mean(axis=0) for c in cids])
+        d2 = ((sub[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        for i, j, e in zip(ids, d2.argmin(axis=1), d2.min(axis=1)):
+            out[(i, s)] = (cids[j], e)
+    return out
 
-        def assign(c):
-            d2 = ((sub[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            # lowest-cid tiebreak == argmin's first-match semantics
-            return d2.argmin(axis=1)
 
-        a1 = assign(cents)
-        cents1 = np.stack(
-            [
-                sub[a1 == c].mean(axis=0) if (a1 == c).any() else None
-                for c in sorted(set(a1))
-            ]
+def test_pq_encode_matches_numpy_mirror(spark):
+    """Independent certification of product quantization: a pure
+    NumPy mirror of the same algorithm (windowed init, Lloyd
+    refinements per subspace, min-distance/lowest-cid assignment) must
+    produce identical codes and quantization errors — this catches
+    shared-misconception bugs the same-algebra DuckDB oracle cannot
+    (both SQL sides would repeat them).  The inputs cover one and two
+    rounds, a seed window past vec_id 0, null and empty embeddings
+    (never coded, never seeds), and a subvector equidistant from two
+    centroids in both rounds, which goes to the lower cid."""
+    import numpy as np
+
+    X = np.random.default_rng(7).normal(size=(40, 16)).tolist()
+    X[5], X[11] = None, []
+    # Subspace 0 of a 6-row corpus lies on a line: seeds 0 and 6, then
+    # -3 joins 0 and 4, 8 join 6, so the re-averaged centroids are 0
+    # and 6 again, and 3 is equidistant from both in both rounds.
+    Y = [[x, 0.0] + np.random.default_rng(i).normal(size=2).tolist()
+         for i, x in enumerate((0.0, 6.0, 3.0, -3.0, 4.0, 8.0))]
+    # (corpus, m, k, iters, init_offset)
+    cases = [(X, 4, 4, 1, 0), (X, 4, 4, 2, 0), (X, 4, 4, 1, 9),
+             (Y, 2, 2, 1, 0)]
+    for data, m, k, iters, off in cases:
+        dim = len(data[0])
+        emb = spark.createDataFrame(
+            list(enumerate(data)), "vec_id long, embedding array<double>"
         )
-        cid_map = sorted(set(a1))  # surviving codebook ids
-        a2_d2 = ((sub[:, None, :] - cents1[None, :, :]) ** 2).sum(axis=2)
-        a2 = a2_d2.argmin(axis=1)
-        for i in range(n):
-            expected[(i, s)] = cid_map[a2[i]]
-    assert got == expected
+        codes, _ = CLU.pq_train(emb, m=m, k=k, iters=iters, dim=dim,
+                                init_offset=off)
+        got = {(r.vec_id, r.sub): (r.cid, r.d2) for r in codes.collect()}
+        want = _pq_mirror(data, m, k, iters, off)
+        assert {key: c for key, (c, _) in got.items()} == {
+            key: c for key, (c, _) in want.items()}, (m, k, iters, off)
+        assert np.allclose([got[key][1] for key in want],
+                           [e for _, e in want.values()], rtol=1e-12)
+        if off == 0:
+            qerr = {(r.vec_id, r.sub): (r.code, r.qerr) for r in
+                    CLU.pq_encode(emb, m=m, k=k, iters=iters,
+                                  dim=dim).collect()}
+            assert qerr == {key: (c, round(e, 6))
+                            for key, (c, e) in want.items()}
+    assert got[(2, 0)] == (0, 9.0)  # the tie goes to cid 0
 
 
 def test_kmeans_matches_numpy_mirror(spark):

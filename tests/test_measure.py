@@ -1,8 +1,9 @@
 """Checks of the shared measurement loop (tools/measure.py): the stage
 rollup over a canned REST ``stages`` list, conf-arm parsing, the
 core-count default, and that every profiling CLI still imports the way
-it does when run as a script, all JVM-free; and that a profiled run
-counts its jobs by its own job tag."""
+it does when run as a script, all JVM-free; that a profiled run
+counts its jobs by its own job tag; and that every run starts on an
+empty cache."""
 
 from __future__ import annotations
 
@@ -10,6 +11,7 @@ import argparse
 import os
 import subprocess
 import sys
+from types import SimpleNamespace
 
 import pytest
 
@@ -113,3 +115,19 @@ def test_best_of_counts_stream_jobs_by_tag(spark, sf_dir, monkeypatch):
                              profile=True)
     assert rec["build_jobs"] >= 1
     assert rec["jobs"] > rec["build_jobs"]
+
+
+def test_best_of_releases_caches_after_every_run(spark, monkeypatch):
+    """No repeat sees a relation an earlier repeat persisted, so a
+    min-of-N wall never times a cache hit."""
+    empty = []
+
+    def fn(spark, sf_dir):
+        empty.append(
+            spark._jsparkSession.sharedState().cacheManager().isEmpty())
+        return spark.range(10).persist()
+
+    monkeypatch.setitem(measure.REGISTRY, "persists", SimpleNamespace(fn=fn))
+    spark.catalog.clearCache()
+    measure.best_of(spark, "persists", "", 2)
+    assert empty == [True, True]

@@ -328,6 +328,11 @@ _KMEANS_CALLERS = ("kmeans_clusters", "kmeans_inertia",
                    "cluster_label_nmi", "semdedup_prune")
 
 
+#: The registry queries built on ``operators/clustering.pq_train``.
+_PQ_CALLERS = ("pq_encode_embeddings", "pq_adc_topk", "ann_ivf_adc_topk",
+               "ann_ivfpq_residual_topk")
+
+
 def _nlj_build_rows(text: str) -> list[int]:
     """Runtime row count of the build side of every
     BroadcastNestedLoopJoin in an executed plan's final AQE plan."""
@@ -1150,14 +1155,30 @@ def test_fuzzy_join_single_equi_join_no_python(spark):
     assert f.text.count("InMemoryFileIndex") <= 2
 
 
-def test_pq_encode_single_corpus_explode(spark):
-    """PQ must explode the corpus once (persisted long form feeds
-    init, update, and both assignment joins) and broadcast the
-    codebooks — no SMJ on the vector side, no Python."""
+def test_pq_ivf_nearest_centroid_broadcasts_one_row(spark):
+    """PQ training and both IVF cell assignments run the shared
+    nearest-centroid step of ``operators/clustering``: every round
+    crosses the subvectors with the centroids broadcast as ONE row, so
+    every BroadcastNestedLoopJoin builds one row.  Nothing is cached,
+    no argmin Window or Python runs, and no caller starts a job while
+    its plan is built.  PQ encoding reads the corpus once for the seed
+    row and once per assignment (one Lloyd round, then the codes), and
+    plans no Window at all; the ADC callers' only Window is the rank
+    over their top-10."""
+    for name in _PQ_CALLERS:
+        f = _facts(spark, name, execute=True)
+        rows = _nlj_build_rows(f.text)
+        assert rows and set(rows) == {1}, (name, rows)
+        for node in ("InMemoryRelation", "BatchEvalPython"):
+            assert node not in f.text, (name, node)
+        final = f.text.split("== Final Plan ==")[1].split("== Initial Plan")[0]
+        assert final.count("Window (") <= 1, name
+        assert not re.search(r"windowspecdefinition\((vec_id|cand_id)#",
+                             f.text), name
+        assert _build_jobs(spark, name) == 0, name
     f = _facts(spark, "pq_encode_embeddings")
-    assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
-    assert "BatchEvalPython" not in f.text
-    assert f.text.count("InMemoryFileIndex") <= 1
+    assert "Window" not in f.text
+    assert f.text.count("InMemoryFileIndex") == 3
 
 
 def test_mv_refresh_cost_is_two_aggregates(spark):

@@ -11,8 +11,8 @@ and stage scrape.  The loop:
 - min-of-N: this VM throttles under sustained load (identical runs vary
   0.5 s -> 7 s), so the minimum is the least-noisy estimate of a plan's
   cost;
-- a query's own repeats keep their caches, so repeat 2+ measure the warm
-  steady state, but all caches are released between queries, so no
+- caches are released after every run, so each repeat builds the
+  query's own persisted relations again, like its first run, and no
   number depends on what ran before it (the r4 judge measured a uniform
   1.30x accumulation drift without this).
 
@@ -106,9 +106,9 @@ def best_of(spark, name: str, sf_dir: str, repeats: int,
     """One record per arm: min-of-``repeats`` wall seconds ``s`` and,
     with ``profile``, the :func:`rollup` of the first repeat plus
     ``build_jobs``, the jobs its ``fn()`` ran before the action.  The
-    profiled run's jobs are the ones that carry its own job tag.  With
-    several arms, caches are released after every run, so no arm reuses
-    another arm's persists."""
+    profiled run's jobs are the ones that carry its own job tag.  Caches
+    are released after every run, so no repeat times a cache hit of an
+    earlier one and no arm reuses another arm's persists."""
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     recs = [{"s": float("inf")} for _ in arms]
@@ -134,8 +134,7 @@ def best_of(spark, name: str, sf_dir: str, repeats: int,
                     rec.update(rollup({j: list(i.stageIds) if i else []
                                        for j, i in infos.items()}, scrape(spark)))
                     rec["build_jobs"] = len(built)
-                if len(arms) > 1:
-                    cacheutil.release_caches()
+                cacheutil.release_caches()
     finally:
         cacheutil.release_caches()
     return recs
