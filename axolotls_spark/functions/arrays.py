@@ -65,3 +65,13 @@ def ordered_pairs(arr: str, a: str, b: str) -> Column:
             ),
         )
     )
+
+
+def let(value: Column, fn: Callable[[Column], Column]) -> Column:
+    """``fn(value)`` with ``value`` computed once. Catalyst shares no
+    subexpression inside a higher-order function: each read of an
+    expression in ``fn`` recomputes it, once per element when the read
+    sits in a lambda. Bound as the variable of a one-element
+    ``transform``, ``value`` is computed once per evaluation and every
+    read in ``fn`` is a variable lookup."""
+    return F.element_at(F.transform(F.array(value), fn), 1)

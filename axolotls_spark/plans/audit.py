@@ -166,6 +166,14 @@ def _parse_facts(text: str) -> PlanFacts:
     def count(node_re: str) -> int:
         return len(re.findall(rf"\(\d+\) {node_re}", text))
 
+    # (pushed filters, read schema) per scan, from its own detail block;
+    # a scan that pushes no filter has no PushedFilters line: "".
+    scans = [
+        (pf.group(1).strip() if pf else "", rs.group(1).strip())
+        for block in re.split(r"^(?=\(\d+\) )", text, flags=re.M)
+        if (rs := re.search(r"ReadSchema: struct<(.*?)>", block, re.S))
+        for pf in [re.search(r"PushedFilters: \[(.*?)\]", block)]
+    ]
     return PlanFacts(
         text=text,
         n_exchanges=count("Exchange\\b"),
@@ -173,12 +181,6 @@ def _parse_facts(text: str) -> PlanFacts:
         n_broadcast_hash_joins=count("Broadcast(?:Hash|NestedLoop)Join"),
         n_sort_merge_joins=count("SortMergeJoin"),
         n_codegen_stages=len(set(re.findall(r"codegen id : (\d+)", text))),
-        pushed_filters=tuple(
-            m.group(1).strip()
-            for m in re.finditer(r"PushedFilters: \[(.*?)\]", text)
-        ),
-        read_schemas=tuple(
-            m.group(1).strip()
-            for m in re.finditer(r"ReadSchema: struct<(.*?)>", text, re.S)
-        ),
+        pushed_filters=tuple(pf for pf, _ in scans),
+        read_schemas=tuple(rs for _, rs in scans),
     )

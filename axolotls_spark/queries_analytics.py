@@ -28,6 +28,7 @@ from axolotls_spark.cacheutil import materialize
 from axolotls_spark.functions.arrays import ordered_pairs
 from axolotls_spark.io.sources import load_table, spread_for_cpu
 from axolotls_spark.operators.dedup import tokens_col
+from axolotls_spark.operators.graph import apsp, hits, kcore, pagerank
 from axolotls_spark.registry import register, stable_f32
 
 # --------------------------------------------------------------------------
@@ -474,8 +475,6 @@ def pagerank_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange per iteration. 100 TB of facts, 25-node graph:
     aggregate-then-iterate.
     """
-    from axolotls_spark.operators.graph import pagerank
-
     return pagerank(trade_edges(spark, sf_dir)).select(
         F.col("node").alias("nation"),
         F.col("rank").cast("float").alias("pagerank"),
@@ -2886,12 +2885,6 @@ def textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     first cut persisted it, but the columnar cache build of an
     exploded stream costs ~3× one recompute, r8 §13).
     """
-    from pyspark.sql import Window
-
-    from axolotls_spark.io.sources import spread_for_cpu
-    from axolotls_spark.operators.dedup import tokens_col
-    from axolotls_spark.operators.graph import pagerank
-
     docs = spread_for_cpu(load_table(spark, sf_dir, "documents"), "doc_id")
     dts = docs.select(
         "doc_id", F.array_distinct(tokens_col(F.col("text"))).alias("ts0")
@@ -3121,61 +3114,21 @@ def kcore_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     who themselves trade enough?) completing the graph suite next to
     PageRank, BFS, triangles and label propagation.
 
-    Scale shape: aggregate-then-iterate — one corpus pass to the
-    distinct undirected edge list, persisted; every peel round is a
-    degree aggregate over that ≤|nations|² relation joined to the
-    broadcast alive set. Peeling converges in ≤ diameter-ish rounds
-    on small cores; production k-core on huge graphs runs the same
-    rounds with shuffled joins.
+    Scale shape: one corpus pass to the distinct undirected edge
+    list, then the peels in one array ``aggregate`` (operators/graph.kcore).
     """
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
-    e0 = (
-        trade_facts(spark, sf_dir)
-        .filter(F.col("s_nationkey") != F.col("c_nationkey"))
-        .select(
-            F.col("s_nationkey").alias("u"), F.col("c_nationkey").alias("v")
-        )
-        .distinct()
-    )
+    u, v = F.col("s_nationkey"), F.col("c_nationkey")
     # Single-pass undirection (explode of both orientations) — a
     # union with the swap would run the corpus lineage twice.
-    und = (
-        e0.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col("u"), F.col("v")),
-                    F.struct(F.col("v").alias("u"), F.col("u").alias("v")),
-                )
-            ).alias("e")
-        )
-        .select("e.u", "e.v")
-        .distinct()
-        .repartition(1)
-        .persist()
-    )
-    alive = und.select(F.col("u").alias("node")).distinct()
-    deg = None
-    for _ in range(_KCORE_ROUNDS):
-        # alive feeds BOTH endpoint joins of the next degree count —
-        # persist it per round, or the lineage doubles every peel
-        # (same cut-the-lineage move as graph.py / kmeans).
-        alive = alive.persist()
-        a = alive.select(F.col("node").alias("au"))
-        b = alive.select(F.col("node").alias("av"))
-        deg = (
-            und.join(F.broadcast(a), und.u == F.col("au"))
-            .join(F.broadcast(b), und.v == F.col("av"))
-            .groupBy(F.col("u").alias("node"))
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        alive = deg.filter(F.col("d") >= _KCORE_K).select("node")
-    return (
-        deg.join(alive, "node")
-        .join(F.broadcast(n), F.col("node") == F.col("n_nationkey"))
-        .select(
-            F.col("n_name").alias("nation"),
-            F.col("d").cast("long").alias("core_degree"),
-        )
+    und = trade_facts(spark, sf_dir).filter(u != v).select(F.explode(F.array(
+        F.struct(u.alias("src"), v.alias("dst")),
+        F.struct(v.alias("src"), u.alias("dst")),
+    )).alias("e")).select("e.src", "e.dst").distinct()
+    deg = kcore(und, _KCORE_K, _KCORE_ROUNDS)
+    return deg.join(F.broadcast(n), deg.node == n.n_nationkey).select(
+        F.col("n_name").alias("nation"),
+        F.col("d").cast("long").alias("core_degree"),
     )
 
 
@@ -3530,8 +3483,6 @@ def ppr_trade_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the one edge aggregation; all 5 iterations run inside one
     array ``aggregate`` over the one-row 25-node graph
     (operators/graph.pagerank with a seed)."""
-    from axolotls_spark.operators.graph import pagerank
-
     return pagerank(trade_edges(spark, sf_dir), _PPR_SEED).select(
         F.col("node").alias("nation"),
         F.col("rank").cast("float").alias("ppr"),
@@ -3664,60 +3615,12 @@ def hits_trade_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     visitation, HITS separates "big buyer" (hub) from "big seller"
     (authority) roles.
 
-    Scale shape identical to the PageRank family: corpus-sized work
-    is the one edge aggregation; each half-iteration joins the
-    broadcast 25-row score vector with the persisted edge list, and
-    the normalizer is a 1-row broadcast sum — no driver state."""
-    # nodes and every half-iteration read the edges.
-    edges = materialize(trade_edges(spark, sf_dir).repartition(1))
-    nodes = (
-        edges.select(F.col("src").alias("node"))
-        .union(edges.select(F.col("dst").alias("node")))
-        .distinct()
-        .persist()
-    )
-
-    def _l1(scores: DataFrame) -> DataFrame:
-        # Normalize with a window sum so the score relation is
-        # referenced ONCE: a normalizer built as scores.agg(...)
-        # crossJoined back would reference it twice, doubling the
-        # LOGICAL plan each half-step (2^6 Catalyst-analysis blowup
-        # across 3 iterations — a 50 s outlier; persist does not
-        # help, caching kicks in below the analyzer). The window is
-        # single-partition by construction but runs on the ≤25-row
-        # nation score vector, never the corpus.
-        return scores.select(
-            "node",
-            (
-                F.col("sc") / F.sum("sc").over(Window.partitionBy())
-            ).alias("sc"),
-        )
-
-    h = nodes.select("node", F.lit(1.0).alias("sc"))
-    a = None
-    for _ in range(3):
-        a = _l1(
-            edges.join(F.broadcast(h), edges.src == h.node)
-            .groupBy(F.col("dst").alias("n2"))
-            .agg(F.sum(F.col("sc") * F.col("w")).alias("sc"))
-            .select(F.col("n2").alias("node"), "sc")
-        )
-        h = _l1(
-            edges.join(F.broadcast(a), edges.dst == a.node)
-            .groupBy(F.col("src").alias("n2"))
-            .agg(F.sum(F.col("sc") * F.col("w")).alias("sc"))
-            .select(F.col("n2").alias("node"), "sc")
-        )
-    return (
-        nodes.join(h.withColumnRenamed("sc", "hub"), "node", "left")
-        .join(a.withColumnRenamed("sc", "authority"), "node", "left")
-        .select(
-            F.col("node").alias("nation"),
-            F.coalesce("hub", F.lit(0.0)).cast("float").alias("hub"),
-            F.coalesce("authority", F.lit(0.0))
-            .cast("float")
-            .alias("authority"),
-        )
+    Scale shape: the PageRank family's one edge aggregation, then the
+    iterations in one array ``aggregate`` (operators/graph.hits)."""
+    return hits(trade_edges(spark, sf_dir), 3).select(
+        F.col("node").alias("nation"),
+        F.col("hub").cast("float").alias("hub"),
+        F.col("authority").cast("float").alias("authority"),
     )
 
 
@@ -4420,46 +4323,14 @@ def apsp_trade_costs(spark: SparkSession, sf_dir: str) -> DataFrame:
     D_k(j,·) doubles the covered path length per round — 3 squarings
     reach length-8 paths, past any 25-node diameter.  The log-rounds
     complement to bfs_shortest_hops's per-hop frontier expansion:
-    O(log V) self-join rounds instead of O(V) Bellman–Ford sweeps is
-    exactly the trade a distributed engine wants when each round is
-    a shuffle.
+    O(log V) squarings instead of O(V) Bellman–Ford sweeps.
 
-    Scale shape: corpus-sized work is the ONE edge aggregation
-    (aggregate-then-iterate, the pagerank_trade_graph mold); every
-    squaring is a ≤|V|²-row self-join, persisted per round so the
-    doubled references resolve to one cached relation.
+    Scale shape: the PageRank family's one edge aggregation, then the
+    squarings in one array ``aggregate`` (operators/graph.apsp).
     """
-    edges = trade_edges(spark, sf_dir).repartition(1).persist()
-    tw = edges.agg(F.sum("w").alias("t"))
-    nodes = (
-        edges.select(F.col("src").alias("v"))
-        .union(edges.select(F.col("dst").alias("v")))
-        .distinct()
+    return apsp(trade_edges(spark, sf_dir), 3).select(
+        "src", "dst", F.col("c").cast("float").alias("cost")
     )
-    d = (
-        edges.crossJoin(F.broadcast(tw))
-        .select("src", "dst", F.log(F.col("t") / F.col("w")).alias("c"))
-        .union(nodes.select(F.col("v").alias("src"),
-                            F.col("v").alias("dst"),
-                            F.lit(0.0).alias("c")))
-        .groupBy("src", "dst")
-        .agg(F.min("c").alias("c"))
-        .repartition(1)
-        .persist()
-    )
-    for _ in range(3):
-        a = d.select(F.col("src").alias("i"), F.col("dst").alias("k"),
-                     F.col("c").alias("ca"))
-        b = d.select(F.col("src").alias("k"), F.col("dst").alias("j"),
-                     F.col("c").alias("cb"))
-        d = (
-            a.join(F.broadcast(b), "k")
-            .groupBy(F.col("i").alias("src"), F.col("j").alias("dst"))
-            .agg(F.min(F.col("ca") + F.col("cb")).alias("c"))
-            .repartition(1)
-            .persist()
-        )
-    return d.select("src", "dst", F.col("c").cast("float").alias("cost"))
 
 
 # --------------------------------------------------------------------------

@@ -34,6 +34,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from axolotls_spark.io.sources import load_table
+from axolotls_spark.operators.graph import bfs
 from axolotls_spark.queries_analytics import trade_facts
 from axolotls_spark.registry import register, stable_f32
 
@@ -407,15 +408,12 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shortest hop counts from nation 0 over the top-3-partner trade
     graph (each nation keeps only its 3 highest-revenue export
     edges), breadth-first to depth 4 — the oracle says it as a
-    bounded recursive CTE; the engine unrolls the same frontier
-    expansion into one lazy plan, pagerank-style.
+    bounded recursive CTE; the engine runs the same frontier
+    expansion inside one lazy plan, pagerank-style.
 
-    Scale shape: aggregate-then-iterate (operators/graph.py): the one
-    corpus-sized pass is the edge aggregation; the ≤25·3-edge graph
-    is persisted and every expansion round is a broadcast join of the
-    ≤25-row distance vector against it, with a min-agg merge. For
-    billion-node graphs the identical plan degrades to shuffled joins
-    and the unroll bound becomes the usual BSP iteration cap.
+    Scale shape: the one corpus-sized pass is the edge aggregation;
+    the top-3 cut ranks ≤|nations|² rows, and the rounds run in one
+    array ``aggregate`` over the one-row graph (operators/graph.bfs).
     """
     n = load_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     rev = (
@@ -435,24 +433,8 @@ def bfs_shortest_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("rk") <= _BFS_FANOUT)
         .select("src", "dst")
-        .repartition(1)
-        .persist()
     )
-    dist = spark.range(1).select(
-        F.lit(_BFS_SEED).alias("node"), F.lit(0).alias("hops")
-    )
-    for _ in range(_BFS_DEPTH):
-        # Persist each round's <=25-row distance vector: every round
-        # references it twice (frontier join + min-merge union), so
-        # the unrolled lazy lineage re-executed 2^depth copies of the
-        # whole chain of broadcasts without the pin.
-        dist = dist.persist()
-        nxt = edges.join(F.broadcast(dist), edges.src == dist.node).select(
-            F.col("dst").alias("node"), (F.col("hops") + 1).alias("hops")
-        )
-        dist = (
-            dist.union(nxt).groupBy("node").agg(F.min("hops").alias("hops"))
-        )
+    dist = bfs(edges, _BFS_SEED, _BFS_DEPTH)
     return dist.join(F.broadcast(n), dist.node == n.n_nationkey).select(
         F.col("n_name").alias("nation"), F.col("hops").cast("long").alias("hops")
     )

@@ -145,6 +145,8 @@ FAMILIES = [
     "session_pattern_match",
     "target_encode_loo",
     "hits_trade_graph",
+    "kcore_trade_graph",
+    "bfs_shortest_hops",
     "dataset_datasheet",
     "stump_split_search",
     "consistent_hash_movement",

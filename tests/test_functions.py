@@ -20,6 +20,7 @@ from axolotls_spark.functions import (
     safe_div,
     safe_log,
 )
+from axolotls_spark.functions.arrays import let
 
 
 def test_fill_null(spark):
@@ -86,6 +87,18 @@ def test_array_math(spark):
 def test_cosine_zero_norm_is_null(spark):
     df = spark.createDataFrame([([0.0, 0.0], [1.0, 1.0])], "a: array<double>, b: array<double>")
     assert df.select(cosine(F.col("a"), F.col("b")).alias("c")).collect()[0].c is None
+
+
+def test_let_computes_its_value_once(spark):
+    """Every read of a ``let`` variable sees one value: a random draw
+    read inline in a lambda is drawn again for each element."""
+    eight = F.array_repeat(F.lit(1), 8)
+    row = spark.range(1).select(
+        let(F.rand(), lambda r: F.transform(eight, lambda _: r)).alias("bound"),
+        F.transform(eight, lambda _: F.rand()).alias("inline"),
+    ).collect()[0]
+    assert len(set(row.bound)) == 1
+    assert len(set(row.inline)) == 8
 
 
 def test_approx_sketches_close_to_exact(spark, sf_dir):

@@ -1,4 +1,5 @@
-"""``operators/graph.pagerank`` against a numpy power iteration.
+"""``operators/graph``: PageRank against a numpy power iteration,
+HITS, k-core, APSP and BFS against small Python references.
 
 The hand-built graph has a node with no out-edges (``e``: its rank
 mass leaks) and a node with no in-edges (``d``: it keeps only the
@@ -12,7 +13,9 @@ import re
 import numpy as np
 import pytest
 
-from axolotls_spark.operators.graph import DAMPING, ITERS, pagerank
+from axolotls_spark.operators.graph import (
+    DAMPING, ITERS, apsp, bfs, hits, kcore, pagerank,
+)
 from axolotls_spark.plans import audit
 
 EDGES = [
@@ -69,3 +72,76 @@ def test_pagerank_iterates_over_bound_columns(spark):
     assert "aggregate(" in gen
     for inlined in ("collect_list", "array_sort", "flatten("):
         assert inlined not in gen
+
+
+def _ref_hits(edges, iters):
+    nodes = sorted({s for s, _, _ in edges} | {t for _, t, _ in edges})
+
+    def half(score, end, other):
+        raw = {v: sum(score[e[other]] * e[2] for e in edges if e[end] == v)
+               for v in nodes}
+        tot = sum(raw.values())
+        return {v: x / tot for v, x in raw.items()}
+
+    h, a = dict.fromkeys(nodes, 1.0), {}
+    for _ in range(iters):
+        a = half(h, 1, 0)
+        h = half(a, 0, 1)
+    return {v: (h[v], a[v]) for v in nodes}
+
+
+def test_hits_matches_reference(spark):
+    got = hits(spark.createDataFrame(EDGES, SCHEMA), 3).collect()
+    want = _ref_hits(EDGES, 3)
+    assert {r.node: (r.hub, r.authority) for r in got} == pytest.approx(
+        want, rel=1e-12)
+    assert len(got) == len(want)
+
+
+def test_kcore_peels_below_k(spark):
+    """A 4-clique with a pendant ``e`` and a path ``f - g``: one peel
+    at k=3 drops e, f and g; the clique keeps degree 3."""
+    und = [("a", "b"), ("a", "c"), ("a", "d"), ("b", "c"), ("b", "d"),
+           ("c", "d"), ("a", "e"), ("f", "g")]
+    both = und + [(v, u) for u, v in und]
+    df = spark.createDataFrame(both, "src string, dst string")
+    got = {r.node: r.d for r in kcore(df, 3, 2).collect()}
+    assert got == {"a": 3, "b": 3, "c": 3, "d": 3}
+    # One round counts e's edge to a while e is still alive.
+    got = {r.node: r.d for r in kcore(df, 1, 1).collect()}
+    assert got == {"a": 4, "b": 3, "c": 3, "d": 3, "e": 1, "f": 1, "g": 1}
+
+
+def test_apsp_matches_reference(spark):
+    nodes = sorted({s for s, _, _ in EDGES} | {t for _, t, _ in EDGES})
+    tot = sum(w for _, _, w in EDGES)
+    inf = float("inf")
+    d = {(i, j): 0.0 if i == j else inf for i in nodes for j in nodes}
+    for s, t, w in EDGES:
+        d[s, t] = min(d[s, t], np.log(tot / w))
+    for _ in range(3):
+        d = {(i, j): min(d[i, k] + d[k, j] for k in nodes)
+             for i in nodes for j in nodes}
+    want = {p: c for p, c in d.items() if c < inf}
+    got = apsp(spark.createDataFrame(EDGES, SCHEMA), 3).collect()
+    assert {(r.src, r.dst): r.c for r in got} == pytest.approx(
+        want, rel=1e-12)
+    assert len(got) == len(want)
+
+
+def test_bfs_hops_within_depth(spark):
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 3), (3, 4), (4, 5), (0, 2), (6, 0)],
+        "src int, dst int")
+    got = {r.node: r.hops for r in bfs(edges, 0, 3).collect()}
+    assert got == {0: 0, 1: 1, 2: 1, 3: 2, 4: 3}
+    assert [tuple(r) for r in bfs(edges, 5, 3).collect()] == [(5, 0)]
+
+
+def test_graph_operators_of_no_edges_are_empty(spark):
+    edges = spark.createDataFrame([], SCHEMA)
+    assert hits(edges, 3).collect() == []
+    assert apsp(edges, 3).collect() == []
+    pairs = edges.select("src", "dst")
+    assert kcore(pairs, 3, 2).collect() == []
+    assert [tuple(r) for r in bfs(pairs, "a", 3).collect()] == [("a", 0)]

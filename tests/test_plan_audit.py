@@ -453,17 +453,21 @@ def test_sparse_cosine_prunes_and_broadcasts_df(spark):
 def test_pagerank_aggregate_then_iterate(spark):
     """The only corpus-sized work is the edge aggregation: the 4
     dimension joins broadcast and lineitem⋈orders is the only join
-    that may shuffle.  The power iterations run inside one array ``aggregate``
-    over the graph collected into one row, so no loop join, cache,
-    cartesian or Python appears, and none of the three pagerank
-    callers starts a job while its plan is built."""
+    that may shuffle.  Every graph query holds its graph in one row
+    (``operators/graph.edge_row``) and runs its rounds inside one
+    array ``aggregate``, so no loop join, cache, cartesian or Python
+    appears, and none starts a job while its plan is built."""
     f = _facts(spark, "pagerank_trade_graph")
     assert f.n_broadcast_hash_joins >= 4   # the 4 dim joins
     assert f.n_sort_merge_joins <= 1       # lineitem⋈orders only
-    for node in ("InMemoryRelation", "CartesianProduct", "BatchEvalPython"):
-        assert node not in f.text, node
     for name in ("pagerank_trade_graph", "ppr_trade_similarity",
-                 "textrank_keywords"):
+                 "textrank_keywords", "hits_trade_graph",
+                 "kcore_trade_graph", "apsp_trade_costs",
+                 "bfs_shortest_hops"):
+        text = _facts(spark, name).text
+        for node in ("InMemoryRelation", "CartesianProduct",
+                     "BatchEvalPython"):
+            assert node not in text, (name, node)
         assert _build_jobs(spark, name) == 0, name
 
 
@@ -607,6 +611,19 @@ def test_kmeans_one_lazy_plan(spark):
         assert _build_jobs(spark, name) == 0, name
 
 
+def test_pushed_filters_one_entry_per_scan(spark):
+    """``pushed_filters`` has one entry per scan, aligned with
+    ``read_schemas``: kmeans_clusters' seed scans (the vectors with
+    ``vec_id < k``) push their vec_id filters, and its other scans of
+    the same table push none and give ""."""
+    f = _facts(spark, "kmeans_clusters")
+    assert len(f.pushed_filters) == len(f.read_schemas)
+    for pf, rs in zip(f.pushed_filters, f.read_schemas):
+        assert ("vec_id" in pf) == ("vec_id" in rs), (pf, rs)
+    assert "" in f.pushed_filters
+    assert any("LessThan(vec_id" in pf for pf in f.pushed_filters)
+
+
 def test_semdedup_reuses_member_relation(spark):
     """SemDeDup: the (assignment + vector + norm) member relation
     feeds both sides of the within-cluster self-join — both must read
@@ -724,12 +741,17 @@ def test_fixed_sample_single_exchange(spark):
 
 
 def test_bfs_iterates_over_persisted_edges(spark):
-    """BFS expansion rounds must reuse the persisted edge relation
-    (aggregate-then-iterate) and broadcast the distance vector."""
+    """BFS expansion rounds iterate over the edge list held in ONE
+    collected row (``operators/graph.edge_row``): the edges are
+    collected once, every round runs inside one array ``aggregate``,
+    the dimension joins broadcast, and no cache or cartesian appears."""
     f = _facts(spark, "bfs_shortest_hops")
-    assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
+    assert f.text.count("Functions [1]: [collect_list(struct(src") == 1
+    assert "aggregate(" in f.text
     assert f.n_broadcast_hash_joins >= 3
+    assert f.n_sort_merge_joins == 0
     assert "CartesianProduct" not in f.text
+    assert "InMemoryRelation" not in f.text
 
 
 def test_bigram_lm_tokenizes_once(spark):
@@ -898,8 +920,6 @@ def test_registry_wide_plan_hygiene(spark):
         "forecast_linear_28d",      # per-day aggregate
         "gini_customer_spend",      # per-customer agg; documented
                                     # quantile-bucket degrade path
-        "hits_trade_graph",         # <=25-row nation score vector
-                                    # L1-normalized per half-step
         "kaplan_meier_retention",   # distinct-duration life table
         "rmst_retention",           # same distinct-duration life table
         "logrank_test_retention",   # distinct-duration life table
@@ -1033,9 +1053,16 @@ def test_textrank_single_edge_derivation(spark):
 
 
 def test_kcore_iterates_over_persisted_edges(spark):
+    """k-core peeling rounds iterate over the edge list held in ONE
+    collected row: one edge collection, the rounds inside one array
+    ``aggregate``, broadcast dimension joins, no cache or cartesian."""
     f = _facts(spark, "kcore_trade_graph")
-    assert "InMemoryTableScan" in f.text or "InMemoryRelation" in f.text
+    assert f.text.count("Functions [1]: [collect_list(struct(src") == 1
+    assert "aggregate(" in f.text
     assert f.n_broadcast_hash_joins >= 3
+    assert f.n_sort_merge_joins == 0
+    assert "CartesianProduct" not in f.text
+    assert "InMemoryRelation" not in f.text
 
 
 def test_minhash_estimate_single_signature_pipeline(spark):

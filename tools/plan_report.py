@@ -31,6 +31,17 @@ from bench import HEADLINE  # noqa: E402
 from tools import measure  # noqa: E402
 
 
+def _n_filters(pushed: str) -> int:
+    """Top-level entries of a scan's PushedFilters list; a filter's own
+    arguments hold commas too (``GreaterThanOrEqual(vec_id,0)``,
+    ``In(x, [1,2])``)."""
+    depth, n = 0, 1
+    for ch in pushed:
+        depth += (ch in "([") - (ch in ")]")
+        n += ch == "," and depth == 0
+    return n
+
+
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
     spark = measure.session("plan-report")
@@ -43,8 +54,9 @@ def main() -> None:
         '`explain("formatted")` (initial plan, AQE markers included).',
         "Columns: shuffle exchanges / broadcast exchanges / broadcast",
         "hash joins / sort-merge joins / scans (pushed-filter count and",
-        "read-schema width per parquet scan; — = scan facts not emitted",
-        "for this plan shape). Main numbers describe the FINAL plan;",
+        "read-schema width per parquet scan; · = the scan pushes no",
+        "filter; — = scan facts not emitted for this plan shape). Main",
+        "numbers describe the FINAL plan;",
         "`+NL(kr)` = N more of that fact inside k captured convergence-",
         "loop rounds, whose localCheckpoints hide them from the final",
         "plan (plans/audit.capture_loop_plans).",
@@ -85,21 +97,10 @@ def main() -> None:
                 return str(base)
             return f"{base} +{loop[key]}L({loop['rounds']}r)"
 
-        # A scan with no filter has no PushedFilters line at all, so
-        # the two lists can differ in length; ReadSchema is always
-        # present — report every scan, pairing filters only when the
-        # counts line up ("·" = no filter on this scan, by design).
         scans = []
-        pfs = list(f.pushed_filters)
-        rss = list(f.read_schemas)
-        for i, rs in enumerate(rss):
-            n_cols = rs.count(":")
-            if len(pfs) == len(rss):
-                pf = pfs[i]
-                n_push = 0 if not pf.strip() else pf.count(",") + 1
-                scans.append(f"{n_push}/{n_cols}")
-            else:
-                scans.append(f"·/{n_cols}")
+        for pf, rs in zip(f.pushed_filters, f.read_schemas):
+            n_push = _n_filters(pf) if pf else "·"
+            scans.append(f"{n_push}/{rs.count(':')}")
         scan_cell = ", ".join(scans) or "—"
         if loop is not None and loop["scans"]:
             scan_cell += f" +{loop['scans']}L({loop['rounds']}r)"
